@@ -176,7 +176,9 @@ def apply_scd2(
         key,
         [F.col(cfg.created_col).desc_nulls_last()] if cfg.created_col else [F.lit(1)],
     )
-    if dim is None or not dim.head(1):
+    # an existing but EMPTY dim needs no probe: its current side is
+    # empty, so the join path below yields exactly these first inserts
+    if dim is None:
         first_start = (
             F.col(cfg.created_col)
             if (cfg.first_start_from_created and cfg.created_col)

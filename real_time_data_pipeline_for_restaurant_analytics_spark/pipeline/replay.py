@@ -767,10 +767,8 @@ def q145_pipeline_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
 
     wh = Warehouse(os.path.join(work, "wh"))
-    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
-    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"))
+    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"))
     for res, day in ((r1, 1), (r2, 2)):
         loaded = {r["entity"] for r in res if not r["skipped"]}
         if loaded != {"location", "menu", "login_audit"}:
@@ -780,8 +778,7 @@ def q145_pipeline_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
     # rerun idempotence: same files, ledger must skip every entity —
     # the different batch_ts would otherwise stamp visible SCD2 churn
-    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"))
     not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
     if not_skipped:
         raise RuntimeError(
@@ -1045,10 +1042,8 @@ def q147_json_entity_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
 
     wh = Warehouse(os.path.join(work, "wh"))
-    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
-    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"))
+    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"))
     for res, day in ((r1, 1), (r2, 2)):
         loaded = {r["entity"] for r in res if not r["skipped"]}
         if loaded != {"delivery_agent"}:
@@ -1056,8 +1051,7 @@ def q147_json_entity_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"q147_json_entity_replay: day-{day} fan-out loaded "
                 f"{loaded}, expected exactly {{'delivery_agent'}}"
             )
-    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"))
     not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
     if not_skipped:
         raise RuntimeError(
@@ -1469,10 +1463,8 @@ def q155_order_pair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
 
     wh = Warehouse(os.path.join(work, "wh"))
-    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
-    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"))
+    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"))
     for res, day in ((r1, 1), (r2, 2)):
         loaded = {r["entity"] for r in res if not r["skipped"]}
         if loaded != {"orders", "order_item"}:
@@ -1480,8 +1472,7 @@ def q155_order_pair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"q155_order_pair_replay: day-{day} fan-out loaded {loaded}, "
                 "expected exactly {'orders', 'order_item'}"
             )
-    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"))
     not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
     if not_skipped:
         raise RuntimeError(
@@ -1866,10 +1857,8 @@ def q156_customer_pair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
 
     wh = Warehouse(os.path.join(work, "wh"))
-    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
-    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"))
+    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"))
     for res, day in ((r1, 1), (r2, 2)):
         loaded = {r["entity"] for r in res if not r["skipped"]}
         if loaded != {"customer", "customer_address"}:
@@ -1877,8 +1866,7 @@ def q156_customer_pair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"q156_customer_pair_replay: day-{day} fan-out loaded "
                 f"{loaded}, expected exactly {{'customer', 'customer_address'}}"
             )
-    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"))
     not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
     if not_skipped:
         raise RuntimeError(
@@ -2239,10 +2227,8 @@ def q159_restaurant_pair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
 
     wh = Warehouse(os.path.join(work, "wh"))
-    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
-    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"))
+    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"))
     for res, day in ((r1, 1), (r2, 2)):
         loaded = {r["entity"] for r in res if not r["skipped"]}
         if loaded != {"restaurant", "delivery"}:
@@ -2250,8 +2236,7 @@ def q159_restaurant_pair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"q159_restaurant_pair_replay: day-{day} fan-out loaded "
                 f"{loaded}, expected exactly {{'restaurant', 'delivery'}}"
             )
-    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"),
-                 collect_stats=False, checkpoint="fork", parallel=True)
+    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"))
     not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
     if not_skipped:
         raise RuntimeError(

@@ -9,6 +9,18 @@ Mirrors the reference's procedure chain:
            MERGE INTO clean  (SCD1)      → merge_upsert snapshot rewrite
            MERGE INTO dim    (SCD2)      → apply_scd2 snapshot rewrite
 
+There is one load shape, shared by the batch and streaming paths
+and sized for what bounds a daily load at product volume — fixed
+per-job and per-plan scheduling cost, not data:
+
+- the ten entity loads run concurrently, one pool slot each;
+- within a load, the stage append overlaps the merges and is joined
+  before ``ledger.mark``;
+- the typed batch is ``localCheckpoint``ed once, then the clean
+  (SCD1) and consumption (SCD2 / SCD1-fact) merges run concurrently;
+- the post-load row counts come from the snapshot sidecars
+  (``SnapshotTable.rows``), so no table is re-scanned to count it.
+
 Stream-offset semantics (C1/C2): the "stream" a layer consumes is the
 batch the previous layer just produced, and the ledger guarantees a
 file is staged exactly once — together they give the same
@@ -21,10 +33,12 @@ operators.merge.change_feed.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..functions.keys import hash_key
 from ..operators.merge import Scd2Config, apply_scd2, latest_per_key, merge_upsert
@@ -70,7 +84,6 @@ def merge_entity_batch(
     spec: EntitySpec,
     raw: DataFrame,
     batch_ts,
-    checkpoint: bool | str = False,
 ) -> None:
     """The shared clean→dedup→latest-per-key→SCD1→SCD2 merge body —
     ONE implementation behind both drivers (batch :func:`run_entity`
@@ -78,34 +91,20 @@ def merge_entity_batch(
     in exactly one place (the "one library, two drivers" invariant
     SURVEY §7/M5 calls for).
 
-    ``checkpoint`` materializes the typed batch once so the clean and
-    dim merges below don't each re-derive it from the source:
-
-    - ``True`` → ``localCheckpoint`` — a LINEAGE BREAK, required in
-      foreachBatch where the micro-batch source cannot be re-read by
-      the merge's multiple scans. Costs one eager materialization job
-      up front.
-    - ``"persist"`` → ``cache`` — no extra job: the clean-merge write
-      both computes and caches the batch, the dim merge reuses it,
-      and the cache is dropped before returning. Correct ONLY when
-      the source is re-readable (batch files), since an evicted
-      partition recomputes from the source — which is exactly why the
-      streaming driver must keep ``True``. One fewer Spark job per
-      entity per day (round-12: the replay family's fixed per-job
-      overhead dominated its bench wall).
-    - ``"fork"`` → ``localCheckpoint`` + CONCURRENT clean and dim
-      merges (guide §2.6 — round 14). The two merges share no state
-      (different snapshot tables, different writer locks) and both
-      consume only the typed batch, so they commute; at replay scale
-      their cost is job latency, not data, and overlapping them cuts
-      the per-entity critical path from stage→clean→dim to
-      stage→max(clean, dim). The eager checkpoint pins the batch
-      BEFORE the fork: ``latest_per_key``'s row_number can break
-      order ties arbitrarily, and two concurrent first actions on a
-      merely-persisted frame could each compute their own tie-break —
-      the checkpoint makes both merges read the same materialized
-      rows (day-2 phase measured 3.2 s → 2.3 s at sf0.1,
-      bench_logs/day2_probe.txt).
+    The typed batch is ``localCheckpoint``ed once (one eager job), then
+    the clean and dim merges run CONCURRENTLY. The checkpoint is a
+    lineage break: a foreachBatch micro-batch cannot be re-read by the
+    merges' scans, and ``latest_per_key``'s row_number could otherwise
+    be computed twice, once per merge, from the source. The two merges
+    share no state (different snapshot tables, different writer locks)
+    and both consume only the checkpointed rows, so they commute; at
+    product scale their cost is job latency, not data, and overlapping
+    them cuts the per-entity critical path from stage→clean→dim to
+    stage→max(clean, dim). If either merge raises, the other still
+    runs to completion (and may commit) before the error propagates;
+    the caller then records nothing as done (no ledger mark, no stream
+    offset commit), so a retry reprocesses the input and the
+    change-guarded merges absorb the half already applied.
     """
     # --- clean: typed transform + guarded SCD1 merge (C3)
     typed = spec.clean(raw)
@@ -116,13 +115,7 @@ def merge_entity_batch(
         if spec.modified_col and spec.created_col
         else [F.lit(1)]
     )
-    typed = latest_per_key(typed, spec.key, order_cols)  # C7 guard
-    persisted = False
-    if checkpoint == "persist":
-        typed = typed.persist()
-        persisted = True
-    elif checkpoint:  # True or "fork": eager lineage-break checkpoint
-        typed = typed.localCheckpoint()
+    typed = latest_per_key(typed, spec.key, order_cols).localCheckpoint()  # C7 guard
 
     def _merge_clean() -> None:
         clean_tbl = wh.clean(spec.name)
@@ -148,20 +141,12 @@ def merge_entity_batch(
             )
             dim_tbl.write(apply_scd2(prev_dim, with_hk, cfg, batch_ts))
 
-    try:
-        if checkpoint == "fork":
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fut = pool.submit(_merge_clean)
-                _merge_dim()
-                fut.result()
-        else:
-            _merge_clean()
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        clean = pool.submit(inheritable_thread_target(spark)(_merge_clean))
+        try:
             _merge_dim()
-    finally:
-        if persisted:
-            typed.unpersist()
+        finally:
+            clean.result()
 
 
 def run_entity(
@@ -170,23 +155,15 @@ def run_entity(
     spec: EntitySpec,
     file_path: str,
     batch_ts=None,
-    collect_stats: bool = True,
-    checkpoint: bool | str = False,
 ) -> dict:
     """<ENTITY>_MAIN_PROCEDURE (O1): COPY → SCD1 → SCD2, idempotent.
 
-    ``collect_stats=False`` skips the post-load COUNT(*) sanity probes
-    (A1, `02 Location Entity.sql:50,83`) — two extra jobs per entity a
-    caller that reads the tables back anyway (q145's replay) doesn't
-    need; the merge writes themselves are unaffected.
-
-    ``checkpoint`` materializes the typed batch once after the dedup
-    guard instead of re-parsing the stage file for each of the clean
-    and dim merges — ``True`` via localCheckpoint (an extra eager
-    job), ``"persist"`` via cache (no extra job; the batch source is
-    re-readable, so the lineage break isn't needed), ``"fork"`` via
-    localCheckpoint + concurrent stage/clean/dim jobs — see
-    :func:`merge_entity_batch`)."""
+    The stage append overlaps the merges (both read the SOURCE file,
+    not each other's output) and is joined before ``ledger.mark``, so
+    the mark still lands strictly after every write of the load. The
+    post-load COUNT(*) sanity figures (A1, `02 Location Entity.sql:50,83`)
+    come from the snapshot sidecars: ``clean_rows``/``dim_rows`` cost
+    no job."""
     batch_ts = batch_ts if batch_ts is not None else F.current_timestamp()
     ledger = wh.ledger(spec.name)
     todo = ledger.unprocessed([file_path]) if os.path.exists(file_path) else []
@@ -223,85 +200,62 @@ def run_entity(
             .parquet(os.path.join(wh.stage_dir(spec.name), "data"))
         )
 
-    if checkpoint == "fork":
-        # the stage append and the merges share no state (the merges
-        # read the SOURCE file, not the staged parquet), so overlap
-        # them too (guide §2.6); the join() below keeps ledger.mark
-        # strictly after the stage write — the exactly-once contract
-        # is unchanged
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(_stage_write)
-            merge_entity_batch(spark, wh, spec, raw, batch_ts, checkpoint=checkpoint)
-            fut.result()
-    else:
-        _stage_write()
-        merge_entity_batch(spark, wh, spec, raw, batch_ts, checkpoint=checkpoint)
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        staged = pool.submit(inheritable_thread_target(spark)(_stage_write))
+        try:
+            merge_entity_batch(spark, wh, spec, raw, batch_ts)
+        finally:
+            staged.result()
 
     ledger.mark(todo)
-    out = {"entity": spec.name, "staged_files": len(todo), "skipped": False}
-    if collect_stats:
-        out["clean_rows"] = wh.clean(spec.name).read(spark).count()
-        out["dim_rows"] = wh.dim(spec.name).read(spark).count()
-    return out
+    return {
+        "entity": spec.name,
+        "staged_files": len(todo),
+        "skipped": False,
+        "clean_rows": wh.clean(spec.name).rows(),
+        "dim_rows": wh.dim(spec.name).rows(),
+    }
 
 
-def run_all(
-    spark: SparkSession,
-    wh: Warehouse,
-    stage_prefix: str,
-    batch_ts=None,
-    collect_stats: bool = True,
-    checkpoint: bool | str = False,
-    parallel: bool = False,
-) -> list[dict]:
+def run_all(spark: SparkSession, wh: Warehouse, stage_prefix: str, batch_ts=None) -> list[dict]:
     """FINAL_PROCEDURE (O2): fan-out over the ten entities.
 
-    Default is the reference's FIXED sequential order
-    (`final_proc.sql:17-41`). ``parallel=True`` submits the entity
-    loads from a thread pool instead: every entity owns disjoint
-    state (its own ledger, stage dir, clean and dim snapshot tables;
-    the snapshot writer lock is per-table) and the reference chain
-    has no cross-entity reads during a load, so the loads commute —
-    the sequential order is an artifact of Snowflake's procedural
-    CALL syntax, not a data dependency. On a real cluster this is
-    how a daily multi-entity load should run (independent jobs
-    overlap their shuffle/write stages instead of serializing ~4
-    fixed-overhead jobs per entity); Spark's scheduler interleaves
-    concurrent actions from multiple driver threads. Results come
-    back in RUN_ORDER either way.
+    Every entity load gets its own pool slot. Each entity owns
+    disjoint state (its own ledger, stage dir, clean and dim snapshot
+    tables; the snapshot writer lock is per-table) and the reference
+    chain has no cross-entity reads during a load, so the loads
+    commute — the reference's FIXED sequential order
+    (`final_proc.sql:17-41`) is an artifact of Snowflake's procedural
+    CALL syntax, not a data dependency. Loads are job-latency-bound,
+    so full overlap is right (round 15: a cap of 8 pushed the last
+    two RUN_ORDER entities into a second wave, q145 7.78 → 6.55 s);
+    a cluster with real data contention would re-bound this by
+    executor headroom (guide §2.6). Results come back in RUN_ORDER.
+
+    Every pool thread of a load (entity, stage write, clean merge)
+    inherits the calling thread's Spark local properties, so a job
+    group the caller sets covers, and can cancel, every job the load
+    launches.
     """
     def one(name: str) -> dict:
         spec = ENTITIES[name]
         path = entity_file(stage_prefix, spec.source_file_stem, spec.ext)
-        return run_entity(
-            spark,
-            wh,
-            spec,
-            path,
-            batch_ts=batch_ts,
-            collect_stats=collect_stats,
-            checkpoint=checkpoint,
-        )
+        return run_entity(spark, wh, spec, path, batch_ts=batch_ts)
 
-    if parallel:
-        from concurrent.futures import ThreadPoolExecutor
-
-        # one slot per entity (round 15): the old cap of 8 pushed the
-        # LAST two RUN_ORDER entities — login_audit is among the
-        # heaviest — into a second wave behind freed slots, extending
-        # the critical path (A/B ×4 at sf0.1: q145 min 7.78 → 6.55 s).
-        # Entity loads are job-latency-bound here, so full overlap is
-        # right; a cluster with real data contention would re-bound
-        # this by executor headroom (guide §2.6).
-        with ThreadPoolExecutor(max_workers=min(len(RUN_ORDER), 16)) as pool:
-            return list(pool.map(one, RUN_ORDER))
-    return [one(name) for name in RUN_ORDER]
+    with ThreadPoolExecutor(max_workers=len(RUN_ORDER)) as pool:
+        # wrapped per task: each wrap snapshots its own copy of the
+        # properties, which its thread then owns (one shared copy would
+        # let one entity's job-group change leak into its siblings)
+        futs = [pool.submit(inheritable_thread_target(spark)(one), n) for n in RUN_ORDER]
+    return [f.result() for f in futs]
 
 
-def run_for_date(spark: SparkSession, wh: Warehouse, stage_root: str, today=None) -> list[dict]:
-    """RUN_FINAL_FOR_YESTERDAY (O3, `task_proc.sql:6-28`)."""
+def run_for_date(
+    spark: SparkSession, wh: Warehouse, stage_root: str, today=None, batch_ts=None
+) -> list[dict]:
+    """RUN_FINAL_FOR_YESTERDAY (O3, `task_proc.sql:6-28`). ``batch_ts``
+    stamps the SCD2 validity columns (default: the load's
+    ``current_timestamp``)."""
     from ..sources.paths import yesterday_path
 
-    return run_all(spark, wh, os.path.join(stage_root, yesterday_path(today)))
+    return run_all(spark, wh, os.path.join(stage_root, yesterday_path(today)), batch_ts=batch_ts)

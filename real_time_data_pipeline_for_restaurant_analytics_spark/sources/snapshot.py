@@ -24,16 +24,51 @@ version-compute → write → pointer swap → prune (review r8: two
 unlocked writers could both claim v=n+1, one overwriting the other's
 files while the pointer pointed at them).
 
+Every version carries a sidecar ``v=<n>/_meta.json`` holding
+``{"schema": <StructType JSON>, "rows": <int>}``, written after the
+parquet files and BEFORE the pointer swap, so a version the pointer
+names always has one. ``schema`` is the written frame's schema with
+every field made nullable (recursively) — exactly what a parquet read
+of the directory infers — and ``rows`` is the row count, observed
+during the write itself (``DataFrame.observe``, no extra job). Reads
+pass the recorded schema, so resolving a snapshot launches no Spark
+job (parquet footer inference otherwise costs one per read), and
+:meth:`SnapshotTable.rows` answers the post-load count without one.
+Spark's file listing skips ``_``-prefixed names, so the sidecar is
+invisible to the data. There is no inference fallback: this class is
+the only writer of ``v=`` directories.
+
 At 100 TB you would swap this class for Delta/Iceberg and keep every
-caller unchanged — the API (read/write/read_previous) is the contract.
+caller unchanged — the API (read/write/read_previous/rows) is the
+contract.
 """
 
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+META = "_meta.json"
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, array element and map value nullable —
+    the schema Spark reads back from parquet (Spark's own
+    ``DataType.asNullable``, which PySpark does not expose)."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
 
 
 class SnapshotTable:
@@ -57,18 +92,31 @@ class SnapshotTable:
     def _path(self, version: int) -> str:
         return os.path.join(self.dir, f"v={version}")
 
+    def _meta(self, version: int) -> dict:
+        with open(os.path.join(self._path(version), META)) as f:
+            return json.load(f)
+
+    def _read(self, spark: SparkSession, version: int) -> DataFrame:
+        schema = StructType.fromJson(self._meta(version)["schema"])
+        return spark.read.schema(schema).parquet(self._path(version))
+
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame | None:
         v = self.latest_version() if version is None else version
         if v is None:
             return None
-        return spark.read.parquet(self._path(v))
+        return self._read(spark, v)
 
     def read_previous(self, spark: SparkSession) -> DataFrame | None:
         v = self.latest_version()
         if v is None or v <= 0:
             return None
-        prev = self._path(v - 1)
-        return spark.read.parquet(prev) if os.path.exists(prev) else None
+        return self._read(spark, v - 1) if os.path.exists(self._path(v - 1)) else None
+
+    def rows(self, version: int | None = None) -> int | None:
+        """Row count of a version (default: the latest), from its
+        sidecar; None when the table has no version yet."""
+        v = self.latest_version() if version is None else version
+        return None if v is None else self._meta(v)["rows"]
 
     @contextlib.contextmanager
     def _writer_lock(self):
@@ -109,11 +157,18 @@ class SnapshotTable:
         (two unlocked writers would both claim v=n+1); keep_versions
         is clamped to >= 2 so the just-superseded version — what
         read_previous() and the change feed reference — always
-        survives the write that supersedes it."""
+        survives the write that supersedes it. The row count is
+        observed by the write job itself and lands, with the schema,
+        in the version's ``_meta.json`` before the pointer swap."""
         with self._writer_lock():
             v = self.latest_version()
             new_v = 0 if v is None else v + 1
-            df.write.mode("overwrite").parquet(self._path(new_v))
+            path = self._path(new_v)
+            obs = Observation()
+            df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(path)
+            meta = {"schema": _as_nullable(df.schema).jsonValue(), "rows": obs.get["rows"]}
+            with open(os.path.join(path, META), "w") as f:
+                json.dump(meta, f)
             tmp = self._pointer() + ".tmp"
             os.makedirs(self.dir, exist_ok=True)
             with open(tmp, "w") as f:

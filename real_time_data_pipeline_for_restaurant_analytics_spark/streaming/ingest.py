@@ -163,13 +163,11 @@ def with_stream_audit_columns(df: DataFrame, source_label: str) -> DataFrame:
 def merge_microbatch(spark: SparkSession, wh: Warehouse, spec: EntitySpec, batch: DataFrame) -> None:
     """The foreachBatch body: delegates to the batch runner's
     :func:`~..pipeline.runner.merge_entity_batch` — literally one merge
-    library behind two drivers (checkpoint=True because the micro-batch
-    source can't be re-read by the merge's multiple scans)."""
+    library behind both load paths (its ``localCheckpoint`` is what lets
+    the merges scan a micro-batch source that cannot be re-read)."""
     if not batch.head(1):
         return
-    merge_entity_batch(
-        spark, wh, spec, batch, F.current_timestamp(), checkpoint=True
-    )
+    merge_entity_batch(spark, wh, spec, batch, F.current_timestamp())
 
 
 def ingest_stream(

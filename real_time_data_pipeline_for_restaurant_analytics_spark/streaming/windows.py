@@ -174,7 +174,10 @@ def _make_session_fn(gap_ms: int, ts_col: str, idle_timeout: bool = True):
             yield _emit(key, [start_us], [last_us], [n])
             return
         arrs = [df[ts_col].to_numpy() for df in pdfs]
-        ts = arrs[0] if len(arrs) == 1 else np.concatenate(arrs)
+        if not arrs:  # an empty iterator: the empty-``iv`` paths below apply
+            ts = np.empty(0, dtype="datetime64[ns]")
+        else:
+            ts = arrs[0] if len(arrs) == 1 else np.concatenate(arrs)
         iv = ts.astype("datetime64[ns]").view("int64")
         iv = iv[iv != _NAT] // 1000  # drop NaT rows, ns → µs
         iv.sort()

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from real_time_data_pipeline_for_restaurant_analytics_spark.operators.merge import (
@@ -11,6 +12,7 @@ from real_time_data_pipeline_for_restaurant_analytics_spark.operators.merge impo
     duplicate_key_audit,
     latest_per_key,
     merge_upsert,
+    scd2_empty_like,
 )
 
 TS = "ts timestamp"
@@ -81,6 +83,32 @@ def test_apply_scd2_noop_on_identical(spark):
     rows = dim2.collect()
     assert len(rows) == 1 and rows[0].is_current
     assert str(rows[0].eff_start_date).startswith("2024-01-01 00:00")  # from created (v3)
+
+
+@pytest.mark.parametrize("from_created", [True, False])
+def test_apply_scd2_empty_dim_equals_no_dim(spark, from_created):
+    """An existing but EMPTY dim takes the join path (no emptiness
+    probe); it must produce exactly the first-insert rows the no-dim
+    path does — duplicate batch keys and a NULL created_ts included."""
+    batch = _df(
+        spark,
+        [
+            (1, "a", "2024-01-01 00:00:00"),
+            (1, "b", "2024-01-03 00:00:00"),  # later duplicate wins
+            (2, "c", None),
+            (3, "d", "2024-01-02 00:00:00"),
+        ],
+        "id long, v string, created string",
+    ).withColumn("created", F.col("created").cast("timestamp"))
+    cfg = Scd2Config(key=["id"], attrs=["v"], created_col="created",
+                     first_start_from_created=from_created)
+    t0 = F.lit("2024-01-05 21:30:00").cast("timestamp")
+    fresh = apply_scd2(None, batch, cfg, t0)
+    via_join = apply_scd2(scd2_empty_like(batch), batch, cfg, t0)
+    assert via_join.columns == fresh.columns
+    assert fresh.count() == 3
+    assert fresh.exceptAll(via_join).count() == 0
+    assert via_join.exceptAll(fresh).count() == 0
 
 
 def test_duplicate_key_audit(spark):

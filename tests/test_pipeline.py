@@ -599,3 +599,93 @@ def test_q159_restaurant_pair_composite_and_drop(spark):
     assert all("coupon" not in c for c in
                __import__("real_time_data_pipeline_for_restaurant_analytics_spark.pipeline.entities",
                           fromlist=["_RESTAURANT_COLS"])._RESTAURANT_COLS)
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted by the status tracker on a
+    job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_snapshot_read_launches_no_job(spark, loaded):
+    """The `_meta.json` sidecar carries the schema, so resolving a
+    snapshot costs no footer-inference job; a plain parquet read of
+    the same version does (the control that the count is not vacuous)."""
+    wh, *_ = loaded
+    tbl = wh.dim("orders")
+    assert _jobs_launched(spark, lambda: tbl.read(spark)) == 0
+    assert _jobs_launched(spark, lambda: tbl.read_previous(spark)) == 0
+    path = tbl._path(tbl.latest_version())
+    assert _jobs_launched(spark, lambda: spark.read.parquet(path)) >= 1
+
+
+def test_snapshot_sidecar_schema_matches_parquet(spark, loaded):
+    """The recorded schema is exactly what parquet reads back, for
+    every clean and consumption table of the ten-entity load."""
+    wh, *_ = loaded
+    for name in ENTITIES:
+        for tbl in (wh.clean(name), wh.dim(name)):
+            for v in (tbl.latest_version(), tbl.latest_version() - 1):
+                want = spark.read.parquet(tbl._path(v)).schema
+                assert tbl.read(spark, v).schema == want, (tbl.name, v)
+
+
+def test_snapshot_sidecar_schema_nested_decimal_timestamp(spark, tmp_path):
+    from real_time_data_pipeline_for_restaurant_analytics_spark.sources.snapshot import (
+        SnapshotTable,
+    )
+
+    df = spark.range(5).select(
+        F.col("id"),  # non-nullable at the top level
+        (F.col("id") * 1.25).cast("decimal(12,3)").alias("amount"),
+        F.lit("2024-05-01 10:00:00").cast("timestamp").alias("ts"),
+        F.lit("2024-05-01 10:00:00").cast("timestamp_ntz").alias("ts_ntz"),
+        F.struct(
+            F.col("id").alias("a"),
+            F.array(F.col("id"), F.col("id") + 1).alias("arr"),
+            F.struct(F.lit(1).alias("deep")).alias("inner"),
+        ).alias("nested"),
+        F.create_map(F.lit("k"), F.array(F.col("id"))).alias("m"),
+    )
+    tbl = SnapshotTable(str(tmp_path), "nested")
+    v = tbl.write(df)
+    got = tbl.read(spark)
+    assert got.schema == spark.read.parquet(tbl._path(v)).schema
+    # collected, not exceptAll: set operations reject MAP columns
+    assert sorted(got.collect()) == sorted(df.collect())
+    assert tbl.rows() == 5
+
+
+def test_run_entity_row_counts_match_count(spark, loaded):
+    """clean_rows/dim_rows come from the sidecar row count observed
+    during the write; they must equal a real count() of the tables."""
+    wh, _, r2, _ = loaded
+    for r in r2:
+        name = r["entity"]
+        assert r["clean_rows"] == wh.clean(name).read(spark).count(), name
+        assert r["dim_rows"] == wh.dim(name).read(spark).count(), name
+
+
+def test_load_jobs_carry_the_callers_job_group(spark, tmp_path):
+    """The load's pool threads (entities, stage writes, clean merges)
+    inherit the caller's Spark local properties: every job of the
+    load carries the caller's job group, so none escapes attribution
+    or cancellation."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    wh = Warehouse(str(tmp_path / "wh"))
+    day1 = write_day(str(tmp_path / "stage"), 1)
+    assert _jobs_launched(spark, lambda: run_all(spark, wh, day1)) > 0
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()

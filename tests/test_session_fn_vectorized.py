@@ -132,3 +132,16 @@ def test_emit_dtypes_stable_even_when_empty():
     assert str(df["session_end"].dtype) == "datetime64[us]"
     assert str(df["n_events"].dtype) == "int64"
     assert len(df) == 0
+
+
+def test_empty_iterator_on_live_key():
+    """A non-timed-out call with NO pandas frames at all: no state →
+    an empty emit and no update; open state → re-asserted unchanged."""
+    fn = _make_session_fn(GAP_MS, "ts")
+    st = FakeState()
+    (df,) = list(fn((7,), iter([]), st))
+    assert len(df) == 0 and st.updated is None
+    st = FakeState((5 * US, 65 * US, 3))
+    (df,) = list(fn((7,), iter([]), st))
+    assert len(df) == 0
+    assert st.updated == (5 * US, 65 * US, 3) and st.timeout_set == GAP_MS
