@@ -250,12 +250,8 @@ def run_all(spark: SparkSession, wh: Warehouse, stage_prefix: str, batch_ts=None
     return [f.result() for f in futs]
 
 
-def run_for_date(
-    spark: SparkSession, wh: Warehouse, stage_root: str, today=None, batch_ts=None
-) -> list[dict]:
-    """RUN_FINAL_FOR_YESTERDAY (O3, `task_proc.sql:6-28`). ``batch_ts``
-    stamps the SCD2 validity columns (default: the load's
-    ``current_timestamp``)."""
+def run_for_date(spark: SparkSession, wh: Warehouse, stage_root: str, today=None) -> list[dict]:
+    """RUN_FINAL_FOR_YESTERDAY (O3, `task_proc.sql:6-28`)."""
     from ..sources.paths import yesterday_path
 
-    return run_all(spark, wh, os.path.join(stage_root, yesterday_path(today)), batch_ts=batch_ts)
+    return run_all(spark, wh, os.path.join(stage_root, yesterday_path(today)))

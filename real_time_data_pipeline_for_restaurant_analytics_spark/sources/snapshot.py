@@ -27,16 +27,20 @@ files while the pointer pointed at them).
 Every version carries a sidecar ``v=<n>/_meta.json`` holding
 ``{"schema": <StructType JSON>, "rows": <int>}``, written after the
 parquet files and BEFORE the pointer swap, so a version the pointer
-names always has one. ``schema`` is the written frame's schema with
-every field made nullable (recursively) — exactly what a parquet read
-of the directory infers — and ``rows`` is the row count, observed
-during the write itself (``DataFrame.observe``, no extra job). Reads
-pass the recorded schema, so resolving a snapshot launches no Spark
-job (parquet footer inference otherwise costs one per read), and
-:meth:`SnapshotTable.rows` answers the post-load count without one.
-Spark's file listing skips ``_``-prefixed names, so the sidecar is
-invisible to the data. There is no inference fallback: this class is
-the only writer of ``v=`` directories.
+names always has one. ``schema`` is the written frame's schema (the
+file source makes a supplied schema nullable, recursively, so a read
+with it equals parquet footer inference) and ``rows`` is the row
+count, observed during the write itself (``DataFrame.observe``, no
+extra job). Reads pass the recorded schema, so resolving a snapshot
+launches no Spark job (footer inference otherwise costs one per
+read), and :meth:`SnapshotTable.rows` answers the post-load count
+without one. Spark's file listing skips ``_``-prefixed names, so the
+sidecar is invisible to the data. There is no inference fallback:
+reading a version without a sidecar raises. Versions written before
+sidecars existed are upgraded once with :func:`backfill_meta`
+(``python -m real_time_data_pipeline_for_restaurant_analytics_spark.sources.snapshot
+<warehouse root>``), which infers each missing sidecar from the
+parquet files.
 
 At 100 TB you would swap this class for Delta/Iceberg and keep every
 caller unchanged — the API (read/write/read_previous/rows) is the
@@ -51,24 +55,9 @@ import os
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+from pyspark.sql.types import StructType
 
 META = "_meta.json"
-
-
-def _as_nullable(dt: DataType) -> DataType:
-    """``dt`` with every field, array element and map value nullable —
-    the schema Spark reads back from parquet (Spark's own
-    ``DataType.asNullable``, which PySpark does not expose)."""
-    if isinstance(dt, StructType):
-        return StructType(
-            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
-        )
-    if isinstance(dt, ArrayType):
-        return ArrayType(_as_nullable(dt.elementType), True)
-    if isinstance(dt, MapType):
-        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
-    return dt
 
 
 class SnapshotTable:
@@ -93,8 +82,24 @@ class SnapshotTable:
         return os.path.join(self.dir, f"v={version}")
 
     def _meta(self, version: int) -> dict:
-        with open(os.path.join(self._path(version), META)) as f:
-            return json.load(f)
+        path = os.path.join(self._path(version), META)
+        try:
+            with open(path) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            if not os.path.isdir(self._path(version)):
+                raise
+            raise FileNotFoundError(
+                f"SnapshotTable {self.name}: version {version} has no {META} "
+                f"sidecar ({path}); it predates sidecars. Upgrade the warehouse "
+                "once with backfill_meta(spark, <warehouse root>), or run "
+                "`python -m real_time_data_pipeline_for_restaurant_analytics_spark"
+                ".sources.snapshot <warehouse root>`."
+            ) from None
+
+    def _write_meta(self, version: int, schema: StructType, rows: int) -> None:
+        with open(os.path.join(self._path(version), META), "w") as f:
+            json.dump({"schema": schema.jsonValue(), "rows": rows}, f)
 
     def _read(self, spark: SparkSession, version: int) -> DataFrame:
         schema = StructType.fromJson(self._meta(version)["schema"])
@@ -112,10 +117,10 @@ class SnapshotTable:
             return None
         return self._read(spark, v - 1) if os.path.exists(self._path(v - 1)) else None
 
-    def rows(self, version: int | None = None) -> int | None:
-        """Row count of a version (default: the latest), from its
-        sidecar; None when the table has no version yet."""
-        v = self.latest_version() if version is None else version
+    def rows(self) -> int | None:
+        """Row count of the latest version, from its sidecar; None when
+        the table has no version yet."""
+        v = self.latest_version()
         return None if v is None else self._meta(v)["rows"]
 
     @contextlib.contextmanager
@@ -166,9 +171,7 @@ class SnapshotTable:
             path = self._path(new_v)
             obs = Observation()
             df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(path)
-            meta = {"schema": _as_nullable(df.schema).jsonValue(), "rows": obs.get["rows"]}
-            with open(os.path.join(path, META), "w") as f:
-                json.dump(meta, f)
+            self._write_meta(new_v, df.schema, obs.get["rows"])
             tmp = self._pointer() + ".tmp"
             os.makedirs(self.dir, exist_ok=True)
             with open(tmp, "w") as f:
@@ -185,3 +188,44 @@ class SnapshotTable:
                 ver = int(entry.split("=", 1)[1])
                 if ver <= latest - keep:
                     shutil.rmtree(os.path.join(self.dir, entry), ignore_errors=True)
+
+
+def backfill_meta(spark: SparkSession, root: str) -> dict[str, list[int]]:
+    """One-shot upgrade of a warehouse written before versions carried
+    a ``_meta.json`` sidecar: for every snapshot table under ``root``
+    (a directory holding a ``_latest`` pointer), write the sidecar of
+    each committed version that lacks one, inferred from its parquet
+    files (one schema and one count job per version), under the
+    table's writer lock. Returns the versions written per table
+    directory; running it again writes nothing."""
+    out = {}
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = sorted(d for d in dirs if not d.startswith("v="))
+        if "_latest" not in files:
+            continue
+        tbl = SnapshotTable(os.path.dirname(dirpath), os.path.basename(dirpath))
+        out[dirpath] = []
+        with tbl._writer_lock():
+            latest = tbl.latest_version()
+            for entry in sorted(os.listdir(dirpath)):
+                if not entry.startswith("v="):
+                    continue
+                v = int(entry.split("=", 1)[1])
+                if latest is None or v > latest or os.path.exists(os.path.join(tbl._path(v), META)):
+                    continue
+                df = spark.read.parquet(tbl._path(v))
+                tbl._write_meta(v, df.schema, df.count())
+                out[dirpath].append(v)
+    return out
+
+
+if __name__ == "__main__":
+    import sys
+
+    from ..session import get_spark
+
+    if len(sys.argv) != 2:
+        sys.exit("usage: python -m real_time_data_pipeline_for_restaurant_analytics_spark"
+                 ".sources.snapshot <warehouse root>")
+    for table, versions in backfill_meta(get_spark(), sys.argv[1]).items():
+        print(f"{table}: backfilled {versions or 'nothing'}")

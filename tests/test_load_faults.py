@@ -3,8 +3,9 @@ concurrent load shape (the stage append overlaps a checkpointed batch
 feeding concurrent clean and dim merges).
 
 Each test fails every entity's day-2 load at a commit point, retries the
-day through ``run_for_date`` with a NEW ``batch_ts`` (as a real retry
-would), and requires the warehouse to equal a run that never failed.
+day through ``run_all`` (what ``run_for_date`` wraps) with a NEW
+``batch_ts`` (as a real retry would), and requires the warehouse to
+equal a run that never failed.
 The no-fault run stamps day 2 with the ``batch_ts`` of the attempt that
 committed the dim, since that is the load the warehouse keeps:
 
@@ -27,9 +28,10 @@ from pyspark.sql import functions as F
 from real_time_data_pipeline_for_restaurant_analytics_spark.pipeline.entities import ENTITIES
 from real_time_data_pipeline_for_restaurant_analytics_spark.pipeline.runner import (
     Warehouse,
-    run_for_date,
+    run_all,
 )
 from real_time_data_pipeline_for_restaurant_analytics_spark.sources.ledger import FileLedger
+from real_time_data_pipeline_for_restaurant_analytics_spark.sources.paths import yesterday_path
 from real_time_data_pipeline_for_restaurant_analytics_spark.sources.snapshot import (
     SnapshotTable,
 )
@@ -37,7 +39,7 @@ from real_time_data_pipeline_for_restaurant_analytics_spark.sources.snapshot imp
 from .fixtures import write_day
 
 TS1, TS2, TS_OTHER = "2024-05-01 21:30:00", "2024-05-02 21:30:00", "2024-05-03 06:00:00"
-DAY1, DAY2 = date(2024, 5, 2), date(2024, 5, 3)  # run_for_date loads yesterday
+DAY1, DAY2 = date(2024, 5, 2), date(2024, 5, 3)  # a load covers the day before
 
 
 class InjectedFault(RuntimeError):
@@ -45,7 +47,8 @@ class InjectedFault(RuntimeError):
 
 
 def _load(spark, wh: Warehouse, stage: str, today: date, ts: str) -> list[dict]:
-    return run_for_date(spark, wh, stage, today, batch_ts=F.lit(ts).cast("timestamp"))
+    day = os.path.join(stage, yesterday_path(today))
+    return run_all(spark, wh, day, batch_ts=F.lit(ts).cast("timestamp"))
 
 
 def _digest(spark, wh: Warehouse) -> dict[str, list]:

@@ -10,6 +10,8 @@ day-01 full load + day-02 delta over the ten-entity pipeline:
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -664,6 +666,40 @@ def test_snapshot_sidecar_schema_nested_decimal_timestamp(spark, tmp_path):
     # collected, not exceptAll: set operations reject MAP columns
     assert sorted(got.collect()) == sorted(df.collect())
     assert tbl.rows() == 5
+
+
+def test_snapshot_without_sidecar_names_the_upgrade_then_backfills(spark, loaded, tmp_path):
+    """A warehouse written before versions carried ``_meta.json``
+    fails with an error naming the upgrade; after ``backfill_meta``
+    every committed version reads and counts as the original does,
+    and a second backfill writes nothing."""
+    import shutil
+
+    from real_time_data_pipeline_for_restaurant_analytics_spark.sources.snapshot import (
+        META,
+        backfill_meta,
+    )
+
+    wh, *_ = loaded
+    old = Warehouse(str(tmp_path / "old"))
+    shutil.copytree(wh.root, old.root)
+    for dirpath, _, files in os.walk(old.root):
+        if META in files:
+            os.remove(os.path.join(dirpath, META))
+    with pytest.raises(FileNotFoundError, match="backfill_meta"):
+        old.dim("orders").read(spark)
+
+    written = backfill_meta(spark, old.root)
+    assert len(written) == 2 * len(ENTITIES)
+    assert all(versions for versions in written.values())
+    for name in ENTITIES:
+        for new_tbl, tbl in ((old.clean(name), wh.clean(name)), (old.dim(name), wh.dim(name))):
+            assert new_tbl.rows() == tbl.rows(), new_tbl.name
+            for v in (tbl.latest_version(), tbl.latest_version() - 1):
+                got, want = new_tbl.read(spark, v), tbl.read(spark, v)
+                assert got.schema == want.schema, (new_tbl.name, v)
+                assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    assert all(v == [] for v in backfill_meta(spark, old.root).values())
 
 
 def test_run_entity_row_counts_match_count(spark, loaded):
