@@ -245,12 +245,17 @@ def q161_duplicate_key_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     day2 = changed.unionByName(stale)
     # one agg job, not a count() plus a distinct().count() (guide
     # §1.2); customer_id is the non-null c_custkey, so COUNT(DISTINCT)
-    # equals the distinct-row count here
+    # equals the distinct-row count here, and the same job asserts it
     s = day2.agg(
         F.count(F.lit(1)).alias("n_raw"),
         F.countDistinct(*key).alias("n_keys"),
+        F.count(F.when(F.col("customer_id").isNull(), 1)).alias("n_null_keys"),
     ).collect()[0]
     n_raw, n_keys = s["n_raw"], s["n_keys"]
+    assert s["n_null_keys"] == 0, (
+        f"day-2 batch has {s['n_null_keys']} NULL customer_id rows — "
+        "COUNT(DISTINCT) would skip them and n_keys would undercount"
+    )
     assert n_raw > n_keys, (
         f"day-2 batch has no physical in-batch duplicates "
         f"({n_raw} rows over {n_keys} keys) — the C6 guard was not exercised"

@@ -7,8 +7,11 @@ views + PII-masked variants, P17) so every KPI is also runnable as
 ``spark.sql``.
 
 Scale notes: every KPI is a broadcast-dim star join + partial
-aggregation; no KPI shuffles more than once on the fact. Ratio KPIs
-return exact decimal/ppm values (same conventions as plans/analytics).
+aggregation; no KPI shuffles more than once on the fact. Over snapshot
+versions that read as one partition (small enough that AQE would
+coalesce their shuffles to one partition anyway, see
+sources/snapshot.py) no KPI shuffles at all. Ratio KPIs return exact
+decimal/ppm values (same conventions as plans/analytics).
 """
 
 from __future__ import annotations
@@ -24,6 +27,11 @@ from ..pipeline.runner import Warehouse
 
 def _ppm(num, den):
     return ppm_floor(num, den)
+
+
+def _current_slice(df: DataFrame) -> DataFrame:
+    """The is_current rows of an SCD2 dim; an SCD1 fact as it is."""
+    return df.filter(F.col("is_current")) if "is_current" in df.columns else df
 
 
 class ConsumptionViews:
@@ -56,8 +64,7 @@ class ConsumptionViews:
         return df
 
     def current(self, entity: str) -> DataFrame:
-        df = self.table(entity)
-        return df.filter(F.col("is_current")) if "is_current" in df.columns else df
+        return _current_slice(self.table(entity))
 
     def register_all(self) -> None:
         from ..pipeline.entities import ENTITIES
@@ -66,7 +73,7 @@ class ConsumptionViews:
             df = self.table(name)
             suffix = "_fact" if ENTITIES[name].scd1_only else "_dim"
             df.createOrReplaceTempView(f"{name}{suffix}")
-            cur = self.current(name)
+            cur = _current_slice(df)
             view = f"{name}_current"
             cur.createOrReplaceTempView(view)
             if view in self.MASKED:

@@ -42,6 +42,28 @@ sidecars existed are upgraded once with :func:`backfill_meta`
 <warehouse root>``), which infers each missing sidecar from the
 parquet files.
 
+A version small enough that AQE would coalesce a shuffle of it to one
+partition reads as ONE partition (``coalesce(1)``). Small means its
+rows, at Spark's own per-row size estimate (8 bytes plus the
+``defaultSize`` of the schema, the figure the optimizer's statistics
+use), total at most
+``spark.sql.adaptive.coalescePartitions.minPartitionSize`` (1 MB by
+default). AQE (on in every session, see session.py) never splits a
+shuffle of at most that many bytes into more than one partition. An
+Exchange directly above the read carries at most the version's rows,
+uncompressed, while AQE weighs the compressed shuffle bytes. So the
+aggregates, windows, sorts and merge joins over such a read ran in one
+task before too; the declaration only drops their Exchanges (without
+it a file scan reports ``UnknownPartitioning``, and each of those
+operators plans an Exchange, one AQE job each). The rule reads only
+the sidecar and the session conf, so the read still launches no job.
+Larger versions read exactly as before. The rule is an estimate per
+version: a string counts as 20 bytes whatever its length, and a join
+of two small versions, or a join that widens rows before a shuffle,
+can shuffle more than either version. Only versions of 0.03-0.07 MB
+of parquet (0.35-0.53 MB by the estimate) have been measured
+(perfbench); none near the bound.
+
 At 100 TB you would swap this class for Delta/Iceberg and keep every
 caller unchanged — the API (read/write/read_previous/rows) is the
 contract.
@@ -58,6 +80,22 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 META = "_meta.json"
+
+#: schema JSON -> Spark's estimated bytes per row; one JVM parse per schema
+_ROW_BYTES: dict[str, int] = {}
+
+
+def _fits_one_shuffle_partition(spark: SparkSession, meta: dict) -> bool:
+    """Whether ``meta``'s rows at Spark's per-row size estimate total at
+    most the size below which AQE coalesces a shuffle to one partition
+    (see the module docstring)."""
+    schema = json.dumps(meta["schema"])
+    if schema not in _ROW_BYTES:
+        _ROW_BYTES[schema] = 8 + spark._jsparkSession.parseDataType(schema).defaultSize()
+    conf = spark._jsparkSession.sessionState().conf()
+    return meta["rows"] * _ROW_BYTES[schema] <= conf.getConf(
+        conf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE()
+    )
 
 
 class SnapshotTable:
@@ -102,8 +140,9 @@ class SnapshotTable:
             json.dump({"schema": schema.jsonValue(), "rows": rows}, f)
 
     def _read(self, spark: SparkSession, version: int) -> DataFrame:
-        schema = StructType.fromJson(self._meta(version)["schema"])
-        return spark.read.schema(schema).parquet(self._path(version))
+        meta = self._meta(version)
+        df = spark.read.schema(StructType.fromJson(meta["schema"])).parquet(self._path(version))
+        return df.coalesce(1) if _fits_one_shuffle_partition(spark, meta) else df
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame | None:
         v = self.latest_version() if version is None else version

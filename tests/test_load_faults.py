@@ -13,12 +13,17 @@ committed the dim, since that is the load the warehouse keeps:
   of the dim landed, so the retry's stamp is the one kept; and the
   converse, where the retry must leave the committed dim as it is;
 - a crash just before ``ledger.mark``: both merges landed, and the
-  change-guarded retry must leave them as they are.
+  change-guarded retry must leave them as they are;
+- the streaming twin of that crash: ``merge_microbatch`` commits both
+  merges, then the micro-batch raises before Structured Streaming
+  commits its offset. The query restarts from the same checkpoint and
+  replays the micro-batch.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from datetime import date
 
@@ -31,10 +36,16 @@ from real_time_data_pipeline_for_restaurant_analytics_spark.pipeline.runner impo
     run_all,
 )
 from real_time_data_pipeline_for_restaurant_analytics_spark.sources.ledger import FileLedger
-from real_time_data_pipeline_for_restaurant_analytics_spark.sources.paths import yesterday_path
+from pyspark.errors.exceptions.captured import StreamingQueryException
+
+from real_time_data_pipeline_for_restaurant_analytics_spark.sources.paths import (
+    entity_file,
+    yesterday_path,
+)
 from real_time_data_pipeline_for_restaurant_analytics_spark.sources.snapshot import (
     SnapshotTable,
 )
+from real_time_data_pipeline_for_restaurant_analytics_spark.streaming import ingest
 
 from .fixtures import write_day
 
@@ -158,3 +169,89 @@ def test_crash_before_ledger_mark(spark, stage, tmp_path, monkeypatch, no_fault)
     assert not any(x["skipped"] for x in r)
     assert _marked(wh) == {2}
     assert _digest(spark, wh) == no_fault
+
+
+# --- commit point 4: the streaming micro-batch ---------------------------
+
+STREAMED = ["orders", "login_audit"]  # an SCD2 dim and the SCD1 fact
+# the stream stamps each micro-batch with its own wall clock
+WALL_CLOCK = ["_copy_data_ts", "eff_start_date", "eff_end_date"]
+
+
+@pytest.fixture(scope="module")
+def landing(stage, tmp_path_factory) -> str:
+    """Both days' files of each streamed entity in one landing dir per
+    entity, day 2 newer than day 1: the file source drains them in
+    that order, one file per micro-batch. Every drain reads these same
+    files, so the audit columns agree across drains."""
+    root = str(tmp_path_factory.mktemp("landing"))
+    for name in STREAMED:
+        spec = ENTITIES[name]
+        os.makedirs(os.path.join(root, name))
+        for i, today in enumerate((DAY1, DAY2)):
+            day = os.path.join(stage, yesterday_path(today))
+            dst = os.path.join(root, name, f"day{i + 1}.{spec.ext}")
+            shutil.copyfile(entity_file(day, spec.source_file_stem, spec.ext), dst)
+            os.utime(dst, (1_700_000_000 + 60 * i,) * 2)
+    return root
+
+
+def _drain(spark, wh: Warehouse, name: str, landing: str, ckpt: str):
+    q = ingest.ingest_stream(
+        spark, wh, ENTITIES[name], os.path.join(landing, name), ckpt, max_files_per_trigger=1
+    )
+    assert q.awaitTermination(300), f"{name}: drain did not finish"
+    return q
+
+
+def _stream_digest(spark, wh: Warehouse, name: str) -> dict[str, list]:
+    return {
+        tbl.name: sorted(map(repr, tbl.read(spark).drop(*WALL_CLOCK).collect()))
+        for tbl in (wh.clean(name), wh.dim(name))
+    }
+
+
+@pytest.fixture(scope="module")
+def no_fault_stream(spark, landing, tmp_path_factory) -> dict[str, dict]:
+    out = {}
+    for name in STREAMED:
+        root = tmp_path_factory.mktemp(f"stream-{name}")
+        wh = Warehouse(str(root / "wh"))
+        _drain(spark, wh, name, landing, str(root / "ckpt"))
+        out[name] = _stream_digest(spark, wh, name)
+    return out
+
+
+@pytest.mark.parametrize("name", STREAMED)
+def test_microbatch_crash_before_offset_commit(
+    spark, landing, tmp_path, monkeypatch, no_fault_stream, name
+):
+    """The day-2 micro-batch commits both merges, then raises before
+    its offset commit. The restart replays exactly that micro-batch,
+    and the warehouse equals the no-fault drain's."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    ckpt = str(tmp_path / "ckpt")
+    real_merge = ingest.merge_microbatch
+    batches = []
+
+    def crash_after_merges(*args):
+        real_merge(*args)
+        batches.append(len(batches))
+        if len(batches) == 2:
+            raise InjectedFault(f"{name}: after merge_microbatch, before the offset commit")
+
+    monkeypatch.setattr(ingest, "merge_microbatch", crash_after_merges)
+    with pytest.raises(StreamingQueryException, match="InjectedFault"):
+        _drain(spark, wh, name, landing, ckpt)
+    monkeypatch.undo()
+
+    def logged(log: str) -> list[str]:
+        return sorted(f for f in os.listdir(os.path.join(ckpt, log)) if not f.startswith("."))
+
+    assert (wh.clean(name).latest_version(), wh.dim(name).latest_version()) == (1, 1)
+    assert logged("offsets") == ["0", "1"] and logged("commits") == ["0"]
+
+    q = _drain(spark, wh, name, landing, ckpt)
+    assert [p["batchId"] for p in q.recentProgress if p["numInputRows"] > 0] == [1]
+    assert logged("commits") == ["0", "1"]
+    assert _stream_digest(spark, wh, name) == no_fault_stream[name]
