@@ -96,11 +96,11 @@ def merge_upsert(
     src_cols = source.columns
     # presence via lit(True) MARKER columns, never key nullability
     # (review r8): the join condition is eqNullSafe precisely so NULL
-    # business keys match (the EQUAL_NULL contract merge_backend
-    # documents and tests), but `t.key.isNotNull()` reads a NULL-key
-    # TARGET row as "not matched" and wipes its attributes with the
-    # absent source side — the marker is null exactly when the join
-    # side is absent, for any key value.
+    # business keys match (the EQUAL_NULL contract pinned by
+    # test_null_business_keys_survive_all_merge_ops), but
+    # `t.key.isNotNull()` reads a NULL-key TARGET row as "not matched"
+    # and wipes its attributes with the absent source side — the marker
+    # is null exactly when the join side is absent, for any key value.
     t = target.withColumn("__t_mark", F.lit(True)).alias("t")
     s = source.withColumn("__s_mark", F.lit(True)).alias("s")
     key_match = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in key]

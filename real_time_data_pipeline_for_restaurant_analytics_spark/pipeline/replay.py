@@ -65,6 +65,7 @@ fixed per-merge job overhead, exactly like the reference's daily task.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import uuid
@@ -333,6 +334,68 @@ def _digest_rows(
         eff_e.alias("eff_end_day"),
         cur.alias("is_current"),
         digest.alias("digest"),
+    )
+
+
+def _two_day_load(spark: SparkSession, sf_dir: str, name: str, family: str, legs):
+    """The batch replay every pipeline query shares: write each leg's
+    day-1 and day-2 drop concurrently, load day 1 at ``_TS1`` and day 2
+    at ``_TS2`` through the real ``run_all`` fan-out (each must load
+    exactly the legs' entities), then rerun day 2 at ``_TS3``, which
+    the ledger must skip for every entity (the different batch_ts would
+    otherwise stamp visible SCD2 churn). ``legs`` rows are
+    ``(entity, src, writer, key, digest)``; returns the Warehouse."""
+    from ..sources.paths import entity_file
+    from .entities import ENTITIES
+    from .runner import Warehouse, run_all
+
+    work = replay_workdir(family)
+    cust = _replay_keys(spark, sf_dir)
+    day_dirs = (os.path.join(work, "drops", "2024", "6", "1"),
+                os.path.join(work, "drops", "2024", "6", "2"))
+    _parallel_drops([
+        (lambda d=day, dd=ddir, ent=ent, src=src, writer=writer: writer(
+            src(cust, d),
+            entity_file(dd, ENTITIES[ent].source_file_stem, ENTITIES[ent].ext),
+            work))
+        for day, ddir in ((1, day_dirs[0]), (2, day_dirs[1]))
+        for ent, src, writer, _key, _digest in legs
+    ])
+
+    wh = Warehouse(os.path.join(work, "wh"))
+    entities = [leg[0] for leg in legs]
+    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"))
+    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"))
+    for res, day in ((r1, 1), (r2, 2)):
+        loaded = {r["entity"] for r in res if not r["skipped"]}
+        if loaded != set(entities):
+            expected = "{" + ", ".join(repr(e) for e in entities) + "}"
+            raise RuntimeError(
+                f"{name}: day-{day} fan-out loaded {loaded}, "
+                f"expected exactly {expected}"
+            )
+    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"))
+    not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
+    if not_skipped:
+        raise RuntimeError(
+            f"{name}: day-2 rerun re-processed {not_skipped} — "
+            "the ledger's exactly-once contract is broken"
+        )
+    return wh
+
+
+def _warehouse_digest(spark: SparkSession, wh, legs) -> DataFrame:
+    """Digest rows of every leg's consumption table (``dim``, or
+    ``fact`` for an SCD1-only entity) and clean table, in key order."""
+    from .entities import ENTITIES
+
+    frames = []
+    for ent, _src, _writer, key, digest in legs:
+        top = "fact" if ENTITIES[ent].scd1_only else "dim"
+        frames.append(_digest_rows(wh.dim(ent).read(spark), ent, top, key, digest()))
+        frames.append(_digest_rows(wh.clean(ent).read(spark), ent, "clean", key, digest()))
+    return functools.reduce(DataFrame.unionByName, frames).orderBy(
+        "entity", "layer", "key_str", "eff_start_day"
     )
 
 
@@ -701,6 +764,12 @@ _LOGIN_ROWS_SQL = f"""SELECT 'login_audit' AS entity, lyr.l AS layer,
        TRUE AS is_current, {_LOGIN_DIGEST_SQL} AS digest
   FROM la_final, (SELECT unnest(['clean', 'fact']) AS l) lyr"""
 
+_PIPELINE_LEGS = (
+    ("location", _location_src, _write_drop_csv, "location_id", _loc_digest),
+    ("menu", _menu_src, _write_drop_csv, "menu_id", _menu_digest),
+    ("login_audit", _login_src, _write_drop_csv, "login_id", _login_digest),
+)
+
 _REPLAY_ORACLE = f"""WITH {_KS_SQL},
 loc_src1 AS ({_loc_src_sql(1)}),
 loc_src2 AS ({_loc_src_sql(2)}),
@@ -750,59 +819,10 @@ UNION ALL
     "`02 Location Entity.sql:266-345`, replay fixtures `02:350-371`.",
 )
 def q145_pipeline_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.paths import entity_file
-    from .entities import ENTITIES
-    from .runner import Warehouse, run_all
-
-    work = replay_workdir("pipeline_replay")
-    cust = _replay_keys(spark, sf_dir)
-    day_dirs = (os.path.join(work, "drops", "2024", "6", "1"),
-                os.path.join(work, "drops", "2024", "6", "2"))
-    _parallel_drops([
-        (lambda d=day, dd=ddir, src=src, ent=ent: _write_drop_csv(
-            src(cust, d), entity_file(dd, ENTITIES[ent].source_file_stem), work))
-        for day, ddir in ((1, day_dirs[0]), (2, day_dirs[1]))
-        for src, ent in ((_location_src, "location"), (_menu_src, "menu"),
-                         (_login_src, "login_audit"))
-    ])
-
-    wh = Warehouse(os.path.join(work, "wh"))
-    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"))
-    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"))
-    for res, day in ((r1, 1), (r2, 2)):
-        loaded = {r["entity"] for r in res if not r["skipped"]}
-        if loaded != {"location", "menu", "login_audit"}:
-            raise RuntimeError(
-                f"q145_pipeline_replay: day-{day} fan-out loaded {loaded}, "
-                "expected exactly {'location', 'menu', 'login_audit'}"
-            )
-    # rerun idempotence: same files, ledger must skip every entity —
-    # the different batch_ts would otherwise stamp visible SCD2 churn
-    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"))
-    not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
-    if not_skipped:
-        raise RuntimeError(
-            f"q145_pipeline_replay: day-2 rerun re-processed {not_skipped} — "
-            "the ledger's exactly-once contract is broken"
-        )
-
-    out = (
-        _digest_rows(wh.dim("location").read(spark), "location", "dim",
-                     "location_id", _loc_digest())
-        .unionByName(_digest_rows(wh.clean("location").read(spark), "location",
-                                  "clean", "location_id", _loc_digest()))
-        .unionByName(_digest_rows(wh.dim("menu").read(spark), "menu", "dim",
-                                  "menu_id", _menu_digest()))
-        .unionByName(_digest_rows(wh.clean("menu").read(spark), "menu", "clean",
-                                  "menu_id", _menu_digest()))
-        .unionByName(_digest_rows(wh.clean("login_audit").read(spark),
-                                  "login_audit", "clean", "login_id",
-                                  _login_digest()))
-        .unionByName(_digest_rows(wh.dim("login_audit").read(spark),
-                                  "login_audit", "fact", "login_id",
-                                  _login_digest()))
+    wh = _two_day_load(
+        spark, sf_dir, "q145_pipeline_replay", "pipeline_replay", _PIPELINE_LEGS
     )
-    return out.orderBy("entity", "layer", "key_str", "eff_start_day")
+    return _warehouse_digest(spark, wh, _PIPELINE_LEGS)
 
 
 # ---------------------------------------------------------------------------
@@ -977,6 +997,10 @@ _DA_PRUNE_CLASSES = (2, 5)
 _TS_PRUNE = "2024-06-03 12:00:00"
 _PRUNE_IN = ", ".join(str(c) for c in _DA_PRUNE_CLASSES)
 
+_JSON_ENTITY_LEGS = (
+    ("delivery_agent", _da_src, _write_drop_json, "delivery_agent_id", _da_digest),
+)
+
 _DA_REPLAY_ORACLE = f"""WITH {_KS_SQL},
 da_src1 AS ({_da_src_sql(1)}),
 da_src2 AS ({_da_src_sql(2)}),
@@ -1026,38 +1050,10 @@ SELECT * FROM (
     "`with procedures/delivery_agent_proc.sql:98-154`.",
 )
 def q147_json_entity_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.paths import entity_file
-    from .entities import ENTITIES
-    from .runner import Warehouse, run_all
-
-    spec = ENTITIES["delivery_agent"]
-    work = replay_workdir("json_replay")
+    wh = _two_day_load(
+        spark, sf_dir, "q147_json_entity_replay", "json_replay", _JSON_ENTITY_LEGS
+    )
     cust = _replay_keys(spark, sf_dir)
-    day_dirs = (os.path.join(work, "drops", "2024", "6", "1"),
-                os.path.join(work, "drops", "2024", "6", "2"))
-    _parallel_drops([
-        (lambda d=day, dd=ddir: _write_drop_json(
-            _da_src(cust, d), entity_file(dd, spec.source_file_stem, spec.ext), work))
-        for day, ddir in ((1, day_dirs[0]), (2, day_dirs[1]))
-    ])
-
-    wh = Warehouse(os.path.join(work, "wh"))
-    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"))
-    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"))
-    for res, day in ((r1, 1), (r2, 2)):
-        loaded = {r["entity"] for r in res if not r["skipped"]}
-        if loaded != {"delivery_agent"}:
-            raise RuntimeError(
-                f"q147_json_entity_replay: day-{day} fan-out loaded "
-                f"{loaded}, expected exactly {{'delivery_agent'}}"
-            )
-    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"))
-    not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
-    if not_skipped:
-        raise RuntimeError(
-            f"q147_json_entity_replay: day-2 rerun re-processed "
-            f"{not_skipped} — the ledger's exactly-once contract is broken"
-        )
 
     # the duplicates must have PHYSICALLY reached the stage layer —
     # otherwise "dedup collapsed them" proves nothing about C6.
@@ -1108,14 +1104,7 @@ def q147_json_entity_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    out = (
-        _digest_rows(wh.dim("delivery_agent").read(spark), "delivery_agent",
-                     "dim", "delivery_agent_id", _da_digest())
-        .unionByName(_digest_rows(wh.clean("delivery_agent").read(spark),
-                                  "delivery_agent", "clean",
-                                  "delivery_agent_id", _da_digest()))
-    )
-    return out.orderBy("entity", "layer", "key_str", "eff_start_day")
+    return _warehouse_digest(spark, wh, _JSON_ENTITY_LEGS)
 
 
 # ---------------------------------------------------------------------------
@@ -1407,6 +1396,11 @@ _OI_DIGEST_SQL = (
     "CAST(epoch_us(modified_ts) AS VARCHAR)))"
 )
 
+_ORDER_PAIR_LEGS = (
+    ("orders", _orders_src, _write_drop_csv, "order_id", _orders_digest),
+    ("order_item", _order_item_src, _write_drop_csv, _OI_KEY, _order_item_digest),
+)
+
 _ORDER_PAIR_ORACLE = f"""WITH {_KS_SQL},
 ord_src1 AS ({_orders_src_sql(1)}),
 ord_src2 AS ({_orders_src_sql(2)}),
@@ -1447,52 +1441,10 @@ UNION ALL
     "(asserted in-query).",
 )
 def q155_order_pair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.paths import entity_file
-    from .entities import ENTITIES
-    from .runner import Warehouse, run_all
-
-    work = replay_workdir("order_pair_replay")
-    cust = _replay_keys(spark, sf_dir)
-    day_dirs = (os.path.join(work, "drops", "2024", "6", "1"),
-                os.path.join(work, "drops", "2024", "6", "2"))
-    _parallel_drops([
-        (lambda d=day, dd=ddir, src=src, ent=ent: _write_drop_csv(
-            src(cust, d), entity_file(dd, ENTITIES[ent].source_file_stem), work))
-        for day, ddir in ((1, day_dirs[0]), (2, day_dirs[1]))
-        for src, ent in ((_orders_src, "orders"), (_order_item_src, "order_item"))
-    ])
-
-    wh = Warehouse(os.path.join(work, "wh"))
-    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"))
-    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"))
-    for res, day in ((r1, 1), (r2, 2)):
-        loaded = {r["entity"] for r in res if not r["skipped"]}
-        if loaded != {"orders", "order_item"}:
-            raise RuntimeError(
-                f"q155_order_pair_replay: day-{day} fan-out loaded {loaded}, "
-                "expected exactly {'orders', 'order_item'}"
-            )
-    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"))
-    not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
-    if not_skipped:
-        raise RuntimeError(
-            f"q155_order_pair_replay: day-2 rerun re-processed {not_skipped} "
-            "— the ledger's exactly-once contract is broken"
-        )
-
-    out = (
-        _digest_rows(wh.dim("orders").read(spark), "orders", "dim",
-                     "order_id", _orders_digest())
-        .unionByName(_digest_rows(wh.clean("orders").read(spark), "orders",
-                                  "clean", "order_id", _orders_digest()))
-        .unionByName(_digest_rows(wh.dim("order_item").read(spark),
-                                  "order_item", "dim", _OI_KEY,
-                                  _order_item_digest()))
-        .unionByName(_digest_rows(wh.clean("order_item").read(spark),
-                                  "order_item", "clean", _OI_KEY,
-                                  _order_item_digest()))
+    wh = _two_day_load(
+        spark, sf_dir, "q155_order_pair_replay", "order_pair_replay", _ORDER_PAIR_LEGS
     )
-    return out.orderBy("entity", "layer", "key_str", "eff_start_day")
+    return _warehouse_digest(spark, wh, _ORDER_PAIR_LEGS)
 
 
 # ---------------------------------------------------------------------------
@@ -1800,6 +1752,11 @@ _ADDR_DIGEST_SQL = (
     "CAST(epoch_us(modified_ts) AS VARCHAR)))"
 )
 
+_CUSTOMER_PAIR_LEGS = (
+    ("customer", _customer_src, _write_drop_csv, "customer_id", _customer_digest),
+    ("customer_address", _address_src, _write_drop_csv, "address_id", _address_digest),
+)
+
 _CUSTOMER_PAIR_ORACLE = f"""WITH {_KS_SQL},
 cu_src1 AS ({_customer_src_sql(1)}),
 cu_src2 AS ({_customer_src_sql(2)}),
@@ -1841,52 +1798,11 @@ UNION ALL
     "rerun-idempotence assertion as q145.",
 )
 def q156_customer_pair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.paths import entity_file
-    from .entities import ENTITIES
-    from .runner import Warehouse, run_all
-
-    work = replay_workdir("customer_pair_replay")
-    cust = _replay_keys(spark, sf_dir)
-    day_dirs = (os.path.join(work, "drops", "2024", "6", "1"),
-                os.path.join(work, "drops", "2024", "6", "2"))
-    _parallel_drops([
-        (lambda d=day, dd=ddir, src=src, ent=ent: _write_drop_csv(
-            src(cust, d), entity_file(dd, ENTITIES[ent].source_file_stem), work))
-        for day, ddir in ((1, day_dirs[0]), (2, day_dirs[1]))
-        for src, ent in ((_customer_src, "customer"), (_address_src, "customer_address"))
-    ])
-
-    wh = Warehouse(os.path.join(work, "wh"))
-    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"))
-    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"))
-    for res, day in ((r1, 1), (r2, 2)):
-        loaded = {r["entity"] for r in res if not r["skipped"]}
-        if loaded != {"customer", "customer_address"}:
-            raise RuntimeError(
-                f"q156_customer_pair_replay: day-{day} fan-out loaded "
-                f"{loaded}, expected exactly {{'customer', 'customer_address'}}"
-            )
-    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"))
-    not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
-    if not_skipped:
-        raise RuntimeError(
-            f"q156_customer_pair_replay: day-2 rerun re-processed "
-            f"{not_skipped} — the ledger's exactly-once contract is broken"
-        )
-
-    out = (
-        _digest_rows(wh.dim("customer").read(spark), "customer", "dim",
-                     "customer_id", _customer_digest())
-        .unionByName(_digest_rows(wh.clean("customer").read(spark), "customer",
-                                  "clean", "customer_id", _customer_digest()))
-        .unionByName(_digest_rows(wh.dim("customer_address").read(spark),
-                                  "customer_address", "dim", "address_id",
-                                  _address_digest()))
-        .unionByName(_digest_rows(wh.clean("customer_address").read(spark),
-                                  "customer_address", "clean", "address_id",
-                                  _address_digest()))
+    wh = _two_day_load(
+        spark, sf_dir, "q156_customer_pair_replay", "customer_pair_replay",
+        _CUSTOMER_PAIR_LEGS,
     )
-    return out.orderBy("entity", "layer", "key_str", "eff_start_day")
+    return _warehouse_digest(spark, wh, _CUSTOMER_PAIR_LEGS)
 
 
 # ---------------------------------------------------------------------------
@@ -2174,6 +2090,11 @@ _DLV_DIGEST_SQL = (
     "CAST(epoch_us(modified_ts) AS VARCHAR)))"
 )
 
+_RESTAURANT_PAIR_LEGS = (
+    ("restaurant", _restaurant_src, _write_drop_csv, "restaurant_id", _restaurant_digest),
+    ("delivery", _delivery_src, _write_drop_csv, _DLV_KEY, _delivery_digest),
+)
+
 _REST_PAIR_ORACLE = f"""WITH {_KS_SQL},
 re_src1 AS ({_restaurant_src_sql(1)}),
 re_src2 AS ({_restaurant_src_sql(2)}),
@@ -2211,48 +2132,8 @@ UNION ALL
     "ledger rerun-idempotence assertion as q145.",
 )
 def q159_restaurant_pair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.paths import entity_file
-    from .entities import ENTITIES
-    from .runner import Warehouse, run_all
-
-    work = replay_workdir("restaurant_pair_replay")
-    cust = _replay_keys(spark, sf_dir)
-    day_dirs = (os.path.join(work, "drops", "2024", "6", "1"),
-                os.path.join(work, "drops", "2024", "6", "2"))
-    _parallel_drops([
-        (lambda d=day, dd=ddir, src=src, ent=ent: _write_drop_csv(
-            src(cust, d), entity_file(dd, ENTITIES[ent].source_file_stem), work))
-        for day, ddir in ((1, day_dirs[0]), (2, day_dirs[1]))
-        for src, ent in ((_restaurant_src, "restaurant"), (_delivery_src, "delivery"))
-    ])
-
-    wh = Warehouse(os.path.join(work, "wh"))
-    r1 = run_all(spark, wh, day_dirs[0], batch_ts=F.lit(_TS1).cast("timestamp"))
-    r2 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS2).cast("timestamp"))
-    for res, day in ((r1, 1), (r2, 2)):
-        loaded = {r["entity"] for r in res if not r["skipped"]}
-        if loaded != {"restaurant", "delivery"}:
-            raise RuntimeError(
-                f"q159_restaurant_pair_replay: day-{day} fan-out loaded "
-                f"{loaded}, expected exactly {{'restaurant', 'delivery'}}"
-            )
-    r3 = run_all(spark, wh, day_dirs[1], batch_ts=F.lit(_TS3).cast("timestamp"))
-    not_skipped = [r["entity"] for r in r3 if not r["skipped"]]
-    if not_skipped:
-        raise RuntimeError(
-            f"q159_restaurant_pair_replay: day-2 rerun re-processed "
-            f"{not_skipped} — the ledger's exactly-once contract is broken"
-        )
-
-    out = (
-        _digest_rows(wh.dim("restaurant").read(spark), "restaurant", "dim",
-                     "restaurant_id", _restaurant_digest())
-        .unionByName(_digest_rows(wh.clean("restaurant").read(spark),
-                                  "restaurant", "clean", "restaurant_id",
-                                  _restaurant_digest()))
-        .unionByName(_digest_rows(wh.dim("delivery").read(spark), "delivery",
-                                  "dim", _DLV_KEY, _delivery_digest()))
-        .unionByName(_digest_rows(wh.clean("delivery").read(spark), "delivery",
-                                  "clean", _DLV_KEY, _delivery_digest()))
+    wh = _two_day_load(
+        spark, sf_dir, "q159_restaurant_pair_replay", "restaurant_pair_replay",
+        _RESTAURANT_PAIR_LEGS,
     )
-    return out.orderBy("entity", "layer", "key_str", "eff_start_day")
+    return _warehouse_digest(spark, wh, _RESTAURANT_PAIR_LEGS)

@@ -164,9 +164,10 @@ class SnapshotTable:
 
     @contextlib.contextmanager
     def _writer_lock(self):
-        """Exclusive advisory lock for the whole write transaction
-        (same recipe as BucketPrunedMergeBackend: sibling file so no
-        table operation can delete it; only EWOULDBLOCK retries)."""
+        """Exclusive advisory lock for the whole write transaction:
+        a non-blocking ``flock`` on a sibling ``<dir>.writerlock`` file,
+        which no table operation deletes; only EWOULDBLOCK retries, for
+        up to 60 s."""
         import fcntl
         import time
 

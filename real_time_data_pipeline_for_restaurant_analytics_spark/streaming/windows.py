@@ -12,6 +12,7 @@
 
 from __future__ import annotations
 
+import threading
 from typing import Iterator
 
 import numpy as np
@@ -64,6 +65,51 @@ def _write_json_drops(work: str, plan: list) -> None:
 
     with ThreadPoolExecutor(max_workers=min(len(plan), 8)) as pool:
         list(pool.map(lambda a: one(*a), plan))
+
+
+_NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
+_PARTS = "spark.sql.shuffle.partitions"
+#: serializes the conf flip around ``start()``: the session conf is
+#: global, so a query started concurrently by another drain must never
+#: inherit this drain's values (a streaming query clones the session,
+#: conf included, when it starts, so the flip need not outlive it)
+_DRAIN_CONF_LOCK = threading.Lock()
+
+
+def _drain(
+    spark: SparkSession, frame: DataFrame, work: str, name: str, conf: dict
+) -> DataFrame:
+    """Drain the streaming ``frame`` into a parquet sink under
+    ``work/sink`` (checkpoint ``work/ckpt``) with one ``availableNow``
+    run and return the sink read back. ``conf`` is set for the query's
+    start and the caller's values restored afterwards, both under
+    ``_DRAIN_CONF_LOCK``. ``shuffle.partitions`` at stream start IS the
+    StateStore partition count for the query's lifetime, so the
+    stateful replays size it to their few-thousand-key state (32 → 8
+    measured 7.8 → 4.3 s on q164 at sf0.1)."""
+    import os
+
+    out_dir = os.path.join(work, "sink")
+    with _DRAIN_CONF_LOCK:
+        prev = {k: spark.conf.get(k) for k in conf}
+        try:
+            for k, v in conf.items():
+                spark.conf.set(k, v)
+            q = (
+                frame.writeStream.format("parquet")
+                .option("path", out_dir)
+                .option("checkpointLocation", os.path.join(work, "ckpt"))
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
+    if not q.awaitTermination(600):
+        q.stop()
+        raise RuntimeError(f"{name}: availableNow drain did not finish within 600 s")
+    return spark.read.parquet(out_dir)
 
 
 def hourly_window_kpi(
@@ -390,6 +436,12 @@ def join_streams_within(
 #: epoch seconds, UTC midnight Jan N 2024 (session tz pinned UTC)
 _JAN = {n: 1704067200 + (n - 1) * 86400 for n in (1, 2, 3, 4)}
 
+#: day-3's finalization rides on the trailing no-data micro-batch: pin
+#: the (default-on) conf so the oracle's third window doesn't silently
+#: depend on a deployment override. The agg's state keyspace is
+#: 4 windows × 5 event types.
+_Q164_CONF = {_NO_DATA: "true", _PARTS: "8"}
+
 
 _WM_ORACLE = f"""
 WITH base AS (
@@ -524,45 +576,8 @@ def q164_watermark_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value_cents",
         )
     )
-    out_dir = os.path.join(work, "sink")
-    # day-3's finalization rides on the trailing no-data micro-batch;
-    # pin the (default-on) conf so the oracle's third window doesn't
-    # silently depend on a deployment override — and restore the
-    # caller's value afterwards, same as shuffle.partitions below
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    # state-partition sizing: shuffle.partitions at stream start IS the
-    # StateStore partition count for the query's lifetime. This agg's
-    # keyspace is (4 windows × 5 event types) — 32 state partitions is
-    # pure per-batch task overhead (measured 7.8→4.3 s at sf0.1 going
-    # 32→8). Production sizes this to state keyspace the same way.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(600)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-    if not finished:
-        q.stop()
-        raise RuntimeError(
-            "q164_watermark_window_replay: availableNow drain did not "
-            "finish within 600 s"
-        )
     return (
-        spark.read.parquet(out_dir)
+        _drain(spark, stream, work, "q164_watermark_window_replay", _Q164_CONF)
         .select(
             F.col("window_ts").cast("long").alias("window_start"),
             "event_type",
@@ -702,23 +717,8 @@ def q165_streaming_sessionize_replay(spark: SparkSession, sf_dir: str) -> DataFr
     # batches); the replay withholds open sessions anyway, so the
     # timeout's only job doesn't apply here.
     sess = sessionize(stream, gap_ms=30 * 60 * 1000, idle_timeout=False)
-    out_dir = os.path.join(work, "sink")
-    q = (
-        sess.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError(
-            "q165_streaming_sessionize_replay: availableNow drain did "
-            "not finish within 600 s"
-        )
     return (
-        spark.read.parquet(out_dir)
+        _drain(spark, sess, work, "q165_streaming_sessionize_replay", {})
         .select(
             "user_id",
             F.date_format("session_start", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(
@@ -761,6 +761,15 @@ def q165_streaming_sessionize_replay(spark: SparkSession, sf_dir: str) -> DataFr
 
 #: epoch microseconds, UTC midnight Jan N 2024
 _JAN_US = {n: (1704067200 + (n - 1) * 86400) * 1_000_000 for n in (1, 5, 7, 8, 11)}
+
+#: no trailing no-data micro-batch (round 15): an INNER interval join
+#: emits on match only — the watermark-advance batch after the last
+#: drop can evict state but can never add sink rows, so it is pure
+#: trigger overhead here (A/B at sf0.1: 6.5 → 5.4 s, sink exceptAll
+#: both ways = 0; tests/test_streaming.py pins the equality).
+#: q164/q169 MUST keep it true (their window finalization / null
+#: emission ride on it). The join buffers a few thousand rows.
+_Q167_CONF = {_NO_DATA: "false", _PARTS: "8"}
 
 _SSJ_ORACLE = f"""
 WITH l AS (
@@ -937,44 +946,8 @@ def q167_stream_stream_interval_join(
         F.unix_micros("click_ts").alias("click_ts_us"),
         F.unix_micros("purchase_ts").alias("purchase_ts_us"),
     )
-    out_dir = os.path.join(work, "sink")
-    # state-partition sizing (the q164 note): the join buffers a few
-    # thousand rows — 32 StateStore partitions is per-batch overhead
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    # no trailing no-data micro-batch (round 15): an INNER interval
-    # join emits on match only — the watermark-advance batch after the
-    # last drop can evict state but can never add sink rows, so it is
-    # pure trigger overhead here (A/B at sf0.1: 6.5 → 5.4 s, sink
-    # exceptAll both ways = 0). q164/q169 MUST keep it true (their
-    # window finalization / null emission ride on it); restored below.
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(600)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-    if not finished:
-        q.stop()
-        raise RuntimeError(
-            "q167_stream_stream_interval_join: availableNow drain did "
-            "not finish within 600 s"
-        )
     return (
-        spark.read.parquet(out_dir)
+        _drain(spark, joined, work, "q167_stream_stream_interval_join", _Q167_CONF)
         .select("click_id", "purchase_id", "user_id", "click_ts_us", "purchase_ts_us")
         .orderBy("click_id", "purchase_id")
     )
@@ -1016,6 +989,10 @@ FROM l LEFT JOIN r ON l.user_id = r.user_id
   AND r.p_us >= l.c_us AND r.p_us <= l.c_us + 14400000000
 ORDER BY click_id, purchase_id
 """
+
+#: the null emission for closed windows rides on the trailing no-data
+#: micro-batch — pin the (default-on) conf
+_Q169_CONF = {_NO_DATA: "true", _PARTS: "8"}
 
 
 @register(
@@ -1170,37 +1147,9 @@ def q169_stream_outer_join_null_emission(
         F.unix_micros("click_ts").alias("click_ts_us"),
         F.unix_micros("purchase_ts").alias("purchase_ts_us"),
     )
-    out_dir = os.path.join(work, "sink")
-    # the null emission for closed windows rides on the trailing
-    # no-data micro-batch — pin the (default-on) conf and restore it
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
+    out = _drain(
+        spark, joined, work, "q169_stream_outer_join_null_emission", _Q169_CONF
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(600)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-    if not finished:
-        q.stop()
-        raise RuntimeError(
-            "q169_stream_outer_join_null_emission: availableNow drain "
-            "did not finish within 600 s"
-        )
-    out = spark.read.parquet(out_dir)
     # the sentinel must have been withheld (open window at end of
     # stream) — if it leaked, the open-window contract broke even
     # though the oracle (which excludes it) would catch it anyway
@@ -1256,6 +1205,13 @@ WHERE ts IS NOT NULL
   AND epoch_us(ts) >= {_day_us(1)} AND epoch_us(ts) < {_day_us(11)}
 ORDER BY event_id, user_id, event_type, ts_us
 """
+
+#: no trailing no-data micro-batch (round 15, the _Q167_CONF note):
+#: dropDuplicatesWithinWatermark PASSES first-seen rows through in the
+#: batch they arrive — the watermark-advance batch after the last drop
+#: only drops expired state keys and can never add sink rows. Dedup
+#: state is a few thousand keys.
+_Q170_CONF = {_NO_DATA: "false", _PARTS: "8"}
 
 
 @register(
@@ -1348,43 +1304,8 @@ def q170_streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_col="ts",
         watermark_delay="2 days",
     ).drop("ts")
-    out_dir = os.path.join(work, "sink")
-    # dedup state is a few thousand keys — 32 StateStore partitions
-    # would be per-batch overhead (the q164 sizing note)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    # no trailing no-data micro-batch (round 15, the q167 note):
-    # dropDuplicatesWithinWatermark PASSES first-seen rows through in
-    # the batch they arrive — the watermark-advance batch after the
-    # last drop only drops expired state keys and can never add sink
-    # rows (A/B at sf0.1: sink exceptAll both ways = 0); restored below.
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(600)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-    if not finished:
-        q.stop()
-        raise RuntimeError(
-            "q170_streaming_dedup_replay: availableNow drain did not "
-            "finish within 600 s"
-        )
     return (
-        spark.read.parquet(out_dir)
+        _drain(spark, deduped, work, "q170_streaming_dedup_replay", _Q170_CONF)
         .select("event_id", "user_id", "event_type", "ts_us")
         .orderBy("event_id", "user_id", "event_type", "ts_us")
     )
@@ -1426,6 +1347,9 @@ SELECT ev.event_id, ev.user_id, ev.event_type,
 FROM ev LEFT JOIN dim ON ev.user_id = dim.c_custkey
 ORDER BY event_id, user_id, ts_us
 """
+
+#: stateless stream-static join: only the per-batch shuffle is sized
+_Q172_CONF = {_PARTS: "8"}
 
 
 @register(
@@ -1511,29 +1435,8 @@ def q172_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("c_mktsegment").alias("segment"),
         F.col("c_nationkey").alias("nation_key"),
     )
-    out_dir = os.path.join(work, "sink")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            enriched.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(600)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    if not finished:
-        q.stop()
-        raise RuntimeError(
-            "q172_stream_static_enrichment: availableNow drain did "
-            "not finish within 600 s"
-        )
     return (
-        spark.read.parquet(out_dir)
+        _drain(spark, enriched, work, "q172_stream_static_enrichment", _Q172_CONF)
         .select("event_id", "user_id", "event_type", "ts_us", "segment", "nation_key")
         .orderBy("event_id", "user_id", "ts_us")
     )

@@ -14,6 +14,7 @@ from real_time_data_pipeline_for_restaurant_analytics_spark.operators.merge impo
     merge_upsert,
     scd2_empty_like,
 )
+from real_time_data_pipeline_for_restaurant_analytics_spark.sources.snapshot import SnapshotTable
 
 TS = "ts timestamp"
 
@@ -266,3 +267,119 @@ def test_q161_audit_structure(spark):
             assert not r.segment.startswith("MOVED-"), r
     # every multiplicity class realized
     assert {r.n_rows for r in inj.values()} == {2, 3, 4}
+
+
+# ------------------------------------------- merges through a stored table
+
+
+def _ts(s: str):
+    return F.to_timestamp(F.lit(s))
+
+
+def _stored(spark, tmp_path, merge):
+    """Apply ``merge`` to the stored ``dim`` snapshot, write the result
+    as the next version and return the re-read table — the path every
+    product load takes (merge on ``SnapshotTable.read``, then
+    ``SnapshotTable.write``)."""
+    table = SnapshotTable(str(tmp_path), "dim")
+    table.write(merge(table.read(spark)))
+    return table.read(spark)
+
+
+def test_scd1_upsert_sequence(spark, tmp_path):
+    """Initial load → guarded update → identical no-op, through the
+    stored table."""
+    b1 = spark.createDataFrame(
+        [(1, "a", "2024-05-01"), (2, "b", "2024-05-01")],
+        "id long, v string, modified string",
+    )
+    out = _stored(spark, tmp_path, lambda t: merge_upsert(t, b1, ["id"], ["v"]))
+    assert {r.id: r.v for r in out.collect()} == {1: "a", 2: "b"}
+
+    # changed row updates + stamps; untouched row keeps its stamp
+    b2 = spark.createDataFrame(
+        [(2, "B", "ignored"), (3, "c", "2024-05-02")],
+        "id long, v string, modified string",
+    )
+    out = _stored(
+        spark,
+        tmp_path,
+        lambda t: merge_upsert(
+            t, b2, ["id"], ["v"], modified_col="modified", batch_ts=F.lit("2024-05-02")
+        ),
+    )
+    got = {r.id: (r.v, r.modified) for r in out.collect()}
+    assert got[1] == ("a", "2024-05-01")
+    assert got[2] == ("B", "2024-05-02")
+    assert got[3] == ("c", "2024-05-02")
+
+    # identical batch: change guard holds, stamp NOT refreshed
+    b3 = spark.createDataFrame([(2, "B", "later")], "id long, v string, modified string")
+    out = _stored(
+        spark,
+        tmp_path,
+        lambda t: merge_upsert(
+            t, b3, ["id"], ["v"], modified_col="modified", batch_ts=F.lit("2024-05-03")
+        ),
+    )
+    assert {r.id: r.modified for r in out.collect()}[2] == "2024-05-02"
+
+
+def test_scd2_three_branches(spark, tmp_path):
+    """Close-out / new-version / first-insert across two days, with
+    the v3 eff_start-from-created first-insert semantics."""
+    cfg = Scd2Config(key=["id"], attrs=["city"], created_col="created")
+    day1 = spark.createDataFrame(
+        [(1, "Pune", "2024-05-01 08:00:00"), (2, "Delhi", "2024-05-01 09:00:00")],
+        "id long, city string, created string",
+    ).withColumn("created", F.to_timestamp("created"))
+    out = _stored(
+        spark, tmp_path, lambda t: apply_scd2(t, day1, cfg, _ts("2024-05-01 12:00:00"))
+    )
+    rows = {r.id: r for r in out.collect()}
+    assert all(r.is_current for r in rows.values())
+    assert str(rows[1].eff_start_date).startswith("2024-05-01 08:00")  # from created
+
+    day2 = spark.createDataFrame(
+        [
+            (1, "Mumbai", "2024-05-02 08:00:00"),  # changed → close-out + version
+            (2, "Delhi", "2024-05-02 08:00:00"),   # identical → no-op
+            (3, "Goa", "2024-05-02 09:00:00"),     # new key → first insert
+        ],
+        "id long, city string, created string",
+    ).withColumn("created", F.to_timestamp("created"))
+    out = _stored(
+        spark, tmp_path, lambda t: apply_scd2(t, day2, cfg, _ts("2024-05-02 12:00:00"))
+    )
+    rows = sorted(out.collect(), key=lambda r: (r.id, str(r.eff_start_date)))
+    by_id: dict[int, list] = {}
+    for r in rows:
+        by_id.setdefault(r.id, []).append(r)
+
+    old1, new1 = by_id[1]
+    assert old1.city == "Pune" and old1.is_current is False
+    assert str(old1.eff_end_date).startswith("2024-05-02 12:00")
+    assert new1.city == "Mumbai" and new1.is_current is True
+    assert str(new1.eff_start_date).startswith("2024-05-02 12:00")  # branch b: batch_ts
+
+    (only2,) = by_id[2]
+    assert only2.is_current is True and only2.eff_end_date is None  # guard held
+
+    (only3,) = by_id[3]
+    assert only3.is_current is True
+    assert str(only3.eff_start_date).startswith("2024-05-02 09:00")  # branch c: created
+
+
+def test_scd2_batch_dedup_latest_per_key(spark, tmp_path):
+    """C6: duplicate keys inside one batch collapse to latest-by-created
+    BEFORE the merge (Snowflake MERGE would error on them)."""
+    cfg = Scd2Config(key=["id"], attrs=["city"], created_col="created")
+    b = spark.createDataFrame(
+        [(1, "Old", "2024-05-01 07:00:00"), (1, "New", "2024-05-01 10:00:00")],
+        "id long, city string, created string",
+    ).withColumn("created", F.to_timestamp("created"))
+    out = _stored(
+        spark, tmp_path, lambda t: apply_scd2(t, b, cfg, _ts("2024-05-01 12:00:00"))
+    )
+    rows = out.collect()
+    assert len(rows) == 1 and rows[0].city == "New"

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from real_time_data_pipeline_for_restaurant_analytics_spark.pipeline.entities import ENTITIES
@@ -634,3 +635,64 @@ def test_q164_watermark_replay_structure(spark):
     assert got[JAN1 + 2 * 86400] == day_count(
         3, F.col("user_id") % 5 == 0
     )  # stragglers ACCEPTED (double count)
+
+
+# ------------------------------------------- availableNow replay drains
+
+
+def test_drain_restores_conf_when_it_raises(spark, tmp_path):
+    """A drain that fails at start still hands back the caller's conf
+    and releases the drain lock."""
+    from real_time_data_pipeline_for_restaurant_analytics_spark.streaming import windows
+
+    key = windows._NO_DATA
+    before = spark.conf.get(key), spark.conf.get(windows._PARTS)
+    batch = spark.range(3)  # not a stream: writeStream raises
+    with pytest.raises(Exception, match="writeStream"):
+        windows._drain(
+            spark, batch, str(tmp_path), "qx", {key: "false", windows._PARTS: "3"}
+        )
+    assert (spark.conf.get(key), spark.conf.get(windows._PARTS)) == before
+    assert not windows._DRAIN_CONF_LOCK.locked()
+
+
+@pytest.mark.parametrize(
+    "query,conf_name",
+    [
+        ("q167_stream_stream_interval_join", "_Q167_CONF"),
+        ("q170_streaming_dedup_replay", "_Q170_CONF"),
+    ],
+)
+def test_no_data_batches_never_change_the_sink(spark, monkeypatch, query, conf_name):
+    """q167 and q170 drop the trailing no-data micro-batch: their sinks
+    must be identical with it on and off. The committed batch counts
+    prove the flip reached the query, and the caller's conf comes back
+    after each drain."""
+    from real_time_data_pipeline_for_restaurant_analytics_spark import workdirs
+    from real_time_data_pipeline_for_restaurant_analytics_spark.registry import all_queries
+    from real_time_data_pipeline_for_restaurant_analytics_spark.streaming import windows
+
+    from .conftest import SF_SMOKE
+
+    works = []
+    real_workdir = workdirs.replay_workdir
+
+    def recording_workdir(family):
+        works.append(real_workdir(family))
+        return works[-1]
+
+    monkeypatch.setattr(workdirs, "replay_workdir", recording_workdir)
+    before = spark.conf.get(windows._NO_DATA)
+    conf = getattr(windows, conf_name)
+    assert conf[windows._NO_DATA] == "false"
+    sinks, batches = {}, {}
+    for no_data in ("false", "true"):
+        monkeypatch.setattr(windows, conf_name, {**conf, windows._NO_DATA: no_data})
+        sinks[no_data] = all_queries()[query].build(spark, SF_SMOKE)
+        commits = os.listdir(os.path.join(works[-1], "ckpt", "commits"))
+        batches[no_data] = len([f for f in commits if not f.startswith(".")])
+        assert spark.conf.get(windows._NO_DATA) == before
+    on, off = sinks["true"], sinks["false"]
+    assert off.count() > 0
+    assert on.exceptAll(off).count() == 0 and off.exceptAll(on).count() == 0
+    assert batches["true"] > batches["false"]
