@@ -169,13 +169,13 @@ def apply_scd2(
     ``is_current`` predicate keeps the join pruned to current rows
     only — same reason the reference puts IS_CURRENT=TRUE in its
     MERGE condition (SURVEY §4).
+
+    ``batch`` must be unique on ``key`` (C6): the merge does not
+    dedup it, as Snowflake's MERGE errors on a duplicated source key.
+    Callers with duplicate keys run :func:`latest_per_key` first, as
+    ``merge_entity_batch`` does.
     """
     key, attrs = cfg.key, cfg.attrs
-    batch = latest_per_key(
-        batch,
-        key,
-        [F.col(cfg.created_col).desc_nulls_last()] if cfg.created_col else [F.lit(1)],
-    )
     # an existing but EMPTY dim needs no probe: its current side is
     # empty, so the join path below yields exactly these first inserts
     if dim is None:

@@ -188,16 +188,12 @@ def all_queries() -> dict[str, Query]:
         curation,
         dedup,
         dq,
-        flac,
-        h264,
-        jpeg,
         layout,
         multimodal,
         sampling,
         similarity,
         skew,
         text,
-        webp,
     )
     from .pipeline import replay  # noqa: F401
     from .sources import corpus  # noqa: F401

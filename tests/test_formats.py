@@ -62,25 +62,3 @@ def test_format_round_trip(spark, tmp_path, fmt):
         reader = reader.option("header", True)
     back = reader.load(path)
     _assert_same(src, back)
-
-
-def test_gif_transparent_index_outside_palette_is_loud():
-    """Review r12 (ADVICE): a GCE transparent index beyond the active
-    color table previously decoded to a silently all-opaque RGBA; now
-    it raises, consistent with the pixel-index range check."""
-    import numpy as np
-    import pytest
-
-    from real_time_data_pipeline_for_restaurant_analytics_spark.operators import (
-        multimodal as mm,
-    )
-
-    idx = np.zeros((4, 5), np.uint8)
-    pal = np.arange(8 * 3, dtype=np.uint8).reshape(8, 3)
-    ok = mm.decode_gif(mm.encode_gif(idx, pal, transparent_idx=7))
-    assert ok.shape == (4, 5, 4)
-    bad = bytearray(mm.encode_gif(idx, pal, transparent_idx=7))
-    gce = bad.index(bytes([0x21, 0xF9, 0x04]))
-    bad[gce + 6] = 200  # transparent color index byte → out of range
-    with pytest.raises(ValueError, match="transparent index"):
-        mm.decode_gif(bytes(bad))

@@ -12,6 +12,9 @@ committed the dim, since that is the load the warehouse keeps:
 - the dim merge raises after the clean merge has committed: nothing
   of the dim landed, so the retry's stamp is the one kept; and the
   converse, where the retry must leave the committed dim as it is;
+- the stage append lands and then both merges raise: the retry must
+  overwrite the file's ``_ingest_fp`` stage partition, not add a
+  second copy;
 - a crash just before ``ledger.mark``: both merges landed, and the
   change-guarded retry must leave them as they are;
 - the streaming twin of that crash: ``merge_microbatch`` commits both
@@ -22,6 +25,7 @@ committed the dim, since that is the load the warehouse keeps:
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import time
@@ -90,10 +94,26 @@ def _base_day(spark, stage: str, root) -> Warehouse:
 
 
 @pytest.fixture(scope="module")
-def no_fault(spark, stage, tmp_path_factory):
+def no_fault_wh(spark, stage, tmp_path_factory) -> Warehouse:
     wh = _base_day(spark, stage, tmp_path_factory.mktemp("nofault"))
     _load(spark, wh, stage, DAY2, TS2)
-    return _digest(spark, wh)
+    return wh
+
+
+@pytest.fixture(scope="module")
+def no_fault(spark, no_fault_wh):
+    return _digest(spark, no_fault_wh)
+
+
+def _stage_parts(wh: Warehouse, e: str) -> list[str]:
+    return glob.glob(os.path.join(wh.stage_dir(e), "data", "_ingest_fp=*"))
+
+
+def _stage_rows(spark, wh: Warehouse) -> dict[str, int]:
+    return {
+        e: spark.read.parquet(os.path.join(wh.stage_dir(e), "data")).count()
+        for e in ENTITIES
+    }
 
 
 def _versions(wh: Warehouse) -> dict[str, tuple[int, int]]:
@@ -148,6 +168,46 @@ def test_one_merge_fails_after_the_other_commits(
     r = _load(spark, wh, stage, DAY2, retry_ts)
     assert not any(x["skipped"] for x in r)
     assert _marked(wh) == {2}
+    assert _digest(spark, wh) == no_fault
+
+
+def test_both_merges_fail_after_the_stage_append(
+    spark, stage, tmp_path, monkeypatch, no_fault_wh, no_fault
+):
+    """Commit point 1: the stage append lands, then both merges raise.
+    Nothing of clean or dim committed, so the retry's stamp is the one
+    kept; the retry must overwrite the file's ``_ingest_fp`` stage
+    partition, not add a second copy of its rows."""
+    wh = _base_day(spark, stage, tmp_path)
+    v0 = _versions(wh)
+    parts0 = {e: len(_stage_parts(wh, e)) for e in ENTITIES}
+    entity_of = {t.dir: e for e in ENTITIES for t in (wh.clean(e), wh.dim(e))}
+
+    def failing_write(self, df, *a, **k):
+        # fail only once this entity's day-2 stage partition is in place
+        e = entity_of[self.dir]
+        deadline = time.monotonic() + 120
+        while len(_stage_parts(wh, e)) == parts0[e]:
+            assert time.monotonic() < deadline, f"{e}: stage append never landed"
+            time.sleep(0.05)
+        raise InjectedFault(f"{self.name} merge")
+
+    monkeypatch.setattr(SnapshotTable, "write", failing_write)
+    with pytest.raises(InjectedFault):
+        _load(spark, wh, stage, DAY2, TS_OTHER)
+    monkeypatch.undo()
+    assert _versions(wh) == v0
+    assert _marked(wh) == {1}
+    want = _stage_rows(spark, no_fault_wh)
+    assert _stage_rows(spark, wh) == want  # the attempt's append landed
+
+    r = _load(spark, wh, stage, DAY2, TS2)
+    assert not any(x["skipped"] for x in r)
+    assert _marked(wh) == {2}
+    assert {e: len(_stage_parts(wh, e)) for e in ENTITIES} == {
+        e: n + 1 for e, n in parts0.items()
+    }
+    assert _stage_rows(spark, wh) == want  # overwritten, not duplicated
     assert _digest(spark, wh) == no_fault
 
 

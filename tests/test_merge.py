@@ -90,7 +90,9 @@ def test_apply_scd2_noop_on_identical(spark):
 def test_apply_scd2_empty_dim_equals_no_dim(spark, from_created):
     """An existing but EMPTY dim takes the join path (no emptiness
     probe); it must produce exactly the first-insert rows the no-dim
-    path does — duplicate batch keys and a NULL created_ts included."""
+    path does — duplicate source keys (deduped by latest_per_key, as
+    apply_scd2 requires a key-unique batch) and a NULL created_ts
+    included."""
     batch = _df(
         spark,
         [
@@ -101,6 +103,7 @@ def test_apply_scd2_empty_dim_equals_no_dim(spark, from_created):
         ],
         "id long, v string, created string",
     ).withColumn("created", F.col("created").cast("timestamp"))
+    batch = latest_per_key(batch, ["id"], [F.col("created").desc_nulls_last()])
     cfg = Scd2Config(key=["id"], attrs=["v"], created_col="created",
                      first_start_from_created=from_created)
     t0 = F.lit("2024-01-05 21:30:00").cast("timestamp")
@@ -372,12 +375,15 @@ def test_scd2_three_branches(spark, tmp_path):
 
 def test_scd2_batch_dedup_latest_per_key(spark, tmp_path):
     """C6: duplicate keys inside one batch collapse to latest-by-created
-    BEFORE the merge (Snowflake MERGE would error on them)."""
+    BEFORE the merge (Snowflake MERGE would error on them). apply_scd2
+    requires a key-unique batch, so the dedup runs first, as in
+    merge_entity_batch."""
     cfg = Scd2Config(key=["id"], attrs=["city"], created_col="created")
     b = spark.createDataFrame(
         [(1, "Old", "2024-05-01 07:00:00"), (1, "New", "2024-05-01 10:00:00")],
         "id long, city string, created string",
     ).withColumn("created", F.to_timestamp("created"))
+    b = latest_per_key(b, cfg.key, [F.col("created").desc_nulls_last()])
     out = _stored(
         spark, tmp_path, lambda t: apply_scd2(t, b, cfg, _ts("2024-05-01 12:00:00"))
     )

@@ -28,23 +28,20 @@ def test_codec_round_trips():
 
 
 def test_compressed_formats_fail_loudly():
-    # PNG left the seam in round 9 (real decode) — a PNG-signature
-    # payload with garbage chunks now fails as CORRUPT, not as a seam
-    with pytest.raises(ValueError, match="truncated"):
-        decode_image(b"\x89PNG\r\n\x1a\n....")
-    # baseline JPEG left the seam in round 10 (operators/jpeg.py) — a
-    # JPEG-signature payload with garbage now fails as CORRUPT
-    with pytest.raises(ValueError):
-        decode_image(b"\xff\xd8\xff\xe0JFIF....")
-    # lossy WebP is a named design boundary (not losslessly oracle-
-    # replayable); a well-formed container with a VP8 chunk says so
-    lossy = (b"RIFF" + (20).to_bytes(4, "little") + b"WEBP"
-             + b"VP8 " + (4).to_bytes(4, "little") + b"xxxx")
-    with pytest.raises(NotImplementedError, match="lossy"):
-        decode_image(lossy)
-    # the remaining codec-library format (AVIF) stays the boundary
-    with pytest.raises(NotImplementedError, match="codec"):
-        decode_image(b"\x00\x00\x00 ftypavif....")
+    # only PPM and BMP decode natively; every compressed signature
+    # (PNG, JPEG, GIF, lossless WebP, AVIF) reaches the one
+    # NotImplementedError boundary, which names what is supported
+    riff = (b"RIFF" + (20).to_bytes(4, "little") + b"WEBP"
+            + b"VP8L" + (4).to_bytes(4, "little") + b"xxxx")
+    for payload in (
+        b"\x89PNG\r\n\x1a\n....",
+        b"\xff\xd8\xff\xe0JFIF....",
+        b"GIF89a\x01\x00\x01\x00....",
+        riff,
+        b"\x00\x00\x00 ftypavif....",
+    ):
+        with pytest.raises(NotImplementedError, match="PPM.*BMP"):
+            decode_image(payload)
 
 
 def test_nn_thumbnail_sampling_grid():
@@ -160,361 +157,18 @@ def test_ahash64_and_phash_dedup_pairs(spark):
     assert np.array_equal(decode_image(encode_ppm(base)), base)
 
 
-# -- PNG: the first compressed codec behind the seam (round-9) --------------
-
-
-def test_png_round_trip_all_filters():
-    """encode_png cycles the filter type per scanline, so any image
-    with >= 5 rows exercises None/Sub/Up/Average/Paeth; the decode
-    must reproduce every pixel byte-exactly."""
-    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.multimodal import (
-        decode_image,
-        decode_png,
-        encode_png,
-        synth_pixels,
-    )
-
-    for doc_id in (0, 1, 7, 12, 123, 10_007):
-        pix = synth_pixels(doc_id)
-        assert pix.shape[0] >= 4 and pix.shape[1] >= 4
-        payload = encode_png(pix)
-        assert payload[:8] == b"\x89PNG\r\n\x1a\n"
-        out = decode_png(payload)
-        assert (out == pix).all(), f"doc {doc_id}: PNG round trip diverged"
-        # and through the format-sniffing front door
-        assert (decode_image(payload) == pix).all()
-
-
-def test_png_round_trip_property():
-    """Property: ANY uint8 RGB array round-trips — catches filter/
-    unfilter asymmetries the structured grid might mask (e.g. the
-    Paeth tie-break order)."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.multimodal import (
-        decode_png,
-        encode_png,
-    )
-
-    @settings(max_examples=40, deadline=None)
-    @given(
-        st.integers(min_value=1, max_value=9),
-        st.integers(min_value=1, max_value=9),
-        st.integers(min_value=0, max_value=2**31 - 1),
-    )
-    def run(h, w, seed):
-        rng = np.random.RandomState(seed)
-        pix = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-        assert (decode_png(encode_png(pix)) == pix).all()
-
-    run()
-
-
-def test_png_all_color_types_depths_and_interlace():
-    """Round-10 generalization: every PNG color type (gray, RGB,
-    palette-through-PLTE, gray+alpha, RGBA), both depths (8/16-bit,
-    big-endian samples), plain and Adam7-interlaced (independently
-    filtered passes incl. the empty-pass edge on tiny images) —
-    bit-exact round trips through the real writer."""
-    import numpy as np
-
-    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.multimodal import (
-        decode_image,
-        decode_png,
-        encode_png,
-    )
-
-    rng = np.random.default_rng(41)
-    arrays = [
-        rng.integers(0, 256, (13, 21), dtype=np.uint8),  # gray
-        rng.integers(0, 256, (13, 21, 2), dtype=np.uint8),  # gray+alpha
-        rng.integers(0, 256, (13, 21, 3), dtype=np.uint8),  # RGB
-        rng.integers(0, 256, (13, 21, 4), dtype=np.uint8),  # RGBA
-        rng.integers(0, 65536, (9, 15)).astype(np.uint16),  # gray 16
-        rng.integers(0, 65536, (9, 15, 3)).astype(np.uint16),  # RGB 16
-    ]
-    for arr in arrays:
-        for il in (False, True):
-            out = decode_png(encode_png(arr, interlace=il))
-            assert out.shape == arr.shape and (out == arr).all(), (arr.shape, il)
-    pal = rng.integers(0, 256, (17, 3), dtype=np.uint8)
-    idx = rng.integers(0, 17, (13, 21), dtype=np.uint8)
-    for il in (False, True):
-        assert (decode_png(encode_png(idx, palette=pal, interlace=il)) == pal[idx]).all()
-    # sub-byte depths (1/2/4-bit, gray and palette, both interlace
-    # modes, odd widths exercising the per-row bit padding)
-    for depth in (1, 2, 4):
-        for il in (False, True):
-            g = rng.integers(0, 1 << depth, (13, 21), dtype=np.uint8)
-            out = decode_png(encode_png(g, depth=depth, interlace=il))
-            assert out.shape == g.shape and (out == g).all(), ("gray", depth, il)
-            idx2 = rng.integers(0, min(16, 1 << depth), (13, 21), dtype=np.uint8)
-            assert (
-                decode_png(encode_png(idx2, palette=pal[:16], depth=depth, interlace=il))
-                == pal[:16][idx2]
-            ).all(), ("pal", depth, il)
-    for w in (1, 3, 7, 9, 15):
-        g = rng.integers(0, 2, (5, w), dtype=np.uint8)
-        assert (decode_png(encode_png(g, depth=1)) == g).all(), w
-    # interlaced tiny images: several Adam7 passes are empty
-    for shape in ((1, 1, 3), (3, 2, 3), (2, 9, 3)):
-        t = rng.integers(0, 256, shape, dtype=np.uint8)
-        assert (decode_png(encode_png(t, interlace=True)) == t).all(), shape
-    # the sniffing front door normalizes every variant to (h, w, 3) u8
-    assert decode_image(encode_png(arrays[0])).shape == (13, 21, 3)
-    assert decode_image(encode_png(arrays[3])).shape == (13, 21, 3)
-    assert decode_image(encode_png(arrays[4])).dtype == np.uint8
-
-
-def test_png_corruption_and_unsupported_variants_fail_loudly():
-    import struct
-    import zlib
-
-    import numpy as np
-    import pytest
-
-    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.multimodal import (
-        decode_png,
-        encode_png,
-    )
-
-    payload = bytearray(encode_png(np.zeros((6, 5, 3), dtype=np.uint8)))
-    # flip one byte inside IDAT: the chunk CRC must catch it
-    idat_at = bytes(payload).index(b"IDAT")
-    payload[idat_at + 6] ^= 0xFF
-    with pytest.raises(ValueError, match="CRC"):
-        decode_png(bytes(payload))
-
-    # truncated chunk
-    good = encode_png(np.zeros((6, 5, 3), dtype=np.uint8))
-    with pytest.raises(ValueError, match="truncated"):
-        decode_png(good[: len(good) // 2])
-
-    # cuts INSIDE the 12-byte chunk framing (length header, tag, CRC)
-    # must raise the same ValueError, never a bare struct.error from
-    # unpack_from past the buffer end (ADVICE r10: callers classify
-    # corrupt-vs-seam by exception type)
-    for cut in (9, 12, 14, len(good) - 2, len(good) - 6):
-        with pytest.raises(ValueError, match="truncated"):
-            decode_png(good[:cut])
-
-    # out-of-spec depth is corruption; a palette header with no PLTE
-    # is corruption; both loud ValueErrors, no seam left in-format
-    sig = b"\x89PNG\r\n\x1a\n"
-    for ihdr, msg in (
-        (struct.pack(">IIBBBBB", 4, 4, 3, 0, 0, 0, 0), "depth"),
-        (struct.pack(">IIBBBBB", 4, 4, 4, 3, 0, 0, 0), "PLTE"),
-    ):
-        chunk = (
-            struct.pack(">I", len(ihdr))
-            + b"IHDR"
-            + ihdr
-            + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr) & 0xFFFFFFFF)
-        )
-        with pytest.raises(ValueError, match=msg):
-            decode_png(sig + chunk)
-
-    # non-PNG bytes through the sniffing front door still name the seam
-    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.multimodal import (
-        decode_image,
-    )
-
-    # a RIFF/WEBP container with garbage chunks is now CORRUPTION
-    # (VP8L decodes for real since round 10), not a seam
-    with pytest.raises(ValueError):
-        decode_image(b"RIFFxxxxWEBP fake webp")
-    # a JPEG signature now routes to the REAL baseline decoder
-    # (round 10) — garbage after the signature is CORRUPTION
-    # (ValueError), no longer the codec seam
-    with pytest.raises(ValueError):
-        decode_image(b"\xff\xd8\xff\xe0 fake jpeg")
-
-
 def test_payload_synth_fans_out_to_all_cores(spark):
     """Round-10 (SCALE_r09 §3 fix): the synthesize-from-ids payload
     family must realize full decode parallelism regardless of how few
     splits the ids arrived as — spread_ids repartitions the 8-byte id
     frame to defaultParallelism with an explicit count (AQE must not
     coalesce it back)."""
-    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.jpeg import (
-        synth_jpeg_payloads,
-    )
     from real_time_data_pipeline_for_restaurant_analytics_spark.operators.multimodal import (
-        synth_png_payloads,
+        synth_audio_payloads,
+        synth_video_payloads,
     )
 
     ids = spark.range(0, 64).withColumnRenamed("id", "doc_id").coalesce(1)
     n = spark.sparkContext.defaultParallelism
-    assert synth_png_payloads(ids).rdd.getNumPartitions() == n
-    assert synth_jpeg_payloads(ids).rdd.getNumPartitions() == n
-
-
-# -- GIF: the third entropy-coded codec (round-10) ---------------------------
-
-
-def test_gif_lzw_and_round_trips():
-    """Variable-width LZW round-trips across code sizes and stream
-    lengths (including 12-bit-cap dictionary resets), GIF round-trips
-    with palette indirection both plain and interlaced, and the
-    front-door dispatch routes GIF8x signatures."""
-    import numpy as np
-
-    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.multimodal import (
-        _lzw_decode,
-        _lzw_encode,
-        decode_gif,
-        decode_image,
-        encode_gif,
-    )
-
-    rng = np.random.RandomState(5)
-    for mcs in (2, 3, 8):
-        for n in (1, 10, 500, 20000):
-            data = rng.randint(0, 1 << mcs, n).astype(np.uint8).tobytes()
-            assert _lzw_decode(_lzw_encode(data, mcs), mcs, n) == data, (mcs, n)
-
-    for d in (0, 3, 7, 11):
-        w, h = 5 + d % 12, 4 + d % 9
-        x = np.arange(w)[None, :]
-        y = np.arange(h)[:, None]
-        idx = ((x + 2 * y + d) % 8).astype(np.uint8)
-        i = np.arange(8)
-        pal = np.stack(
-            [(37 * i + d) % 256, (11 * i + 2 * d) % 256, (53 * i + 3 * d) % 256],
-            axis=1,
-        ).astype(np.uint8)
-        for inter in (False, True):
-            payload = encode_gif(idx, pal, interlace=inter)
-            assert (decode_gif(payload) == pal[idx]).all(), (d, inter)
-            assert (decode_image(payload) == pal[idx]).all()
-
-
-def test_gif_corruption_and_seams():
-    import numpy as np
-
-    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.multimodal import (
-        decode_gif,
-        encode_gif,
-    )
-
-    idx = np.zeros((6, 7), dtype=np.uint8)
-    idx[2, 3] = 5
-    pal = np.arange(24, dtype=np.uint8).reshape(8, 3)
-    good = encode_gif(idx, pal)
-    # GIF89a extension blocks (e.g. a GCE) are skipped structurally
-    gce = b"\x21\xf9\x04\x00\x00\x00\x00\x00"
-    with_ext = good[:13 + 24] + gce + good[13 + 24:]
-    assert (decode_gif(b"GIF89a" + with_ext[6:]) == pal[idx]).all()
-    # truncations are loud
-    for cut in (10, 13 + 10, len(good) - 3):
-        with pytest.raises(ValueError):
-            decode_gif(good[:cut])
-    # a second image descriptor (animation) is the documented seam
-    img_at = good.index(b"\x2c")
-    anim = good[:-1] + good[img_at:-1] + b"\x3b"
-    with pytest.raises(NotImplementedError, match="multi-image"):
-        decode_gif(anim)
-    # not a GIF
-    with pytest.raises(NotImplementedError, match="signature"):
-        decode_gif(b"BM......")
-
-
-def test_q150_matches_oracle(spark):
-    from real_time_data_pipeline_for_restaurant_analytics_spark.registry import (
-        all_queries,
-    )
-
-    from .oracle_check import compare
-
-    q = all_queries()["q150_gif_decode_stats"]
-    assert compare(spark, "q150", q.build, q.oracle, "/root/testdata/sf0.001") == []
-
-
-def test_png_palette_depth16_rejected():
-    """ADVICE r11: color type 3 (palette) with bit depth 16 is illegal
-    per the PNG spec (palette indices cap at 8 bits) — the validator
-    must reject it instead of decoding 16-bit samples as indices."""
-    import struct
-    import zlib
-
-    import pytest
-
-    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.multimodal import (
-        decode_png,
-    )
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + tag
-            + data
-            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", 1, 1, 16, 3, 0, 0, 0)
-    payload = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"PLTE", b"\x00\x00\x00")
-        + chunk(b"IDAT", zlib.compress(b"\x00\x00\x00"))
-        + chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="palette"):
-        decode_png(payload)
-
-
-def test_gif89a_gce_transparency_round_trip():
-    """Round-11 (verdict item 6): a GIF89a Graphic Control Extension
-    declaring a transparent index must surface as an alpha channel —
-    transparent pixels alpha=0, all others 255, RGB unchanged — in
-    both sequential and interlaced streams; a GCE with the
-    transparency flag CLEAR must not add alpha; plain GIF87a output
-    stays 3-channel."""
-    import numpy as np
-
-    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.multimodal import (
-        decode_gif,
-        encode_gif,
-        encode_gif89a_transparent,
-    )
-
-    rng = np.random.default_rng(7)
-    pal = rng.integers(0, 256, (8, 3), dtype=np.uint8)
-    idx = rng.integers(0, 8, (9, 13), dtype=np.uint8)
-    idx[0, 0] = 3  # make sure the transparent index occurs
-    for il in (False, True):
-        out = decode_gif(encode_gif89a_transparent(idx, pal, 3, interlace=il))
-        assert out.shape == (9, 13, 4), il
-        assert (out[:, :, :3] == pal[idx]).all(), il
-        assert (out[:, :, 3] == np.where(idx == 3, 0, 255)).all(), il
-    # GCE present but transparency flag clear → still RGB
-    payload = bytearray(encode_gif89a_transparent(idx, pal, 3))
-    at = payload.index(bytes([0x21, 0xF9, 0x04]))
-    payload[at + 3] = 0x00  # clear the transparency flag
-    assert decode_gif(bytes(payload)).shape == (9, 13, 3)
-    # plain 87a unchanged
-    assert decode_gif(encode_gif(idx, pal)).shape == (9, 13, 3)
-
-
-def test_gif_truncated_gce_raises_valueerror():
-    """Review r11: a GIF89a stream cut off inside a GCE sub-block must
-    fail as the decoder's documented corruption type (ValueError),
-    never IndexError."""
-    import pytest
-
-    import numpy as np
-
-    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.multimodal import (
-        decode_gif,
-        encode_gif89a_transparent,
-    )
-
-    pal = np.zeros((4, 3), dtype=np.uint8)
-    idx = np.zeros((3, 3), dtype=np.uint8)
-    full = encode_gif89a_transparent(idx, pal, 1)
-    at = full.index(bytes([0x21, 0xF9, 0x04]))
-    for cut in (at + 3, at + 4, at + 6):  # inside the GCE block body
-        with pytest.raises(ValueError, match="truncated"):
-            decode_gif(full[:cut])
+    for synth in (synth_image_payloads, synth_audio_payloads, synth_video_payloads):
+        assert synth(ids).rdd.getNumPartitions() == n, synth.__name__

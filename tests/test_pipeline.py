@@ -313,6 +313,36 @@ def test_stage_append_is_crash_retry_idempotent(spark, tmp_path):
     assert spark.read.parquet(stage_path).count() == 5  # 2 + grown file's 3
 
 
+def test_batch_duplicate_keys_keep_the_later_row(spark, tmp_path):
+    """C6 end to end: one run_entity (one merge_entity_batch call) over
+    a file holding two rows of one key leaves one clean row and one
+    current dim row for it, the later one by modified stamp. apply_scd2
+    itself no longer dedups, so this pins the batch dedup upstream."""
+    from real_time_data_pipeline_for_restaurant_analytics_spark.pipeline.runner import (
+        run_entity,
+    )
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    src = tmp_path / "menu.csv"
+    src.write_text(
+        "MenuID,RestaurantID,ItemName,Description,Price,Category,"
+        "Availability,ItemType,Rating,CreatedDate,ModifiedDate\n"
+        "1,101,Tikka Masala,Better,260.00,App,True,Veg,4.3,"
+        "2024-05-01 10:00:00,2024-05-01 12:00:00\n"
+        "2,101,Dal,Nice,220.00,Main,False,Veg,4.4,2024-05-01 10:00:00,\\N\n"
+        "1,101,Tikka,Good,250.00,App,True,Veg,4.2,"
+        "2024-05-01 10:00:00,2024-05-01 11:00:00\n"
+    )
+    run_entity(spark, wh, ENTITIES["menu"], str(src))
+    clean = wh.clean("menu").read(spark).collect()
+    assert sorted(r.menu_id for r in clean) == [1, 2]
+    assert {r.menu_id: r.item_name for r in clean}[1] == "Tikka Masala"
+    dim = wh.dim("menu").read(spark).collect()
+    assert sorted(r.menu_id for r in dim) == [1, 2]
+    cur = [r for r in dim if r.menu_id == 1 and r.is_current]
+    assert len(cur) == 1 and cur[0].item_name == "Tikka Masala"
+
+
 def test_snapshot_write_keeps_previous_and_locks(spark, tmp_path):
     """Review r8: keep_versions clamps to >= 2 (the change feed's
     v_latest-1 must survive the write that supersedes it), and writes
