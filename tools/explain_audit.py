@@ -42,6 +42,11 @@ AUDIT = [
      "1-row broadcast cross; z-value math is whole-stage codegen."),
     ("q108_image_decode_stats", "Multimodal decode is ArrowEvalPython/"
      "MapInPandas (vectorized batches), never BatchEvalPython."),
+    ("q146_png_decode_stats", "Compressed-codec decode (PNG inflate + "
+     "unfilter) keeps the exact q108 plan shape: two MapInPandas "
+     "stages plus the deliberate 8-byte-ids RoundRobin fan-out "
+     "(spread_ids, round 10 — full decode parallelism at any corpus "
+     "split count); payload bytes still never exchange."),
     ("q115_simhash64_pairs", "Production-width simhash: banding + "
      "value-level WindowGroupLimit cap run map-side before the "
      "candidate shuffle."),
