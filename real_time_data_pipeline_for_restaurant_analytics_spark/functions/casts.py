@@ -15,29 +15,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Snowflake datetime format tokens → Spark (JDK DateTimeFormatter).
-_FMT_MAP = [
-    ("YYYY", "yyyy"),
-    ("HH24", "HH"),
-    ("MI", "mm"),
-    ("SS", "ss"),
-    ('"T"', "'T'"),
-    ("FF6", "SSSSSS"),
-    ("FF3", "SSS"),
-    ("MM", "MM"),
-    ("DD", "dd"),
-]
-
-
-def snowflake_fmt_to_spark(fmt: str) -> str:
-    """Translate the reference's TO_TIMESTAMP format strings
-    (e.g. ``'YYYY-MM-DD"T"HH24:MI:SS.FF6'`` at `04:150-151`) to Spark."""
-    out = fmt
-    for sf, sp in _FMT_MAP:
-        out = out.replace(sf, sp)
-    return out
-
-
 def try_to_number(col: Column | str) -> Column:
     """TRY_TO_NUMBER → bigint-or-null (`07:102`)."""
     c = F.col(col) if isinstance(col, str) else col
@@ -48,11 +25,6 @@ def try_to_decimal(col: Column | str, precision: int = 10, scale: int = 2) -> Co
     """TRY_TO_DECIMAL(x, p, s) (`03:146`, `10:66-69`)."""
     c = F.col(col) if isinstance(col, str) else col
     return c.try_cast(f"decimal({precision},{scale})")
-
-
-def try_to_double(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return c.try_cast("double")
 
 
 def try_to_boolean(col: Column | str) -> Column:

@@ -5,11 +5,9 @@ The reference encodes geography/device enrichment as big CASE ladders
 PII masking as column policies (`01 Create DB+Schema.sql:42-60`).
 
 Spark-first choices:
-- small literal mappings → broadcast-join against a literal DataFrame
-  (``case_map``): Catalyst folds it to a broadcast hash join, the
-  mapping is data not code, and at 100 TB a 30-row broadcast beats a
-  30-branch codegen CASE for maintainability at equal cost. A
-  ``when()``-chain variant is provided for the narrow cases.
+- small literal mappings → a ``when()`` chain built from the mapping
+  (``case_map``): the mapping is data, not code, and the chain stays
+  inside whole-stage codegen.
 - masking → view-layer rewrite (OSS Spark has no column policies):
   ``mask_columns`` rewrites tagged columns to literal masks.
 """
@@ -18,7 +16,7 @@ from __future__ import annotations
 
 from collections.abc import Iterable, Mapping
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -38,11 +36,6 @@ def case_map(
     if default is None:
         return expr
     return expr.otherwise(F.col(default) if isinstance(default, str) else F.lit(default))
-
-
-def mapping_df(spark: SparkSession, mapping: Mapping[str, str], key: str, value: str) -> DataFrame:
-    """Literal mapping as a broadcastable DataFrame (P3 at scale)."""
-    return spark.createDataFrame(list(mapping.items()), schema=f"{key} string, {value} string")
 
 
 def flag_in(col: Column | str, values: Iterable[str], yes: str = "Y", no: str = "N") -> Column:

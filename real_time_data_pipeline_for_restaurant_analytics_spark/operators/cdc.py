@@ -1,15 +1,14 @@
-"""Snapshot-diff change-data-capture: classify every key across two
-snapshots of an aggregate state as insert / delete / update /
+"""Snapshot-diff change-data-capture (q90): classify every key across
+two snapshots of an aggregate state as insert / delete / update /
 unchanged.
 
 This is the batch complement of the reference's stream-driven MERGE
 surface (SURVEY §2.5; streams + 3-branch MERGE,
 `02 Location Entity.sql:29-32`, `order_proc.sql:195-303`): when no
 change feed exists, the only way to derive one is to diff two full
-snapshots. The diff is ONE full-outer shuffle join on the key with
-null-safe value comparison — the same join shape MERGE itself costs —
-so at 100 TB it scales exactly like the merge it feeds, and both
-snapshot aggregates are map-side partial before the join.
+snapshots. q90's two snapshots are windows of one table, so the diff
+folds into ONE scan and ONE key shuffle. The row-level diff of two
+separate snapshots is ``operators/merge.change_feed``.
 
 All compared values are integer (counts, cents), so the
 changed/unchanged verdict is engine-exact, and absent sides are
@@ -29,57 +28,6 @@ from ..registry import register
 
 def _cents(col: str) -> Column:
     return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key: list[str],
-    value_cols: list[str],
-) -> DataFrame:
-    """Full-outer diff of two keyed states. Emits one row per key in
-    either snapshot with ``change_type`` ∈ {insert, delete, update,
-    unchanged}; value columns come out as ``old_<c>`` / ``new_<c>``
-    with -1 for the absent side — callers' value columns must be
-    nonnegative or the sentinel is ambiguous (fine for the counts and
-    cents used here). An empty ``value_cols`` degrades cleanly to a
-    pure existence diff (insert/delete/unchanged). Single shuffle on
-    the key."""
-    o = old.select(
-        *[F.col(k) for k in key],
-        F.lit(True).alias("_in_old"),
-        *[F.col(c).cast("bigint").alias(f"old_{c}") for c in value_cols],
-    )
-    n = new.select(
-        *[F.col(k) for k in key],
-        F.lit(True).alias("_in_new"),
-        *[F.col(c).cast("bigint").alias(f"new_{c}") for c in value_cols],
-    )
-    j = o.join(n, on=key, how="full_outer")
-    in_old = F.col("_in_old").isNotNull()
-    in_new = F.col("_in_new").isNotNull()
-    changed = F.lit(False)  # empty value_cols = pure existence diff
-    for c in value_cols:
-        # NULL-SAFE inequality (review r8): the docstring promises
-        # null-safe value comparison, but `!=` evaluates NULL vs value
-        # to NULL → 'unchanged' with contradictory old/new columns
-        changed = changed | ~F.col(f"old_{c}").eqNullSafe(F.col(f"new_{c}"))
-    return j.select(
-        *[F.col(k) for k in key],
-        F.when(~in_old, F.lit("insert"))
-        .when(~in_new, F.lit("delete"))
-        .when(changed, F.lit("update"))
-        .otherwise(F.lit("unchanged"))
-        .alias("change_type"),
-        *[
-            col
-            for c in value_cols
-            for col in (
-                F.coalesce(F.col(f"old_{c}"), F.lit(-1)).cast("bigint").alias(f"old_{c}"),
-                F.coalesce(F.col(f"new_{c}"), F.lit(-1)).cast("bigint").alias(f"new_{c}"),
-            )
-        ],
-    )
 
 
 # Two one-year order windows, offset by a year: customers active only
@@ -131,9 +79,8 @@ def q90_snapshot_diff_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is a flag, the per-window (count, cents-sum) are conditional
     # aggregates, and "key absent from a snapshot" is exactly
     # n_orders = 0 (every present key has >= 1 order). Results are
-    # row-identical to snapshot_diff(snap(old), snap(new)) — that
-    # generic two-frame operator remains for genuinely separate
-    # snapshots (tests pin it); this query's windows share a scan.
+    # row-identical to a full-outer diff of the two window aggregates
+    # (the oracle's formulation).
     orders = load(spark, sf_dir, "orders")
     in_old = (F.col("o_orderdate") >= F.lit(_OLD_LO)) & (
         F.col("o_orderdate") < F.lit(_OLD_HI)

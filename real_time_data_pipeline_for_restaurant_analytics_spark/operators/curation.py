@@ -608,15 +608,24 @@ def source_cap_sample(
     trick as q32's salted agg — pre-rank within (source, salt) and keep
     cap candidates per salt before the final per-source rank — worth it
     only when a single source exceeds a task's row budget."""
+    return (
+        _cap_ranked(docs, source_col, id_col)
+        .filter(F.col("_rk") <= cap)
+        .drop("_rk")
+    )
+
+
+def _cap_ranked(docs: DataFrame, source_col: str, id_col: str) -> DataFrame:
+    """The domain cap's SINGLE rank source: every doc with ``_rk``, its
+    row number within its source in md5('cap:'+id) order (ties by id).
+    :func:`source_cap_sample` filters this frame; the q78 audit
+    aggregates it (it needs dropped-doc accounting, so it cannot
+    consume the filtered output)."""
     from pyspark.sql import Window
 
     rnd = F.md5(F.concat(F.lit("cap:"), F.col(id_col).cast("string")))
     w = Window.partitionBy(source_col).orderBy(rnd, id_col)
-    return (
-        docs.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= cap)
-        .drop("_rk")
-    )
+    return docs.withColumn("_rk", F.row_number().over(w))
 
 
 @register(
@@ -640,12 +649,8 @@ GROUP BY source ORDER BY source
     "accounting.",
 )
 def q78_source_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     d = load(spark, sf_dir, "documents").select("doc_id", "source")
-    rnd = F.md5(F.concat(F.lit("cap:"), F.col("doc_id").cast("string")))
-    w = Window.partitionBy("source").orderBy(rnd, "doc_id")
-    ranked = d.withColumn("_rk", F.row_number().over(w))
+    ranked = _cap_ranked(d, "source", "doc_id")
     return (
         ranked.groupBy("source")
         .agg(

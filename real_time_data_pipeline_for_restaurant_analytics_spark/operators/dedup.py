@@ -17,8 +17,9 @@ JVM-side and whole-stage-codegen friendly):
                 → band-bucket self-join. The *scale* path: candidate
                 generation is linear in corpus size + band-bucket
                 collisions; verify candidates with the Jaccard kernel.
-- SimHash:      16-bit sign-aggregated token-hash fingerprint;
-                hamming-close fingerprints → near-dups.
+- SimHash:      64-bit sign-aggregated token-hash fingerprint;
+                4x16-bit banding surfaces hamming-close fingerprints
+                → near-dups.
 
 All hash math is md5-derived so DuckDB oracles reproduce values
 exactly (Spark's xxhash64/hash are engine-private; md5 is universal).
@@ -420,38 +421,6 @@ def lsh_bucket_stats(
     )
 
 
-def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """16-bit SimHash over word tokens (with multiplicity).
-
-    Token hash = first 4 hex chars of md5 → 16-bit int; per bit j the
-    weighted sign-sum decides bit j of the fingerprint.
-
-    Fully map-side: the token-hash array stays inside the row and each
-    bit's sign-sum is an ``aggregate`` fold — no explode (which would
-    multiply rows by token count) and no shuffle at any corpus size.
-    """
-    base = spread(df, id_col).select(
-        F.col(id_col),
-        F.expr(
-            f"transform(split({text_col}, ' '),"
-            " t -> CAST(conv(substring(md5(t), 1, 4), 16, 10) AS INT))"
-        ).alias("harr"),
-    )
-    bit_sums = [
-        F.expr(
-            "aggregate(harr, 0,"
-            f" (acc, h) -> acc + CASE WHEN (shiftright(h, {j}) & 1) = 1 THEN 1 ELSE -1 END)"
-        ).alias(f"s{j}")
-        for j in range(16)
-    ]
-    agg = base.select(F.col(id_col), *bit_sums)
-    fingerprint = None
-    for j in range(16):
-        bit = F.when(F.col(f"s{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        fingerprint = bit if fingerprint is None else fingerprint + bit
-    return agg.select(F.col(id_col), fingerprint.cast("int").alias("simhash"))
-
-
 def connected_components(
     edges: DataFrame, id1: str = "id1", id2: str = "id2", max_iter: int = 25
 ) -> DataFrame:
@@ -627,35 +596,6 @@ def q21_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_candidates(bands, "doc_id").orderBy("id1", "id2")
 
 
-def _simhash_oracle() -> str:
-    sums = ",\n         ".join(
-        f"SUM(CASE WHEN (h >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS s{j}" for j in range(16)
-    )
-    fp = " + ".join(f"CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END" for j in range(16))
-    return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-), hashed AS (
-  SELECT doc_id, CAST(('0x' || substr(md5(tok), 1, 4)) AS INT) AS h FROM toks
-), sums AS (
-  SELECT doc_id,
-         {sums}
-  FROM hashed GROUP BY doc_id
-)
-SELECT doc_id, CAST({fp} AS INT) AS simhash FROM sums ORDER BY doc_id
-"""
-
-
-@register(
-    "q22_simhash_fingerprints",
-    oracle=_simhash_oracle(),
-    doc="16-bit SimHash document fingerprints (sign-aggregated token hashes).",
-)
-def q22_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    return simhash16(d, "doc_id", "text").orderBy("doc_id")
-
-
 DEFAULT_MAX_IDS_PER_VALUE = 100_000
 
 
@@ -665,29 +605,31 @@ def simhash_hamming_pairs(
     max_hamming: int = 3,
     n_bands: int = 4,
     max_ids_per_value: int = DEFAULT_MAX_IDS_PER_VALUE,
-    fp_bits: int = 16,
     max_bucket_values: int = 1 << 16,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance, via bit-banding on
-    DISTINCT fingerprint VALUES.
+    """Near-dup pairs by 64-bit SimHash hamming distance (the
+    :func:`simhash64` fingerprint), via bit-banding on DISTINCT
+    fingerprint VALUES.
 
-    A 16-bit fingerprint space holds ≤ 2^16 distinct values no matter
-    how many documents exist, so the expensive steps — banding, pair
-    candidacy, hamming verification — all run at the *value* level
-    (bounded work), and only verified value pairs expand to id pairs
-    (output-optimal: id-level work is proportional to the result).
+    The expensive steps — banding, pair candidacy, hamming
+    verification — all run at the *value* level, and only verified
+    value pairs expand to id pairs (output-optimal: id-level work is
+    proportional to the result).
 
-    Banding: the fingerprint splits into ``n_bands`` nibbles; by
-    pigeonhole, two values within hamming distance ``n_bands - 1``
-    agree on ≥1 nibble, so bucketing on (band_idx, nibble) has PERFECT
-    recall for ``max_hamming <= n_bands - 1``. Candidates are verified
-    with ``bit_count(xor)`` BEFORE any id expansion. Identical
-    fingerprints (hamming 0) expand directly from their id group.
+    Banding: the fingerprint splits into ``n_bands`` bands of
+    ``64 // n_bands`` bits; by pigeonhole, two values within hamming
+    distance ``n_bands - 1`` agree on ≥1 band, so bucketing on
+    (band_idx, band bits) has PERFECT recall for
+    ``max_hamming <= n_bands - 1``. Candidates are verified with
+    ``bit_count(xor)`` BEFORE any id expansion. Identical fingerprints
+    (hamming 0) expand directly from their id group. ``simhash`` is
+    cast to BIGINT on entry, so a narrower integer fingerprint bands
+    as its sign-extended 64-bit value.
 
     ``max_ids_per_value`` bounds the per-fingerprint id array (the
     ``max_bucket_size`` pattern from :func:`lsh_candidates`): a
     pathologically hot fingerprint — e.g. every empty/boilerplate doc
-    hashing to the same 16 bits — would otherwise put ALL its ids in
+    hashing to the same bits — would otherwise put ALL its ids in
     ONE ``collect_list`` row (multi-GB at corpus scale) and then emit
     size^2 intra pairs. Ids past the cap are dropped BEFORE the array
     is built (row_number filter, so the oversized buffer never
@@ -700,26 +642,13 @@ def simhash_hamming_pairs(
     sides of it). Use :func:`simhash_value_stats` to observe what a
     cap would drop.
 
-    ``fp_bits`` selects the fingerprint width: 16 (gate/audit shape,
-    :func:`simhash16`) or 64 (the production shape, :func:`simhash64`
-    — a 16-bit space saturates around 2^16 docs, collapsing unrelated
-    documents onto shared values; 64 bits keeps distinct content
-    distinct at corpus scale). The banding algebra is IDENTICAL — only
-    the band width (``fp_bits // n_bands``) and the value-frame layout
-    change: a 16-bit value frame is bounded by 2^16 rows at any corpus
-    size (so it coalesces to a handful of partitions), while a 64-bit
-    value frame grows with distinct content and keeps full shuffle
-    parallelism.
-
     ``max_bucket_values`` caps how many DISTINCT fingerprint values a
-    (band_idx, band_hash) bucket may expand. At fp_bits=16 a band
-    bucket holds at most 2^(16-width) = 2^12 values, so the default
-    cap is unreachable and recall is unconditionally exact. At
-    fp_bits=64 a bucket can in principle hold up to 2^48 values, so
-    the cap is a REAL production guard: a band value shared by more
-    than 2^16 distinct fingerprints carries no discriminating signal
-    (the q21 ``max_bucket_size`` story at the value level), and its
-    pairs are dropped rather than expanded. Recall is exact UP TO that
+    (band_idx, band_hash) bucket may expand. A 16-bit band bucket can
+    in principle hold up to 2^48 values, so the cap is a REAL
+    production guard: a band value shared by more than 2^16 distinct
+    fingerprints carries no discriminating signal (the q21
+    ``max_bucket_size`` story at the value level), and its pairs are
+    dropped rather than expanded. Recall is exact UP TO that
     documented cap — audit a specific corpus with
     :func:`lsh_bucket_stats` over the value-band frame before trusting
     exactness, exactly as for MinHash buckets. (The same contract
@@ -728,35 +657,29 @@ def simhash_hamming_pairs(
     """
     from pyspark.sql import Window
 
-    width = fp_bits // n_bands
+    width = 64 // n_bands
     w = Window.partitionBy("simhash").orderBy(id_col)
     bounded = (
-        fp.select("simhash", id_col)
+        # BIGINT before banding: shiftrightunsigned on an INT masks the
+        # shift to 5 bits, so the bands at shifts 32 and 48 would
+        # repeat the low bands
+        fp.select(F.col("simhash").cast("bigint").alias("simhash"), id_col)
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= max_ids_per_value)
         .drop("_rn")
     )
     # vals is consumed by FOUR branches (bands, both value-pair join
     # sides, intra) — without a lineage cut each branch re-runs the
-    # corpus scan + fingerprint fold. The frame itself is bounded by
-    # the 2^16 fingerprint space, so checkpointing is cheap at any
-    # corpus size and turns four corpus scans into one.
-    # coalesce(4): the value frame is bounded by the 2^16 fingerprint
-    # space at ANY corpus size, so a handful of partitions is the right
-    # layout for every downstream value-level stage (32-task scheduling
-    # overhead dominated the tiny stages — measured 13% off the query).
-    # The coalesce sits AFTER the agg's shuffle boundary, so the
-    # corpus-side window/agg keep full parallelism.
-    vals = bounded.groupBy("simhash").agg(
-        F.sort_array(F.collect_list(F.col(id_col))).alias("ids")
+    # corpus scan + fingerprint fold; checkpointing turns four corpus
+    # scans into one.
+    vals = (
+        bounded.groupBy("simhash")
+        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("ids"))
+        .localCheckpoint()
     )
-    if fp_bits <= 16:
-        vals = vals.coalesce(4)
-    vals = vals.localCheckpoint()
     # shiftrightunsigned, not shiftright: a 64-bit fingerprint uses the
     # sign bit as an ordinary bit, and an arithmetic shift would smear
-    # it across the top band (for the 16-bit nonneg ints the two shifts
-    # are identical).
+    # it across the top band.
     bands = vals.select(
         F.col("simhash"),
         F.explode(
@@ -825,51 +748,11 @@ def simhash_value_stats(
     )
 
 
-def _simhash_pairs_oracle(max_hamming: int = 3) -> str:
-    # same fingerprint CTE as q22's oracle; the oracle verifies ALL
-    # pairs by exact hamming — banding's perfect recall for d<=3 makes
-    # the two formulations equivalent
-    sums = ",\n         ".join(
-        f"SUM(CASE WHEN (h >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS s{j}" for j in range(16)
-    )
-    fp = " + ".join(f"CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END" for j in range(16))
-    return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-), hashed AS (
-  SELECT doc_id, CAST(('0x' || substr(md5(tok), 1, 4)) AS INT) AS h FROM toks
-), sums AS (
-  SELECT doc_id,
-         {sums}
-  FROM hashed GROUP BY doc_id
-), fp AS (
-  SELECT doc_id, CAST({fp} AS INT) AS simhash FROM sums
-)
-SELECT a.doc_id AS id1, b.doc_id AS id2,
-       CAST(bit_count(xor(CAST(a.simhash AS BIGINT), CAST(b.simhash AS BIGINT))) AS INT) AS hamming
-FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(CAST(a.simhash AS BIGINT), CAST(b.simhash AS BIGINT))) <= {max_hamming}
-ORDER BY id1, id2
-"""
-
-
-@register(
-    "q54_simhash_hamming_pairs",
-    oracle=_simhash_pairs_oracle(),
-    doc="SimHash near-dup pairs (hamming <= 3) via 4x4-bit banding: "
-    "perfect recall by pigeonhole, candidates verified with "
-    "bit_count(xor) — the linear-scale hamming search shape.",
-)
-def q54_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    fp = simhash16(d, "doc_id", "text")
-    return simhash_hamming_pairs(fp, "doc_id").orderBy("id1", "id2")
-
-
 def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """64-bit SimHash over word tokens — the PRODUCTION fingerprint
-    width (q54's 16-bit shape is the gate/audit twin; its value space
-    saturates around 2^16 documents, measured 7.48x cost at 10x data).
+    """64-bit SimHash over word tokens. A 16-bit fingerprint space
+    saturates around 2^16 documents, collapsing unrelated documents
+    onto shared values; 64 bits keep distinct content distinct at
+    corpus scale.
 
     Token hash = first 16 hex chars of md5, carried as two 32-bit
     halves (``lo`` = chars 1-8, ``hi`` = chars 9-16) so every
@@ -880,9 +763,9 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     complement: bit 63 contributes ``-2^63``, so the full 64-bit
     pattern round-trips through both engines' BIGINT exactly.
 
-    Same shape as :func:`simhash16`: fully map-side, the token-hash
-    array stays inside the row, each bit's sign-sum is an ``aggregate``
-    fold — no explode, no shuffle at any corpus size.
+    Fully map-side: the token-hash array stays inside the row and each
+    bit's sign-sum is an ``aggregate`` fold — no explode (which would
+    multiply rows by token count) and no shuffle at any corpus size.
     """
     base = spread(df, id_col).select(
         F.col(id_col),
@@ -955,18 +838,18 @@ ORDER BY id1, id2
 @register(
     "q115_simhash64_pairs",
     oracle=_simhash64_pairs_oracle(),
-    doc="PRODUCTION-width SimHash near-dup pairs: 64-bit fingerprints, "
-    "4x16-bit banding, hamming <= 3 — identical banding algebra to q54 "
-    "but the value space no longer saturates with corpus size, so the "
-    "value-level kernel stays output-proportional at 100 TB. Recall is "
-    "exact up to the documented hot-bucket caps (max_bucket_values / "
-    "max_ids_per_value — unreachable at 16 bits, REAL degenerate-value "
-    "guards at 64; audit with lsh_bucket_stats/simhash_value_stats).",
+    doc="SimHash near-dup pairs: 64-bit fingerprints, 4x16-bit banding, "
+    "hamming <= 3 — perfect recall by pigeonhole, candidates verified "
+    "with bit_count(xor) at the value level, so the kernel stays "
+    "output-proportional at 100 TB. Recall is exact up to the documented "
+    "hot-bucket caps (max_bucket_values / max_ids_per_value — "
+    "degenerate-value guards; audit with "
+    "lsh_bucket_stats/simhash_value_stats).",
 )
 def q115_simhash64_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     fp = simhash64(d, "doc_id", "text")
-    return simhash_hamming_pairs(fp, "doc_id", fp_bits=64).orderBy("id1", "id2")
+    return simhash_hamming_pairs(fp, "doc_id").orderBy("id1", "id2")
 
 
 def _clusters_cte() -> str:

@@ -9,9 +9,9 @@ violation/profile rows instead of eyeballed result grids.
 
 - column profile: null counts, distinct counts, min/max per column —
   one pass, no per-column jobs.
-- referential orphans: left-anti FK→PK checks; at scale the anti-join
-  broadcasts the parent key set when small, else shuffles on the key
-  like any equi-join.
+- referential orphans (q45): FK→PK orphan counts from one left join
+  per relationship; at scale the join broadcasts the parent key set
+  when small, else shuffles on the key like any equi-join.
 - uniqueness: delegated to operators/merge.duplicate_key_audit (A4).
 """
 
@@ -43,15 +43,6 @@ def column_profile(df: DataFrame, cols: list[str]) -> DataFrame:
         )
     agg = df.agg(F.array(*pieces).alias("p"))
     return agg.select(F.explode("p").alias("p")).select("p.*")
-
-
-def referential_orphans(
-    child: DataFrame, parent: DataFrame, fk: str, pk: str
-) -> DataFrame:
-    """Child rows whose FK has no parent PK (nulls are not orphans)."""
-    return child.filter(F.col(fk).isNotNull()).join(
-        parent.select(F.col(pk).alias(fk)).distinct(), on=fk, how="left_anti"
-    )
 
 
 @register(
@@ -480,7 +471,7 @@ def q99_mad_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     # daily feeds FOUR lineage branches (med, dev, dev-inside-mad,
     # final) — without a cut each branch re-scans events. The frame is
     # days-sized, so the checkpoint is ~free and the corpus scan runs
-    # once (the r4 q54/q95 recipe; q99's only real cost is that scan).
+    # once (the q115/q95 recipe; q99's only real cost is that scan).
     daily = e.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events")
     ).localCheckpoint()

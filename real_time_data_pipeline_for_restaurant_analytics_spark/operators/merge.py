@@ -20,8 +20,8 @@ Semantics carried over from the reference:
   duplicate source keys; we keep latest-per-key by a deterministic
   ordering column.
 - SCD2 three-branch merge (C4): close-out / new-version / first
-  insert, with `first_start_from_created` mirroring v3's
-  `eff_start = CREATED_DT` on first insert (`order_proc.sql:300`).
+  insert, with `created_col` mirroring v3's `eff_start = CREATED_DT`
+  on first insert (`order_proc.sql:300`).
 """
 
 from __future__ import annotations
@@ -134,8 +134,7 @@ def merge_upsert(
 class Scd2Config:
     key: list[str]  # business key
     attrs: list[str]  # tracked (type-2) attributes
-    created_col: str | None = None  # source created-ts for first insert
-    first_start_from_created: bool = True  # v3 semantics (order_proc.sql:300)
+    created_col: str | None = None  # first-insert eff_start; None → batch_ts
 
 
 def scd2_empty_like(typed_batch: DataFrame) -> DataFrame:
@@ -179,11 +178,7 @@ def apply_scd2(
     # an existing but EMPTY dim needs no probe: its current side is
     # empty, so the join path below yields exactly these first inserts
     if dim is None:
-        first_start = (
-            F.col(cfg.created_col)
-            if (cfg.first_start_from_created and cfg.created_col)
-            else batch_ts
-        )
+        first_start = F.col(cfg.created_col) if cfg.created_col else batch_ts
         return (
             batch.withColumn("eff_start_date", first_start.cast("timestamp"))
             .withColumn("eff_end_date", F.lit(None).cast("timestamp"))
@@ -228,11 +223,7 @@ def apply_scd2(
     )
 
     # New versions (branch b) + first inserts (branch c).
-    first_start = (
-        F.col(f"s.{cfg.created_col}")
-        if (cfg.first_start_from_created and cfg.created_col)
-        else batch_ts
-    )
+    first_start = F.col(f"s.{cfg.created_col}") if cfg.created_col else batch_ts
     inserts = joined.filter((in_batch & ~in_dim) | (in_batch & in_dim & changed)).select(
         *[
             (

@@ -1186,4 +1186,4 @@ def q122_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = image_phash_frame(synth_near_dup_image_payloads(d)).withColumnRenamed(
         "phash", "simhash"
     )
-    return simhash_hamming_pairs(fp, "doc_id", fp_bits=64).orderBy("id1", "id2")
+    return simhash_hamming_pairs(fp, "doc_id").orderBy("id1", "id2")

@@ -854,58 +854,6 @@ def q120_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lm_bigram_score(load(spark, sf_dir, "documents")).orderBy("doc_id")
 
 
-def bpe_train_merges(
-    docs: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 3,
-) -> DataFrame:
-    """Byte-pair-encoding merge TRAINING (Sennrich et al. 2016): learn
-    the first ``n_merges`` merge rules from the corpus — the iterative
-    algorithm behind every BPE/WordPiece tokenizer, of which q93 is the
-    single-iteration candidate scan.
-
-    Algorithm per iteration: count adjacent symbol pairs across the
-    vocabulary weighted by word frequency, pick the most frequent pair
-    (ties: lexicographic), merge every non-overlapping occurrence
-    left-to-right, repeat on the merged vocabulary.
-
-    Scale shape — the corpus is touched ONCE: the first aggregation
-    folds it to a (word-repr, freq) vocabulary frame (Zipf-bounded,
-    not corpus-sized) which is localCheckpoint'd (the q50/q79 bounded
-    iterative-state pattern — the checkpoint cuts the exponential
-    lineage growth a naive N-deep self-referential plan would pay).
-    Every iteration then runs entirely on vocabulary-sized frames: one
-    explode + pair-count shuffle bounded by the pair vocabulary, a
-    1-row top-pair frame that rides into the merge as a broadcast
-    scalar cross (the q88/q99 declarative pattern — no driver
-    ``collect``), and a pure-codegen string rewrite.
-
-    The merge rewrite is exact BPE greedy left-to-right semantics in
-    ONE ``replace`` pass via the space-doubling trick: symbols are
-    space-delimited; doubling every delimiter makes pair occurrences
-    non-overlapping by construction (each match consumes one space of
-    each flanking pair, leaving the neighbor match its own), so
-    ``replace(replace(replace(r,' ','  '),' a  b ',' ab '),'  ',' ')``
-    merges "a a a" -> "aa a" exactly like the reference algorithm.
-
-    Returns one row per learned merge: (iteration, left_sym,
-    right_sym, pair_count), ordered by iteration.
-
-    Depth boundary: each rule costs one Spark job round (pair-count
-    shuffle + rewrite), so a production tokenizer's 30k+ merges means
-    30k sequential rounds — iteration COUNT, not per-iteration cost,
-    is this operator's scale wall. Use
-    :func:`bpe_train_merges_batched` (q138) for depth: it learns up
-    to M non-conflicting rules per round (measured: depth-64 in 8
-    rounds, SCALE_r07.md), and replays this trainer exactly at M=1.
-    """
-    _, merges = _bpe_states(docs, text_col, n_merges, apply_last=False)
-    out = merges[0].select(F.lit(1).cast("int").alias("iteration"), "*")
-    for i, m in enumerate(merges[1:], start=2):
-        out = out.unionByName(m.select(F.lit(i).cast("int").alias("iteration"), "*"))
-    return out.orderBy("iteration")
-
-
 def _bpe_vocab(docs: DataFrame, text_col: str) -> DataFrame:
     """Fold the corpus to its (word, spaced-symbol-repr, freq)
     vocabulary frame — the ONE corpus-sized scan of BPE training."""
@@ -949,47 +897,6 @@ def _state_pair_counts(wdf: DataFrame) -> DataFrame:
     return pairs.groupBy("left_sym", "right_sym").agg(
         F.sum("freq").cast("bigint").alias("pair_count")
     )
-
-
-def _bpe_states(
-    docs: DataFrame, text_col: str, n_merges: int, apply_last: bool
-) -> tuple[DataFrame, list[DataFrame]]:
-    """Shared BPE training loop (see :func:`bpe_train_merges` for the
-    algorithm and scale rationale). Returns the final vocabulary state
-    ``(w, r, freq)`` — ``r`` with all learned merges applied when
-    ``apply_last`` (the encode path), without the last rewrite
-    otherwise (training only needs the pairs) — plus the per-iteration
-    1-row learned-pair frames."""
-    # Vocabulary-sized iterative state: checkpoint so the corpus scan
-    # happens once and iteration i does not replay iterations 1..i-1.
-    state = _bpe_vocab(docs, text_col).localCheckpoint()
-
-    def top_pair(wdf: DataFrame) -> DataFrame:
-        return (
-            _state_pair_counts(wdf)
-            .orderBy(F.desc("pair_count"), "left_sym", "right_sym")
-            .limit(1)
-        )
-
-    merges = []
-    for i in range(1, n_merges + 1):
-        top = top_pair(state).localCheckpoint()
-        merges.append(top)
-        if i < n_merges or apply_last:
-            state = (
-                state.crossJoin(F.broadcast(top))
-                .select(
-                    "w",
-                    F.expr(
-                        "replace(replace(replace(r, ' ', '  '),"
-                        " ' '||left_sym||'  '||right_sym||' ',"
-                        " ' '||left_sym||right_sym||' '), '  ', ' ')"
-                    ).alias("r"),
-                    "freq",
-                )
-                .localCheckpoint()
-            )
-    return state, merges
 
 
 def quality_classifier_score(
@@ -1119,18 +1026,21 @@ def bpe_train_merges_batched(
     cand_k: int | None = None,
     round_stats: list | None = None,
 ) -> DataFrame:
-    """Batched BPE merge training: learn up to ``batch_m``
-    NON-CONFLICTING merge rules per Spark round, so tokenizer depth
-    costs ``rounds ≈ vocab_target / batch_m`` job rounds instead of
-    one round per rule — the iteration-COUNT wall of the sequential
-    trainer (:func:`bpe_train_merges`, q130) at production depth
-    (30k+ merges) falls to ~vocab/M rounds. Measured: depth-64
-    training in 8 rounds at M=8 (SCALE_r07.md).
+    """Byte-pair-encoding merge TRAINING (Sennrich et al. 2016), batched:
+    learn up to ``batch_m`` NON-CONFLICTING merge rules per Spark
+    round, so tokenizer depth costs ``rounds ≈ vocab_target /
+    batch_m`` job rounds instead of one round per rule — a production
+    tokenizer's 30k+ merges fall to ~vocab/M rounds. Measured:
+    depth-64 training in 8 rounds at M=8 (SCALE_r07.md). q93 is the
+    single-iteration candidate scan.
 
-    Per round, over the checkpointed vocabulary state:
+    The corpus is touched ONCE: the first aggregation folds it to a
+    (word-repr, freq) vocabulary frame (Zipf-bounded, not
+    corpus-sized) which is localCheckpoint'd, so every round runs on
+    vocabulary-sized frames. Per round, over that checkpointed state:
 
-    1. pair-count shuffle (identical kernel to q130, bounded by the
-       pair vocabulary);
+    1. frequency-weighted adjacent-pair-count shuffle, bounded by the
+       pair vocabulary;
     2. rank the top ``cand_k`` candidates (count DESC, pair — total
        order, deterministic);
     3. accept a candidate iff it shares NO symbol with any
@@ -1145,8 +1055,11 @@ def bpe_train_merges_batched(
     4. keep the first ``batch_m`` accepted, fold them into ONE
        vocabulary rewrite: the merge list rides in as a 1-row
        broadcast array and ``aggregate(ms, doubled, (acc, m) ->
-       replace(...))`` applies every rule in a single codegen pass
-       (space-doubling trick per :func:`bpe_train_merges`).
+       replace(...))`` applies every rule in a single codegen pass.
+       Symbols are space-delimited; doubling every delimiter makes
+       pair occurrences non-overlapping (each match consumes one
+       space of each flanking pair), so one ``replace`` per rule is
+       exact greedy left-to-right BPE: ``a a a`` merges to ``aa a``.
 
     Everything is declarative — no driver collect anywhere; the
     per-round state sync is the localCheckpoint of a ≤``batch_m``-row
@@ -1155,8 +1068,8 @@ def bpe_train_merges_batched(
     approximation: rules 2..M of a round are chosen from round-start
     counts rather than after rule 1 applies (their counts stay exact
     by construction; only the GREEDY ORDER can differ). ``batch_m=1``
-    reproduces the sequential trainer's merge table exactly (pinned
-    in tests).
+    is sequential BPE: one rule per round, the most frequent pair
+    (ties: lexicographic).
 
     ADAPTIVE cand_k (round-8, verdict item 4): with ``cand_k=None``
     the candidate pool starts at ``3*batch_m`` and, whenever symbol
@@ -1184,6 +1097,38 @@ def bpe_train_merges_batched(
     global rule index, the round it was learned in, its in-round
     acceptance rank, and its (exact) round-start count.
     """
+    from pyspark.sql import Window
+
+    _, rounds = _bpe_rounds(
+        docs, text_col, n_rounds, batch_m, cand_k, round_stats, apply_last=False
+    )
+    out = rounds[0]
+    for m in rounds[1:]:
+        out = out.unionByName(m)
+    return (
+        out.withColumn(
+            "iteration", F.row_number().over(Window.orderBy("round", "sel")).cast("int")
+        )
+        .select("iteration", "round", "sel", "left_sym", "right_sym", "pair_count")
+        .orderBy("iteration")
+    )
+
+
+def _bpe_rounds(
+    docs: DataFrame,
+    text_col: str,
+    n_rounds: int,
+    batch_m: int,
+    cand_k: int | None,
+    round_stats: list | None,
+    apply_last: bool,
+) -> tuple[DataFrame, list[DataFrame]]:
+    """The round loop of :func:`bpe_train_merges_batched` (see there
+    for the algorithm and its parameters). Returns the final
+    vocabulary state ``(w, r, freq)`` — with the last round's rewrite
+    applied only when ``apply_last`` (the encode path; training needs
+    just the rules) — plus one checkpointed
+    ``(round, sel, left_sym, right_sym, pair_count)`` frame per round."""
     from pyspark.sql import Window
 
     adaptive = cand_k is None
@@ -1247,7 +1192,7 @@ def bpe_train_merges_batched(
         if round_stats is not None:
             round_stats.append((rnd, round_k, int(accepted.count())))
         rounds.append(accepted)
-        if rnd < n_rounds:
+        if rnd < n_rounds or apply_last:
             marr = accepted.agg(
                 F.array_sort(
                     F.collect_list(
@@ -1273,16 +1218,7 @@ def bpe_train_merges_batched(
                 )
                 .localCheckpoint()
             )
-    out = rounds[0]
-    for m in rounds[1:]:
-        out = out.unionByName(m)
-    return (
-        out.withColumn(
-            "iteration", F.row_number().over(Window.orderBy("round", "sel")).cast("int")
-        )
-        .select("iteration", "round", "sel", "left_sym", "right_sym", "pair_count")
-        .orderBy("iteration")
-    )
+    return state, rounds
 
 
 def bpe_encode_stats(
@@ -1291,21 +1227,26 @@ def bpe_encode_stats(
     text_col: str = "text",
     n_merges: int = 3,
 ) -> DataFrame:
-    """BPE ENCODE: apply the merges learned by :func:`bpe_train_merges`
+    """BPE ENCODE: apply the first ``n_merges`` rules of sequential BPE
+    training (:func:`bpe_train_merges_batched` at ``batch_m=1``)
     back to the corpus and report per-document tokenization statistics
     — word count, symbol count before any merge (characters) and after
     all ``n_merges`` rules, and the ppm reduction. The train→apply
     loop every tokenizer build runs; the per-doc token count is what a
     packing/budgeting stage (q44) consumes.
 
-    Scale shape: training is vocabulary-bounded (q130); the encode is
-    ONE corpus-sized explode joined to the final vocabulary frame on
-    the word key (vocabulary side is the small one — broadcastable at
-    real vocab sizes) and one per-doc reduce. No per-row Python: the
-    merged symbol count is ``size(split(...))`` over the rewritten
-    vocabulary entry, computed once per DISTINCT word, not per token.
+    Scale shape: training is vocabulary-bounded (q138's round loop at
+    one rule per round; ``cand_k=1`` is fixed, so no adaptive
+    pool-size jobs run); the encode is ONE corpus-sized explode joined
+    to the final vocabulary frame on the word key (vocabulary side is
+    the small one — broadcastable at real vocab sizes) and one per-doc
+    reduce. No per-row Python: the merged symbol count is
+    ``size(split(...))`` over the rewritten vocabulary entry, computed
+    once per DISTINCT word, not per token.
     """
-    state, _ = _bpe_states(docs, text_col, n_merges, apply_last=True)
+    state, _ = _bpe_rounds(
+        docs, text_col, n_merges, batch_m=1, cand_k=1, round_stats=None, apply_last=True
+    )
     vocab = state.select(
         "w",
         F.size(F.split(F.trim(F.col("r")), " ")).cast("bigint").alias("n_sym"),
@@ -1340,7 +1281,8 @@ _BPE_MERGE_DUCK = (
 
 
 def _bpe_oracle_ctes(n_merges: int, apply_last: bool) -> str:
-    """The DuckDB CTE chain mirroring ``_bpe_states``: w0 (vocabulary)
+    """The DuckDB CTE chain mirroring sequential BPE training
+    (:func:`_bpe_rounds` at ``batch_m=1``): w0 (vocabulary)
     then p{i}/t{i} (pair counts / learned pair) and w{i} (rewritten
     vocabulary) per iteration, ``w`` key kept throughout."""
     pair_cte = """
@@ -1368,19 +1310,6 @@ t{i} AS (SELECT * FROM p{i} ORDER BY pair_count DESC, left_sym, right_sym LIMIT 
                 f"\nw{i} AS (SELECT w, {merged} AS r, freq FROM w{i - 1}, t{i})"
             )
     return ",".join(parts)
-
-
-def _bpe_oracle(n_merges: int = 3) -> str:
-    selects = [
-        f"SELECT CAST({i} AS INT) AS iteration, left_sym, right_sym, pair_count FROM t{i}"
-        for i in range(1, n_merges + 1)
-    ]
-    return (
-        _bpe_oracle_ctes(n_merges, apply_last=False)
-        + "\n"
-        + "\nUNION ALL ".join(selects)
-        + "\nORDER BY iteration"
-    )
 
 
 def _bpe_encode_oracle(n_merges: int = 3) -> str:
@@ -1492,7 +1421,7 @@ ORDER BY iteration
     "symbol (incl. the merged concatenation) with any higher-ranked "
     "candidate, and fold the whole batch into ONE vocabulary rewrite "
     "via a broadcast merge array + aggregate() — tokenizer depth costs "
-    "rounds/M Spark jobs, closing q130's iteration-count scale wall. "
+    "rounds/M Spark jobs instead of one round per rule. "
     "Accepted pairs are pairwise non-interacting so their round-start "
     "counts stay exact. Oracle: the same rounds unrolled as DuckDB "
     "CTEs with the blocking join and CASE-unrolled batch rewrite.",
@@ -1504,31 +1433,17 @@ def q138_bpe_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q130_bpe_train_merges",
-    oracle=_bpe_oracle(3),
-    doc="BPE tokenizer merge training, first 3 merge rules: iterative "
-    "pair-count -> argmax -> vocabulary rewrite on a checkpointed "
-    "word-frequency frame — corpus scanned once, every iteration "
-    "bounded by the (Zipf) vocabulary; the learned pair rides into the "
-    "merge as a 1-row broadcast cross, and the rewrite is exact greedy "
-    "BPE via the space-doubling replace trick. Oracle: the same three "
-    "iterations unrolled as DuckDB CTEs.",
-)
-def q130_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return bpe_train_merges(load(spark, sf_dir, "documents"))
-
-
-@register(
     "q132_bpe_encode_stats",
     oracle=_bpe_encode_oracle(3),
-    doc="BPE encode: apply the q130-learned merge rules back to the "
-    "corpus — per-document word count, symbol counts before/after the "
-    "3 merges, and the ppm reduction. Training is vocabulary-bounded; "
-    "the encode is one corpus explode joined to the rewritten "
-    "vocabulary on the word key (merged symbol counts computed once "
-    "per distinct word) and one per-doc reduce. Oracle: the unrolled "
-    "q130 CTE chain with the final rewrite applied, joined back to "
-    "the token stream.",
+    doc="BPE encode: apply the first 3 sequentially learned merge rules "
+    "(q138's trainer at one rule per round) back to the corpus — "
+    "per-document word count, symbol counts before/after the 3 merges, "
+    "and the ppm reduction. Training is vocabulary-bounded; the encode "
+    "is one corpus explode joined to the rewritten vocabulary on the "
+    "word key (merged symbol counts computed once per distinct word) "
+    "and one per-doc reduce. Oracle: the three training iterations "
+    "unrolled as DuckDB CTEs with the final rewrite applied, joined "
+    "back to the token stream.",
 )
 def q132_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_encode_stats(load(spark, sf_dir, "documents"))

@@ -134,10 +134,7 @@ def merge_entity_batch(
         else:
             prev_dim = dim_tbl.read(spark)
             cfg = Scd2Config(
-                key=spec.key,
-                attrs=spec.scd2_attrs,
-                created_col=spec.created_col,
-                first_start_from_created=True,
+                key=spec.key, attrs=spec.scd2_attrs, created_col=spec.created_col
             )
             dim_tbl.write(apply_scd2(prev_dim, with_hk, cfg, batch_ts))
 

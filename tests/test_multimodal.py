@@ -151,7 +151,7 @@ def test_ahash64_and_phash_dedup_pairs(spark):
     fp = image_phash_frame(bdf).withColumnRenamed("phash", "simhash")
     got = {
         (r.id1, r.id2): r.hamming
-        for r in simhash_hamming_pairs(fp, "doc_id", fp_bits=64).collect()
+        for r in simhash_hamming_pairs(fp, "doc_id").collect()
     }
     assert got.get((0, 1)) == 0  # identical -> hamming 0
     assert (0, 2) in got and got[(0, 2)] <= 3  # perturbed stays in band

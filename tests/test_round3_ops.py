@@ -1,11 +1,11 @@
 """Round-3 operator kernels: z-order layout, weighted priority
-sampling, snapshot-diff CDC, product quantization, BPE pair scan.
+sampling, product quantization, BPE pair scan and training.
 
 Each test pins the kernel's semantics against a hand-computed or
 pure-Python reference on crafted rows — the oracle parity tests cover
 the registered end-to-end queries; these cover the edge semantics the
-testdata doesn't exercise (deletes in CDC, exact bit interleaves,
-self-assignment of PQ training vectors).
+testdata doesn't exercise (exact bit interleaves, self-assignment of
+PQ training vectors).
 """
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ import hashlib
 
 from pyspark.sql import functions as F
 
-from real_time_data_pipeline_for_restaurant_analytics_spark.operators.cdc import snapshot_diff
 from real_time_data_pipeline_for_restaurant_analytics_spark.operators.layout import (
     zorder_bucket_audit,
     zorder_key,
@@ -84,24 +83,6 @@ def test_weighted_sample_prefers_heavy_rows(spark):
     picked = weighted_priority_sample(df, "id", "w", k=50).collect()
     heavy = sum(1 for r in picked if r["id"] < 100)
     assert heavy >= 45
-
-
-def test_snapshot_diff_all_four_classes(spark):
-    old = spark.createDataFrame(
-        [(1, 5, 100), (2, 3, 50), (3, 1, 10)], "k BIGINT, n BIGINT, cents BIGINT"
-    )
-    new = spark.createDataFrame(
-        [(2, 3, 50), (3, 2, 20), (4, 7, 70)], "k BIGINT, n BIGINT, cents BIGINT"
-    )
-    out = {
-        r["k"]: r
-        for r in snapshot_diff(old, new, key=["k"], value_cols=["n", "cents"]).collect()
-    }
-    assert out[1]["change_type"] == "delete" and out[1]["new_n"] == -1
-    assert out[2]["change_type"] == "unchanged"
-    assert out[3]["change_type"] == "update" and out[3]["old_cents"] == 10
-    assert out[4]["change_type"] == "insert" and out[4]["old_n"] == -1
-    assert len(out) == 4
 
 
 def test_pq_training_vectors_code_themselves(spark, sf=None):
@@ -204,7 +185,9 @@ def test_bpe_train_merges_matches_reference_algorithm(spark):
     """Hand-computed Sennrich-style BPE on a crafted corpus, including
     the overlapping-pair case ('aaa' -> 'aa a', greedy left-to-right)
     and frequency weighting across repeated words."""
-    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.text import bpe_train_merges
+    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.text import (
+        bpe_train_merges_batched,
+    )
 
     # corpus: 'lot lot lot lotto aaa'
     #   vocab: lot x3, lotto x1, aaa x1
@@ -217,7 +200,7 @@ def test_bpe_train_merges_matches_reference_algorithm(spark):
     docs = spark.createDataFrame(
         [("d1", "lot lot lot"), ("d2", "lotto aaa")], ["doc_id", "text"]
     )
-    rows = bpe_train_merges(docs, n_merges=3).collect()
+    rows = bpe_train_merges_batched(docs, n_rounds=3, batch_m=1, cand_k=1).collect()
     got = [(r.iteration, r.left_sym, r.right_sym, r.pair_count) for r in rows]
     assert got == [(1, "l", "o", 4), (2, "lo", "t", 4), (3, "a", "a", 2)]
 
@@ -314,7 +297,9 @@ def test_bpe_train_merges_property_vs_python_reference(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.text import bpe_train_merges
+    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.text import (
+        bpe_train_merges_batched,
+    )
 
     words = st.lists(
         st.text(alphabet="ab", min_size=1, max_size=5), min_size=1, max_size=8
@@ -333,7 +318,9 @@ def test_bpe_train_merges_property_vs_python_reference(spark):
         docs = spark.createDataFrame([("d", " ".join(ws))], ["doc_id", "text"])
         got = [
             (r.left_sym, r.right_sym, r.pair_count)
-            for r in bpe_train_merges(docs, n_merges=3).collect()
+            for r in bpe_train_merges_batched(
+                docs, n_rounds=3, batch_m=1, cand_k=1
+            ).collect()
         ]
         assert got == _ref_bpe(freqs, 3)
 

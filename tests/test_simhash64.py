@@ -1,13 +1,12 @@
 """Round-6: production-width (64-bit) SimHash, corpus-sized
 semantic-dedup k, and the NULL-band-bucket guard.
 
-The 16-bit SimHash (q54) is the gate/audit twin; its value space
-saturates around 2^16 docs. q115 registers the 64-bit/4x16-band
-production shape — these tests pin (a) the banding algebra's perfect
-recall at the new width against a pure-Python exact-hamming replay
-(including values whose bit 63 is set, i.e. negative BIGINTs), and
-(b) the fingerprint fold's engine-exactness against a hashlib replay
-(the same independence the DuckDB oracle provides, at unit scale).
+q115 registers the 64-bit/4x16-band SimHash shape — these tests pin
+(a) the banding algebra's perfect recall against a pure-Python
+exact-hamming replay (including values whose bit 63 is set, i.e.
+negative BIGINTs, and INT fingerprints banded as BIGINT), and (b) the
+fingerprint fold's engine-exactness against a hashlib replay (the
+same independence the DuckDB oracle provides, at unit scale).
 """
 
 from __future__ import annotations
@@ -62,7 +61,7 @@ def test_simhash64_matches_python_replay(spark):
 
 
 def test_simhash64_banding_perfect_recall_vs_exact(spark):
-    """4x16-band bucketing at fp_bits=64 must surface EXACTLY the
+    """4x16-band bucketing must surface EXACTLY the
     hamming<=3 pairs (pigeonhole recall is perfect for d <= bands-1;
     verification makes precision exact). Values are crafted to cross
     the sign bit, share only some bands, and include identical pairs
@@ -81,7 +80,7 @@ def test_simhash64_banding_perfect_recall_vs_exact(spark):
     fp = spark.createDataFrame(rows, "doc_id long, simhash long")
     got = {
         (r.id1, r.id2): r.hamming
-        for r in simhash_hamming_pairs(fp, "doc_id", fp_bits=64).collect()
+        for r in simhash_hamming_pairs(fp, "doc_id").collect()
     }
     expected = {}
     ids = sorted(fps_u)
@@ -94,6 +93,18 @@ def test_simhash64_banding_perfect_recall_vs_exact(spark):
     assert got == expected
     assert (0, 5) in expected and expected[(0, 5)] == 0  # intra path fired
     assert (0, 2) in expected  # sign-bit-crossing pair survived banding
+
+
+def test_int_fingerprints_band_as_bigint(spark):
+    """An INT fingerprint is widened to BIGINT before banding. Without
+    the cast, shiftrightunsigned on INT masks the shift to 5 bits, so
+    the bands at shifts 32 and 48 repeat the two low 16-bit bands, and
+    a hamming-2 pair that differs in both of those bands shares no
+    band at all."""
+    rows = [(1, 0x00010001), (2, 0)]  # d=2: one bit in each low band
+    fp = spark.createDataFrame(rows, "doc_id long, simhash int")
+    got = [(r.id1, r.id2, r.hamming) for r in simhash_hamming_pairs(fp, "doc_id").collect()]
+    assert got == [(1, 2, 2)]
 
 
 def test_lsh_candidates_drops_null_band_hashes(spark):
@@ -209,7 +220,7 @@ def test_banding_recall_property_random_fingerprints(spark):
         fp = spark.createDataFrame(rows, "doc_id long, simhash long")
         got = {
             (r.id1, r.id2): r.hamming
-            for r in simhash_hamming_pairs(fp, "doc_id", fp_bits=64).collect()
+            for r in simhash_hamming_pairs(fp, "doc_id").collect()
         }
         expected = {
             (i, j): bin(us[i] ^ us[j]).count("1")

@@ -5,7 +5,7 @@ warm-up per query (steady-state codegen/JIT), System.gc() before each
 timing, noop sink (forces every output column), best of 2, both scale
 factors interleaved per query in the same session.
 
-Usage: python tools/scale_timing.py q127_priority_mix q130_bpe_train_merges ...
+Usage: python tools/scale_timing.py q127_priority_mix q138_bpe_train_batched ...
        (no args: the queries named in $SCALE_QUERIES, comma-separated)
 """
 
