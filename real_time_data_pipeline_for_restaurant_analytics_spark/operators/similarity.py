@@ -7,11 +7,17 @@ Two tiers, as a 100 TB pipeline needs:
   functions, sequential left fold, so DuckDB's ``list_sum`` over the
   same element order reproduces the doubles bit-for-bit.
 - LSH-bucketed (random hyperplane) ANN: sign-bit sketch from
-  md5-derived deterministic hyperplanes → candidates only join within
-  a bucket. Linear-ish candidate generation; re-rank candidates with
-  the exact kernel. (Registered rows-only: the bucket step is
-  float-sign sensitive; exactness is asserted by the brute-force
-  oracle instead.)
+  md5-derived deterministic integer hyperplanes → candidates only join
+  within a bucket. Linear-ish candidate generation; re-rank candidates
+  with the exact kernel. Bucket bits are signs of integer dots, so
+  membership is engine-exact and the DuckDB oracle replays it.
+
+Every query is built from five shared primitives: the integer grids
+(:func:`micro_ints`, :func:`nano_ints`, :func:`_int8_base`), the
+nearest-centroid argmin (:func:`nearest_centroids`), the hyperplane
+sketch (:func:`sketch_bucket`), the PQ codebook/codes and the top-k
+rank by raw cosine (:func:`_top_k_by_cos`) — one implementation each,
+with one DuckDB twin each where the oracle needs it.
 
 Embedding near-dup (cosine >= threshold pairs) lives here too — it's
 the "embedding-cosine near-dup" tier of the dedup family.
@@ -129,20 +135,53 @@ def _assert_bounded_query_side(q: DataFrame, id_col: str, max_query_rows: int) -
         )
 
 
+def _top_k_by_cos(
+    scored: DataFrame, k: int, band: tuple[float, float] | None = None
+) -> DataFrame:
+    """Top-k per query of a (query_id, neighbor_id, cos_sim) frame:
+    rank on the RAW cosine with a (cos DESC, neighbor_id) tie-break,
+    keep rank <= k, emit cos rounded to 6 dp as ``cos_r``. Ranking on
+    the unrounded value keeps two neighbors whose cosines differ only
+    past the 6th decimal in exact order (the oracles rank the same
+    way). ``band=(lo, hi)`` keeps only ``lo <= cos < hi`` BEFORE the
+    rank — the hard-negative-mining shape (q121, q139)."""
+    from pyspark.sql import Window
+
+    if band is not None:
+        lo, hi = band
+        scored = scored.filter((F.col("cos_sim") >= lo) & (F.col("cos_sim") < hi))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_r"))
+    )
+
+
+def _micro_ranked(topk: DataFrame) -> DataFrame:
+    """A registered top-k's output contract: BIGINT rank and the
+    6-dp cosine in micro-units (floor(x·1e6 + 0.5)), in rank order."""
+    return topk.select(
+        "query_id",
+        "neighbor_id",
+        F.col("rank").cast("bigint").alias("rank"),
+        F.floor(F.col("cos_r") * 1000000 + F.lit(0.5)).cast("bigint").alias("cos_micro"),
+    ).orderBy("query_id", "rank")
+
+
 def brute_force_topk(
     emb: DataFrame,
-    query_ids: list[int] | None = None,
+    query_filter: Column,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_filter: Column | None = None,
     max_query_rows: int = DEFAULT_MAX_QUERY_ROWS,
     band: tuple[float, float] | None = None,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for the query rows, selected either
-    by an id list or by a predicate Column (`query_filter`) — the
-    predicate form keeps the whole plan declarative (no driver-side
-    collect of ids that the filter itself already expresses).
+    """Exact top-k cosine neighbors for the query rows selected by the
+    predicate Column ``query_filter`` — the predicate keeps the whole
+    plan declarative (no driver-side collect of ids that the filter
+    itself already expresses; an id list is ``F.col(id).isin(ids)``).
 
     ``max_query_rows`` guards the broadcast: the query side must be
     small by CONSTRUCTION (that's what makes brute-force linear, not
@@ -150,19 +189,19 @@ def brute_force_topk(
     loudly up front instead of broadcasting a corpus.
 
     ``band=(lo, hi)`` restricts candidates to ``lo <= cos < hi``
-    BEFORE ranking — the hard-negative-mining shape (q121); None is
-    plain nearest-neighbor top-k (q24). One kernel, two consumers: a
-    fix to the fold, tie-break, or guard lands in both."""
-    from pyspark.sql import Window
-
-    if (query_ids is None) == (query_filter is None):
-        raise ValueError("pass exactly one of query_ids / query_filter")
-    pred = query_filter if query_filter is not None else F.col(id_col).isin(query_ids)
+    BEFORE ranking — hard-negative mining for contrastive training
+    (q121): above ``hi`` a candidate is probably a positive or
+    near-duplicate (a false negative that poisons the loss), below
+    ``lo`` it teaches nothing. None is plain nearest-neighbor top-k
+    (q24). One kernel, two consumers: a fix to the fold, tie-break, or
+    guard lands in both. At corpus scale the same band + rank runs over
+    IVF candidate cells instead (:func:`hard_negative_mining_ivf`,
+    q139) — hard negatives live near the query."""
     base = spread(emb, id_col).select(
         F.col(id_col), _to_double(vec_col).alias("v"), _norm(vec_col).alias("nrm")
     )
-    _assert_bounded_query_side(emb.filter(pred), id_col, max_query_rows)
-    q = base.filter(pred).select(
+    _assert_bounded_query_side(emb.filter(query_filter), id_col, max_query_rows)
+    q = base.filter(query_filter).select(
         F.col(id_col).alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
     c = base.select(F.col(id_col).alias("neighbor_id"), F.col("v").alias("cv"), F.col("nrm").alias("cn"))
@@ -176,15 +215,7 @@ def brute_force_topk(
             (_dot_d("qv", "cv") / (F.col("qn") * F.col("cn"))).alias("cos_sim"),
         )
     )
-    if band is not None:
-        lo, hi = band
-        scored = scored.filter((F.col("cos_sim") >= lo) & (F.col("cos_sim") < hi))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_r"))
-    )
+    return _top_k_by_cos(scored, k, band)
 
 
 def truncation_recall(
@@ -357,13 +388,89 @@ def sql_bigint_array(vals) -> str:
     return "array(" + ", ".join(f"{int(v)}L" for v in vals) + ")"
 
 
+def _grid(vec_col: str, scale: str) -> Column:
+    return F.expr(
+        f"transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE) * {scale} + 0.5) AS BIGINT))"
+    )
+
+
 def nano_ints(vec_col: str) -> Column:
     """Vector elements as nano-unit BIGINTs (floor(x·1e9 + 0.5)) —
     the exact-arithmetic representation every determinized kernel
     shares. |x| < 4.6 fits any downstream dot used here."""
-    return F.expr(
-        f"transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000000.0 + 0.5) AS BIGINT))"
+    return _grid(vec_col, "1000000000.0")
+
+
+def micro_ints(vec_col: str) -> Column:
+    """Vector elements as micro-unit BIGINTs (floor(x·1e6 + 0.5)) — the
+    grid of the IVF cells, k-means and the JL projection: |term| <
+    2^44 and a 64-dim squared-L2 sum < 2^50, exact in BIGINT."""
+    return _grid(vec_col, "1000000.0")
+
+
+def sketch_bucket(vec: str, planes: list[list[int]]) -> str:
+    """Hyperplane sketch of the BIGINT array ``vec`` as one SQL sum:
+    bit p = [Σ vec[i]·planes[p][i] ≥ 0]. A pure integer fold, so bucket
+    membership is engine-exact; :func:`_duck_sketch_bucket` is the
+    DuckDB twin. Callers cast (and guard) the sum."""
+    return " + ".join(
+        f"(CASE WHEN aggregate(zip_with({vec}, {sql_bigint_array(w)},"
+        f" (x, y) -> x * y), 0L, (a, v) -> a + v) >= 0 THEN {1 << p} ELSE 0 END)"
+        for p, w in enumerate(planes)
     )
+
+
+def _duck_sketch_bucket(vec: str, planes: list[list[int]], dim: int) -> str:
+    return " + ".join(
+        f"(CASE WHEN list_sum(list_transform(generate_series(1, {dim}),"
+        f" kk -> {vec}[kk] * ([{', '.join(str(x) for x in w)}])[kk])) >= 0"
+        f" THEN {1 << p} ELSE 0 END)"
+        for p, w in enumerate(planes)
+    )
+
+
+def _sq_l2(a: str, b: str) -> str:
+    """Exact squared L2 between two BIGINT arrays as one SQL fold."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), 0L, (s, v) -> s + v)"
+
+
+def centroids_sql(cents) -> str:
+    """Literal centroids ``[(id, ints)]`` as ONE SQL array of
+    (cent_id, csub) structs — the element shape of the PQ codebook
+    column, so literal and broadcast centroids feed the same argmin.
+    One string, not Column objects (see sql_bigint_array)."""
+    return "array(" + ", ".join(
+        f"named_struct('cent_id', {int(c)}L, 'csub', {sql_bigint_array(v)})"
+        for c, v in cents
+    ) + ")"
+
+
+def _first_centroids(df: DataFrame, id_col: str, grid: Column, n: int) -> str:
+    """:func:`centroids_sql` of the ``grid`` vectors of ids < n — the
+    deterministic coarse centroids (in production they come from an
+    offline k-means and are equally a small literal list). One small
+    collect at plan build."""
+    rows = df.filter(F.col(id_col) < n).select(F.col(id_col), grid).collect()
+    return centroids_sql((r[0], r[1]) for r in rows)
+
+
+def nearest_centroids(vec: str, cents: str, n: int = 1) -> str:
+    """The ``n`` nearest centroids of the BIGINT array ``vec`` as an
+    SQL array of (d, c) structs sorted by (d, c): ``d`` is the integer
+    squared L2 distance, ``c`` the centroid id, so ties go to the
+    lowest id in every engine. ``cents`` is an SQL array of
+    (cent_id, csub) structs: a :func:`centroids_sql` literal or a
+    broadcast codebook column. The one argmin behind the IVF cells
+    (q34, q124, q139, q160, q168), the k-means assignment (q79, q87)
+    and the PQ codes (q92, q126, q160, q168); n = 1 is a linear
+    ``array_min``, not a sort."""
+    dists = (
+        f"transform({cents}, c -> struct({_sq_l2(vec, 'c.csub')} AS d,"
+        " CAST(c.cent_id AS BIGINT) AS c))"
+    )
+    if n == 1:
+        return f"array(array_min({dists}))"
+    return f"slice(array_sort({dists}), 1, {n})"
 
 
 def lsh_bucket_ann(
@@ -382,14 +489,7 @@ def lsh_bucket_ann(
     Bucket decisions are pure integer arithmetic (nano vectors ×
     integer weights: |term| < 2^40, 64-dim sum < 2^46), so bucket
     membership is engine-exact — DuckDB replays it bit-for-bit."""
-    from pyspark.sql import Window
-
-    planes = hyperplanes(dim, n_planes)
-    bucket_terms = " + ".join(
-        f"(CASE WHEN aggregate(zip_with(nv, {sql_bigint_array(plane)},"
-        f" (x, y) -> x * y), 0L, (a, v) -> a + v) >= 0 THEN {1 << p} ELSE 0 END)"
-        for p, plane in enumerate(planes)
-    )
+    bucket_terms = sketch_bucket("nv", hyperplanes(dim, n_planes))
     bucketed = spread(emb, id_col).select(
         F.col(id_col), _to_double(vec_col).alias("v"), _norm(vec_col).alias("nrm"),
         nano_ints(vec_col).alias("nv"),
@@ -425,12 +525,7 @@ def lsh_bucket_ann(
             (_dot_d("qv", "cv") / (F.col("qn") * F.col("cn"))).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_r"))
-    )
+    return _top_k_by_cos(scored, k)
 
 
 def ivf_scored_candidates(
@@ -452,73 +547,33 @@ def ivf_scored_candidates(
     assignment (a neighbor appears under exactly one cell, so
     cell_rank is unique per pair).
 
-    The coarse centroids here are the first `n_cells` corpus vectors —
-    deterministic and engine-reproducible; in production they come
-    from an offline k-means and are equally a small broadcast list.
-    Cell assignment is argmin of INTEGER squared L2 distance between
-    micro-quantized vectors and centroids (the kmeans_lloyd recipe:
-    |term| < 2^44, 64-dim sum < 2^50 — exact in BIGINT, ties to the
-    lower cell id), so probe-set membership is engine-exact and q34
-    carries a real DuckDB oracle. The assignment is a narrow map; the
-    only shuffle is the probe-cell join, whose volume is
-    corpus/n_cells × n_probe on average — the linear-scan term drops
-    by n_probe/n_cells at equal recall knobs. With
-    ``n_probe == n_cells`` the result equals brute force exactly
-    (pinned by a test).
+    The coarse centroids here are the first `n_cells` corpus vectors
+    (:func:`_first_centroids`). Cell assignment is
+    :func:`nearest_centroids` over micro-quantized vectors (|term| <
+    2^44, 64-dim sum < 2^50 — exact in BIGINT, ties to the lower cell
+    id), so probe-set membership is engine-exact and q34 carries a
+    real DuckDB oracle. The assignment is a narrow map; the only
+    shuffle is the probe-cell join, whose volume is corpus/n_cells ×
+    n_probe on average — the linear-scan term drops by n_probe/n_cells
+    at equal recall knobs. With ``n_probe == n_cells`` the result
+    equals brute force exactly (pinned by a test).
     """
-    import math
-
-    from pyspark.sql import Window
-
-    cents = (
-        emb.filter(F.col(id_col) < n_cells)
-        .select(F.col(id_col).alias("cell"), F.col(vec_col).alias("cv"))
-        .collect()
-    )
-    cent_micro = [
-        (int(r["cell"]), [int(math.floor(float(x) * 1e6 + 0.5)) for x in r["cv"]])
-        for r in cents
-    ]
-
-    def best_cells(vm: str, n: int) -> Column:
-        """The n nearest cells of micro-int vector column ``vm`` as an
-        array, by integer squared L2 against each centroid literal;
-        (d2, cell) struct sort makes ties deterministic.
-
-        Assembled as ONE SQL string: the Column-object equivalent costs
-        n_cells × dim Py4J round trips for the literals alone (~7 s of
-        driver-side plan build at 16×64 — measured; the string is
-        milliseconds) and produces the identical plan."""
-        structs = ", ".join(
-            "struct(aggregate(zip_with({vm}, array({lits}), (x, y) -> (x - y) * (x - y)),"
-            " 0L, (a, v) -> a + v) AS d, {cell} AS c)".format(
-                vm=vm,
-                lits=", ".join(f"{int(x)}L" for x in cm),
-                cell=int(cell),
-            )
-            for cell, cm in cent_micro
-        )
-        return F.expr(
-            f"transform(slice(array_sort(array({structs})), 1, {n}), st -> st.c)"
-        )
-
+    cents = _first_centroids(emb, id_col, micro_ints(vec_col), n_cells)
     base = spread(emb, id_col).select(
         F.col(id_col),
         _to_double(vec_col).alias("v"),
         _norm(vec_col).alias("nrm"),
-        F.expr(
-            f"transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))"
-        ).alias("vm"),
+        micro_ints(vec_col).alias("vm"),
     )
     # coalesce makes the cell expression provably NON-NULL, so Catalyst
     # cannot add an isnotnull(join key) filter — which it would push
     # BELOW the spread() exchange, re-evaluating the entire n_cells-way
     # argmin in the (often 2-partition) scan stage: measured 2x the
     # whole kernel's cost, serialized on the scan's parallelism. The
-    # fallback -1 is unreachable (n_cells >= 1 ⇒ the sorted cell array
-    # is never empty).
+    # fallback -1 is unreachable (n_cells >= 1 ⇒ the argmin array is
+    # never empty).
     assigned = base.withColumn(
-        "cell", F.coalesce(best_cells("vm", 1)[0], F.lit(-1))
+        "cell", F.coalesce(F.expr(f"{nearest_centroids('vm', cents)}[0].c"), F.lit(-1))
     ).drop("vm")
     probes = (
         base.filter(F.col(id_col) < query_max_id)
@@ -526,7 +581,9 @@ def ivf_scored_candidates(
             F.col(id_col).alias("query_id"),
             F.col("v").alias("qv"),
             F.col("nrm").alias("qn"),
-            F.posexplode(best_cells("vm", n_probe)).alias("_cell_pos", "cell"),
+            F.posexplode(
+                F.expr(f"{nearest_centroids('vm', cents, n_probe)}.c")
+            ).alias("_cell_pos", "cell"),
         )
     )
     return (
@@ -555,15 +612,8 @@ def ivf_topk(
     docstring for the determinism and scale contract. With
     ``n_probe == n_cells`` the result equals brute force exactly
     (pinned by a test)."""
-    from pyspark.sql import Window
-
     scored = ivf_scored_candidates(emb, n_cells, n_probe, query_max_id, id_col, vec_col)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_r"))
-    )
+    return _top_k_by_cos(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -579,6 +629,18 @@ base AS (
   FROM embeddings
 )
 """
+
+# the brute-force cosine of queries vec_id < 10 against the corpus —
+# the candidate frame of the q24, q68 and q121 oracles
+_DUCK_BF_SCORED = f"""
+WITH {_DUCK_COS_BASE},
+scored AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+         list_sum(list_transform(generate_series(1, len(q.v)),
+              i -> q.v[i] * c.v[i])) / (q.nrm * c.nrm) AS cos_sim
+  FROM base q JOIN base c ON q.vec_id != c.vec_id
+  WHERE q.vec_id < 10
+)"""
 
 
 @register(
@@ -614,15 +676,7 @@ def q23_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q24_ann_bruteforce_topk",
-    oracle=f"""
-WITH {_DUCK_COS_BASE},
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         list_sum(list_transform(generate_series(1, len(q.v)),
-              i -> q.v[i] * c.v[i])) / (q.nrm * c.nrm) AS cos_sim
-  FROM base q JOIN base c ON q.vec_id != c.vec_id
-  WHERE q.vec_id < 10
-), ranked AS (
+    oracle=f"""{_DUCK_BF_SCORED}, ranked AS (
   SELECT query_id, neighbor_id,
          CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank,
          CAST(FLOOR(round(cos_sim, 6) * 1000000 + 0.5) AS BIGINT) AS cos_micro
@@ -637,28 +691,14 @@ ORDER BY query_id, rank
 )
 def q24_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    return (
-        brute_force_topk(emb, k=5, query_filter=F.col("vec_id") < 10)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("bigint").alias("rank"),
-            F.floor(F.col("cos_r") * 1000000 + F.lit(0.5)).cast("bigint").alias("cos_micro"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    return _micro_ranked(brute_force_topk(emb, F.col("vec_id") < 10, k=5))
 
 
-def _ivf_oracle(
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    query_max_id: int = 10,
-    band: tuple[float, float] | None = None,
-) -> str:
-    band_where = (
-        f"WHERE cos_raw >= {band[0]} AND cos_raw < {band[1]}" if band else ""
-    )
+def _ivf_ctes(n_cells: int) -> str:
+    """The DuckDB replay of the IVF cell assignment shared by the q34,
+    q139 and q124 oracles: micro grid, the first ``n_cells`` vectors as
+    centroids, every vector's cells ranked by (d2, cell) and its
+    nearest cell — ``ranked_cells`` and ``assigned``."""
     return f"""
 WITH base AS (
   SELECT vec_id,
@@ -680,7 +720,20 @@ WITH base AS (
   FROM dists
 ), assigned AS (
   SELECT vec_id, cell FROM ranked_cells WHERE rnk = 1
-), probes AS (
+)"""
+
+
+def _ivf_oracle(
+    k: int = 5,
+    n_cells: int = 16,
+    n_probe: int = 4,
+    query_max_id: int = 10,
+    band: tuple[float, float] | None = None,
+) -> str:
+    band_where = (
+        f"WHERE cos_raw >= {band[0]} AND cos_raw < {band[1]}" if band else ""
+    )
+    return f"""{_ivf_ctes(n_cells)}, probes AS (
   SELECT vec_id AS query_id, cell FROM ranked_cells
   WHERE rnk <= {n_probe} AND vec_id < {query_max_id}
 ), scored AS (
@@ -722,26 +775,11 @@ ORDER BY query_id, rank
 )
 def q34_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    return (
-        ivf_topk(emb, k=5)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("bigint").alias("rank"),
-            F.floor(F.col("cos_r") * 1000000 + F.lit(0.5)).cast("bigint").alias("cos_micro"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    return _micro_ranked(ivf_topk(emb, k=5))
 
 
 def _lsh_oracle(k: int = 5, n_planes: int = N_PLANES, dim: int = 64) -> str:
-    planes = hyperplanes(dim, n_planes)
-    bucket_terms = " + ".join(
-        f"(CASE WHEN list_sum(list_transform(generate_series(1, {dim}),"
-        f" kk -> nv[kk] * ([{', '.join(str(x) for x in w)}])[kk])) >= 0"
-        f" THEN {1 << p} ELSE 0 END)"
-        for p, w in enumerate(planes)
-    )
+    bucket_terms = _duck_sketch_bucket("nv", hyperplanes(dim, n_planes), dim)
     return f"""
 WITH base AS (
   SELECT vec_id,
@@ -780,16 +818,7 @@ ORDER BY query_id, rank
 )
 def q25_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    return (
-        lsh_bucket_ann(emb, k=5)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("bigint").alias("rank"),
-            F.floor(F.col("cos_r") * 1000000 + F.lit(0.5)).cast("bigint").alias("cos_micro"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    return _micro_ranked(lsh_bucket_ann(emb, k=5))
 
 
 def quantize_int8_stats(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
@@ -806,12 +835,8 @@ def quantize_int8_stats(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "
     Quantization is floor(v/scale + 0.5) — explicit round-half-up,
     because engines disagree on round()'s half-even/half-up choice.
     """
-    max_abs = F.expr(
-        f"aggregate(transform({vec_col}, x -> abs(CAST(x AS DOUBLE))),"
-        " CAST(0.0 AS DOUBLE), (acc, v) -> greatest(acc, v))"
-    )
     base = spread(emb, id_col).select(
-        F.col(id_col), F.col(vec_col).alias("v"), max_abs.alias("max_abs")
+        F.col(id_col), F.col(vec_col).alias("v"), _max_abs(vec_col).alias("max_abs")
     )
     err_sum = F.expr(
         "aggregate(transform(v, x -> abs(floor(CAST(x AS DOUBLE) / (max_abs / 127.0) + 0.5)"
@@ -888,10 +913,10 @@ def _max_abs(vec_col: str) -> Column:
 def _quantized(vec_col: str, max_abs_col: str) -> Column:
     """Int8 symmetric quantization as an integer array (same math as
     quantize_int8_stats): q_i = floor(v_i / (max_abs/127) + 0.5).
-    Integer output ⇒ every downstream sign/bucket decision is exact —
-    the float-sign fragility that keeps q25 rows-only disappears.
-    ``max_abs_col`` must be a precomputed column: referencing the fold
-    inside the transform lambda would re-run it per element."""
+    Integer output ⇒ every downstream sign/bucket/distance decision is
+    exact cross-engine. ``max_abs_col`` must be a precomputed column:
+    referencing the fold inside the transform lambda would re-run it
+    per element."""
     return F.expr(
         f"CASE WHEN {max_abs_col} = 0"
         f" THEN transform({vec_col}, x -> CAST(0 AS BIGINT))"
@@ -900,17 +925,14 @@ def _quantized(vec_col: str, max_abs_col: str) -> Column:
     )
 
 
-def int8_lsh_bucket(qvec_col: str = "qv") -> Column:
-    """Integer hyperplane sketch: bit h = [Σ_k qv[k]·w[h][k] ≥ 0];
-    bucket = the 8-bit integer. Pure integer fold — engine-exact.
-    Assembled as one SQL string (see sql_bigint_array)."""
-    ws = _hyperplane_weights()
-    terms = " + ".join(
-        f"(CASE WHEN aggregate(zip_with({qvec_col}, {sql_bigint_array(w)},"
-        f" (x, y) -> x * y), 0L, (a, v) -> a + v) >= 0 THEN {1 << h} ELSE 0 END)"
-        for h, w in enumerate(ws)
+def _int8_base(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, qv): the shared q57 int8-quantized grid every PQ stage
+    runs on — one corpus scan, map-side only."""
+    return (
+        spread(emb, id_col)
+        .select(F.col(id_col), F.col(vec_col).alias("v"), _max_abs(vec_col).alias("_ma"))
+        .select(F.col(id_col), _quantized("v", "_ma").alias("qv"))
     )
-    return F.expr(f"CAST(({terms}) AS INT)")
 
 
 def ann_int8_lsh_topk(
@@ -920,15 +942,21 @@ def ann_int8_lsh_topk(
     vec_col: str = "embedding",
     query_filter: Column | None = None,
 ) -> DataFrame:
-    """ANN with a DETERMINISTIC bucket stage: int8-quantize, integer
-    hyperplane sketch → 256 buckets, candidates = same-bucket pairs,
-    exact double-cosine re-rank (the q24-proven fold).
+    """ANN over the int8 grid: int8-quantize, integer hyperplane
+    sketch (:func:`sketch_bucket` with 16-bit md5 planes) → 256
+    buckets, candidates = same-bucket pairs, exact double-cosine
+    re-rank (the q24-proven fold).
 
-    Unlike the float-sign LSH (q25, rows-only), every bucket decision
-    here is integer arithmetic, so DuckDB reproduces membership
-    bit-for-bit and the whole ANN path is hash-checkable. Scale shape
-    is unchanged: sketch is map-side, candidates come from a bucket
-    equi-join (volume = corpus/256 per query on average)."""
+    Like q25's nano-grid sketch, every bucket decision is integer
+    arithmetic, so DuckDB reproduces membership bit-for-bit and the
+    whole ANN path is hash-checked. Unlike q25 (and
+    :func:`_top_k_by_cos`) the rank orders on the 6-dp ROUNDED cosine,
+    which its hash carries. Scale shape is unchanged: sketch is
+    map-side, candidates come from a bucket equi-join (volume =
+    corpus/256 per query on average)."""
+    from pyspark.sql import Window
+
+    bucket = sketch_bucket("qv", _hyperplane_weights())
     base = (
         spread(emb, id_col)
         .select(
@@ -938,7 +966,7 @@ def ann_int8_lsh_topk(
             _max_abs(vec_col).alias("_ma"),
         )
         .select(id_col, "v", "nrm", _quantized("v", "_ma").alias("qv"))
-        .select(id_col, "v", "nrm", int8_lsh_bucket("qv").alias("bucket"))
+        .select(id_col, "v", "nrm", F.expr(f"CAST(({bucket}) AS INT)").alias("bucket"))
     )
     pred = query_filter if query_filter is not None else F.col(id_col) < 10
     q = base.filter(pred).select(
@@ -953,8 +981,6 @@ def ann_int8_lsh_topk(
         F.col("nrm").alias("cn"),
         "bucket",
     )
-    from pyspark.sql import Window
-
     scored = (
         q.join(c, "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -978,13 +1004,7 @@ def ann_int8_lsh_topk(
 
 
 def _int8_lsh_oracle() -> str:
-    ws = _hyperplane_weights()
-    bucket_terms = " + ".join(
-        f"(CASE WHEN list_sum(list_transform(generate_series(1, {_DIM}),"
-        f" k -> qv[k] * ([{', '.join(str(x) for x in w)}])[k])) >= 0"
-        f" THEN {1 << h} ELSE 0 END)"
-        for h, w in enumerate(ws)
-    )
+    bucket_terms = _duck_sketch_bucket("qv", _hyperplane_weights(), _DIM)
     return f"""
 WITH base AS (
   SELECT vec_id,
@@ -1023,10 +1043,10 @@ ORDER BY query_id, rank
 @register(
     "q63_ann_int8_lsh_topk",
     oracle=_int8_lsh_oracle(),
-    doc="Deterministic quantized-LSH ANN: int8 vectors + integer "
-    "hyperplane sketch (256 buckets) + exact cosine re-rank — the ANN "
-    "scale shape with a fully hash-checkable bucket stage (integer "
-    "signs, no float membership sensitivity).",
+    doc="Quantized-LSH ANN on the int8 grid: int8 vectors + integer "
+    "hyperplane sketch (256 buckets) + exact cosine re-rank — q25's "
+    "scale shape on the grid the PQ path shares, with the same "
+    "hash-checked integer-sign bucket stage.",
 )
 def q63_ann_int8_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
@@ -1048,12 +1068,9 @@ def label_centroids(
     task's contribution to labels×dims before the exchange, so the
     shuffle is tiny at any corpus size. Mean emitted in micro-units.
     """
-    nano = F.expr(
-        f"transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000000.0 + 0.5) AS BIGINT))"
-    )
     exploded = emb.select(
         F.col(label_col).cast("bigint").alias("label"),
-        F.posexplode(nano).alias("pos", "en"),
+        F.posexplode(nano_ints(vec_col)).alias("pos", "en"),
     )
     return (
         exploded.groupBy("label", "pos")
@@ -1112,7 +1129,7 @@ def knn_label_vote(
     from pyspark.sql import Window
 
     pred = query_filter if query_filter is not None else F.col(id_col) < 10
-    topk = brute_force_topk(emb, k=k, query_filter=pred)
+    topk = brute_force_topk(emb, pred, k=k)
     labels = emb.select(F.col(id_col).alias("neighbor_id"), F.col(label_col).alias("_nl"))
     votes = (
         F.broadcast(topk.select("query_id", "neighbor_id"))
@@ -1136,15 +1153,7 @@ def knn_label_vote(
 
 @register(
     "q68_knn_label_vote",
-    oracle=f"""
-WITH {_DUCK_COS_BASE},
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         list_sum(list_transform(generate_series(1, len(q.v)),
-              i -> q.v[i] * c.v[i])) / (q.nrm * c.nrm) AS cos_sim
-  FROM base q JOIN base c ON q.vec_id != c.vec_id
-  WHERE q.vec_id < 10
-), ranked AS (
+    oracle=f"""{_DUCK_BF_SCORED}, ranked AS (
   SELECT query_id, neighbor_id,
          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank
   FROM scored
@@ -1179,28 +1188,15 @@ _KM_ITERS = 2
 
 
 def _km_assign(base: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """Assign each vector to its nearest centroid — entirely map-side.
-
-    The centroids ride into the plan as a literal array-of-arrays
-    (k×dim ints, a few KB), so assignment is one whole-stage-codegen
-    projection over the corpus: squared-L2 per centroid via
-    zip_with/aggregate, argmin via array_min over (dist, j) structs
-    (lexicographic struct order = ties to the lowest cluster id).
-    NO shuffle and no join — the only corpus-sized exchange in a Lloyd
-    round is the k×dim recompute aggregate."""
-    cents = F.expr(
-        "array(" + ", ".join(sql_bigint_array(c) for c in centroids) + ")"
-    )
-    best = F.expr(
-        f"""array_min(transform(sequence(0, {len(centroids) - 1}), j ->
-              struct(aggregate(zip_with(em, _cents[j], (a, b) -> (a - b) * (a - b)),
-                               CAST(0 AS BIGINT), (acc, x) -> acc + x) AS d,
-                     CAST(j AS BIGINT) AS c)))"""
-    )
-    return (
-        base.withColumn("_cents", cents)
-        .withColumn("_best", best)
-        .select("vec_id", "em", F.col("_best.c").alias("cluster"), F.col("_best.d").alias("d"))
+    """Assign each vector to its nearest centroid — entirely map-side:
+    :func:`nearest_centroids` against the centroids inlined as one
+    literal (k×dim ints, a few KB), so assignment is one projection
+    over the corpus, cluster id = the centroid's list index, ties to
+    the lowest id. NO shuffle and no join — the only corpus-sized
+    exchange in a Lloyd round is the k×dim recompute aggregate."""
+    best = F.expr(f"{nearest_centroids('em', centroids_sql(enumerate(centroids)))}[0]")
+    return base.withColumn("_best", best).select(
+        "vec_id", "em", F.col("_best.c").alias("cluster"), F.col("_best.d").alias("d")
     )
 
 
@@ -1213,10 +1209,9 @@ def kmeans_assignments(
     semantic-dedup stage, which needs per-vector clusters rather than
     the per-cluster summary. See kmeans_lloyd for the determinism and
     scale contract."""
-    micro = F.expr(
-        f"transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))"
+    base = spread(emb, id_col).select(
+        F.col(id_col).alias("vec_id"), micro_ints(vec_col).alias("em")
     )
-    base = spread(emb, id_col).select(F.col(id_col).alias("vec_id"), micro.alias("em"))
     init = base.orderBy("vec_id").limit(k).collect()  # k rows: the init-point read
     centroids = [list(r["em"]) for r in init]
     assigned = _km_assign(base, centroids)
@@ -1384,10 +1379,7 @@ def jl_project(
     floor(|proj|^2 * in_dim * 1000 / (out_dim * |orig|^2)) — ~1000
     when the embedding geometry survives the projection."""
     signs = _jl_signs(out_dim)
-    m = F.expr(
-        f"transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))"
-    )
-    d = spread(emb, id_col).select(F.col(id_col), m.alias("m"))
+    d = spread(emb, id_col).select(F.col(id_col), micro_ints(vec_col).alias("m"))
     proj_structs = ", ".join(
         f"struct(CAST({j} AS BIGINT) AS out_dim,"
         f" aggregate(zip_with(m, {sql_bigint_array(row)}, (x, y) -> x * y),"
@@ -1479,25 +1471,9 @@ def q86_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEMDEDUP_TAU = 0.4
 
 
-_SEMDEDUP_TARGET_CLUSTER = 300
-
-
-def semdedup_auto_k(n: int, target_cluster_size: int = _SEMDEDUP_TARGET_CLUSTER) -> int:
-    """Corpus-size-derived cluster count for :func:`semantic_dedup`.
-
-    The pair stage is O(sum cluster_size^2) ≈ O(n^2 / k) with balanced
-    clusters, so a FIXED k makes the operator quadratic as the corpus
-    grows (measured: fixed k=8 scaled 8.2x at 10x data). Holding the
-    expected cluster size constant (k ≈ n / target) keeps the pair
-    stage linear-ish: O(n * target). target=300 sits where the k-sweep
-    measured the knee — clusters big enough for recall, small enough
-    that the per-cluster quadratic term stays trivial."""
-    return max(2, min(n, n // target_cluster_size))
-
-
 def semantic_dedup(
     emb: DataFrame, tau: float = _SEMDEDUP_TAU,
-    k: int | None = None, n_iter: int = _KM_ITERS,
+    k: int = _KM_K, n_iter: int = _KM_ITERS,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023):
     cluster the corpus with k-means, then look for near-duplicate
@@ -1520,27 +1496,9 @@ def semantic_dedup(
     identical result). Emits one row per vector: cluster, is_kept, and
     the id of the kept duplicate it lost to (or NULL).
 
-    ``k=None`` (the default) derives k from the corpus size via
-    :func:`semdedup_auto_k` — the production behavior: cluster SIZE,
-    not cluster count, is the invariant, so the pair stage stays
-    linear-ish as data grows. Pass k explicitly (the gate/oracle twin
-    q87 pins k=8) when the cluster count must be plan-static for a
-    replayable oracle.
-
-    Eagerness boundary (r6 verdict item 3, resolved as documented
-    rather than folded): the auto-k probe is ONE count job — for a
-    parquet source it compiles to row-group statistics, no data read
-    — and it is pinned in tests to add exactly one job over the
-    explicit-k path. It cannot ride the plan as a q88-style 1-row
-    stats-cross because k's consumers are plan-STRUCTURAL, not row
-    values: the init read is a literal ``limit(k)`` and the Lloyd
-    loop materializes k×dim centroid literals per iteration (its
-    documented bounded sync) — this operator is inherently eager at
-    plan-build with or without the probe, and a declarative k would
-    force the corpus through a single-partition global rank to select
-    init points, a far worse trade at scale."""
-    if k is None:
-        k = semdedup_auto_k(emb.count())
+    ``k`` is plan-structural (a literal ``limit(k)`` init read and
+    k×dim centroid literals per Lloyd round), so the q87 oracle
+    replays the same unrolled loop."""
     assigned = kmeans_assignments(emb, k, n_iter)
     nsq = F.expr("aggregate(em, 0L, (acc, x) -> acc + x * x)")
     # Materialize the final assignment once: it feeds three plan
@@ -1629,13 +1587,71 @@ ORDER BY nv.vec_id
     "dup_of witness, exact integer dots over micro-quantized vectors.",
 )
 def q87_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # k pinned to the oracle's unrolled cluster count; production runs
-    # leave k=None and get corpus-sized clustering (semdedup_auto_k)
-    return semantic_dedup(load(spark, sf_dir, "embeddings"), k=_KM_K)
+    return semantic_dedup(load(spark, sf_dir, "embeddings"))
 
 
 _PQ_M = 4  # subspaces per vector
 _PQ_K = 4  # codebook size per subspace; training set = vec_id < _PQ_K
+# IVF-PQ codebook training (q160, q168): Lloyd rounds over the bounded
+# sample vec_id < _PQ_TRAIN_MAX_ID
+_PQ_TRAIN_ROUNDS = 2
+_PQ_TRAIN_MAX_ID = 2000
+
+
+def _pq_slice(sub: int) -> str:
+    """Subspace mc.m of the row's int8 vector qv — the subvector every
+    PQ code argmin and LUT entry is measured from."""
+    return f"slice(qv, CAST(mc.m AS INT) * {sub} + 1, {sub})"
+
+
+def _pq_subvector_pieces(n_sub: int, sub: int) -> Column:
+    """The qv→subvector splitter shared by the codebook builder and
+    the trainer: array of (m, sub) structs."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(mi).cast("bigint").alias("m"),
+                F.slice("qv", mi * sub + 1, sub).alias("sub"),
+            )
+            for mi in range(n_sub)
+        ]
+    )
+
+
+def _pq_codebook(base: DataFrame, id_col: str, n_sub: int, sub: int, n_codes: int) -> DataFrame:
+    """ONE-row codebook frame: cb[m].cents = subspace m's centroids,
+    cent_id-sorted (array index == code — the LUT addressing
+    contract). Trained as the first ``n_codes`` vectors' subvectors
+    (:func:`_pq_train_codebook` is the real trainer); broadcast by
+    every consumer."""
+    pieces = _pq_subvector_pieces(n_sub, sub)
+    return (
+        base.filter(F.col(id_col) < n_codes)
+        .select(F.col(id_col).alias("cent_id"), F.explode(pieces).alias("p"))
+        .groupBy(F.col("p.m").alias("m"))
+        .agg(
+            F.sort_array(
+                F.collect_list(F.struct(F.col("cent_id"), F.col("p.sub").alias("csub")))
+            ).alias("cents")
+        )
+        .groupBy()
+        .agg(F.sort_array(F.collect_list(F.struct("m", "cents"))).alias("cb"))
+    )
+
+
+def _pq_best_expr(sub: int) -> Column:
+    """best[m+1] = (d, c): the nearest code c of subspace m for the
+    row's qv against the broadcast ``cb`` column and its squared
+    error d — map-side, one :func:`nearest_centroids` per subspace."""
+    return F.expr(f"transform(cb, mc -> {nearest_centroids(_pq_slice(sub), 'mc.cents')}[0])")
+
+
+def _pq_lut_expr(sub: int) -> Column:
+    """Flat query LUT: lut[m * n_codes + code + 1] = exact subspace
+    distance of the row's qv to that centroid."""
+    return F.expr(
+        f"flatten(transform(cb, mc -> transform(mc.cents, c -> {_sq_l2(_pq_slice(sub), 'c.csub')})))"
+    )
 
 
 def pq_assign_codes(
@@ -1654,58 +1670,36 @@ def pq_assign_codes(
     engine-exact because it runs on the int8-quantized grid (the q57
     kernel) — distances are BIGINT folds with no float tie ambiguity.
 
-    Scale shape: the codebook (n_sub×k subvectors, here trained as
-    the first ``k`` vectors' subvectors — q79's Lloyd loop is the real
-    trainer) is collected into a per-subspace array and broadcast;
-    assignment is then a map-side ``array_min`` over k candidates
-    inside whole-stage codegen. One corpus scan, zero shuffles for the
-    assignment itself; struct ordering (sqerr, code) breaks ties to
-    the lowest code deterministically.
+    Scale shape: the codebook (:func:`_pq_codebook`: the first ``k``
+    vectors' subvectors — q79's Lloyd loop is the real trainer) is ONE
+    broadcast row; assignment is then a map-side ``array_min`` over k
+    candidates per subspace (:func:`_pq_best_expr`, the same argmin as
+    q126/q168's codes). One corpus scan, zero shuffles for the
+    assignment itself; (sqerr, code) order breaks ties to the lowest
+    code deterministically.
     """
     dim = _vec_dim(emb, vec_col) or n_sub
     sub = dim // n_sub
-    base = (
-        spread(emb, id_col)
-        .select(F.col(id_col), F.col(vec_col).alias("v"), _max_abs(vec_col).alias("_ma"))
-        .select(F.col(id_col), _quantized("v", "_ma").alias("qv"))
-    )
-    pieces = F.array(
-        *[
-            F.struct(
-                F.lit(mi).cast("bigint").alias("m"),
-                F.slice("qv", mi * sub + 1, sub).alias("sub"),
-            )
-            for mi in range(n_sub)
-        ]
-    )
-    subs = base.select(F.col(id_col), F.explode(pieces).alias("p")).select(
-        F.col(id_col), F.col("p.m").alias("m"), F.col("p.sub").alias("sub")
-    )
-    cents = (
-        subs.filter(F.col(id_col) < k)
-        .select(F.col(id_col).alias("cent_id"), "m", F.col("sub").alias("csub"))
-        .groupBy("m")
-        .agg(F.sort_array(F.collect_list(F.struct("cent_id", "csub"))).alias("cents"))
-    )
-    best = F.expr(
-        "array_min(transform(cents, c -> named_struct("
-        "'d', aggregate(zip_with(sub, c.csub, (a, b) -> (a - b) * (a - b)),"
-        " CAST(0 AS BIGINT), (s, x) -> s + x),"
-        "'cid', CAST(c.cent_id AS BIGINT))))"
-    )
+    base = _int8_base(emb, id_col, vec_col)
+    cb = _pq_codebook(base, id_col, n_sub, sub, k)
     return (
-        subs.join(F.broadcast(cents), "m")
-        .select(F.col(id_col), "m", best.alias("b"))
+        base.crossJoin(F.broadcast(cb))
         .select(
             F.col(id_col),
-            F.col("m"),
-            F.col("b.cid").alias("code"),
-            F.col("b.d").cast("bigint").alias("sqerr"),
+            F.posexplode(_pq_best_expr(sub)).alias("m", "b"),
+        )
+        .select(
+            F.col(id_col),
+            F.col("m").cast("bigint").alias("m"),
+            F.col("b.c").alias("code"),
+            F.col("b.d").alias("sqerr"),
         )
     )
 
 
-_PQ_ORACLE = f"""
+# the int8 grid (the q57 quantizer) as DuckDB CTEs base → q(vec_id, qv):
+# the head of every PQ oracle (q92, q126, q160, q168)
+_DUCK_INT8 = """
 WITH base AS (
   SELECT vec_id,
          list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma,
@@ -1718,7 +1712,11 @@ WITH base AS (
                    x -> CAST(floor(CAST(x AS DOUBLE) / (ma / 127.0) + 0.5) AS BIGINT))
          END AS qv
   FROM base
-), subs AS (
+)"""
+
+# q92/q126: every vector's distance d to each of the _PQ_K codebook
+# entries (the first _PQ_K vectors' subvectors) in each subspace
+_PQ_CTES = f"""{_DUCK_INT8}, subs AS (
   SELECT vec_id, m, qv[(16 * m + 1):(16 * m + 16)] AS sub
   FROM q, (SELECT unnest(generate_series(0, {_PQ_M - 1})) AS m)
 ), cents AS (
@@ -1728,17 +1726,17 @@ WITH base AS (
          CAST(list_sum(list_transform(generate_series(1, 16),
               i -> (s.sub[i] - c.csub[i]) * (s.sub[i] - c.csub[i]))) AS BIGINT) AS dist
   FROM subs s JOIN cents c ON s.m = c.m
-)
-SELECT vec_id, CAST(m AS BIGINT) AS m, CAST(cent_id AS BIGINT) AS code, dist AS sqerr
-FROM d
-QUALIFY row_number() OVER (PARTITION BY vec_id, m ORDER BY dist, cent_id) = 1
-ORDER BY vec_id, m
-"""
+)"""
 
 
 @register(
     "q92_pq_codes",
-    oracle=_PQ_ORACLE,
+    oracle=f"""{_PQ_CTES}
+SELECT vec_id, CAST(m AS BIGINT) AS m, CAST(cent_id AS BIGINT) AS code, dist AS sqerr
+FROM d
+QUALIFY row_number() OVER (PARTITION BY vec_id, m ORDER BY dist, cent_id) = 1
+ORDER BY vec_id, m
+""",
     doc="Product-quantization code assignment: int8-quantized vectors "
     "split into 4 subspaces, each mapped to its nearest of 4 codebook "
     "entries by integer L2 — broadcast codebook, map-side array_min "
@@ -1770,103 +1768,29 @@ def q92_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _pq_subdist(sub_len: int) -> str:
-    """Exact squared L2 between a query subvector (sliced from qv by
-    the codebook entry's subspace index mc.m) and a centroid c.csub —
-    the shared integer fold of the code assignment, LUT build, and
-    oracle replay."""
-    return (
-        f"aggregate(zip_with(slice(qv, CAST(mc.m AS INT) * {sub_len} + 1, {sub_len}),"
-        " c.csub, (a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), (s, x) -> s + x)"
-    )
-
-
-def _int8_base(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, qv): the shared q57 int8-quantized grid every PQ stage
-    runs on — one corpus scan, map-side only."""
-    return (
-        spread(emb, id_col)
-        .select(F.col(id_col), F.col(vec_col).alias("v"), _max_abs(vec_col).alias("_ma"))
-        .select(F.col(id_col), _quantized("v", "_ma").alias("qv"))
-    )
-
-
-def _pq_codebook(base: DataFrame, id_col: str, n_sub: int, sub: int, n_codes: int) -> DataFrame:
-    """ONE-row codebook frame: cb[m].cents = subspace m's centroids,
-    cent_id-sorted (array index == code — the LUT addressing
-    contract). Trained as the first ``n_codes`` vectors' subvectors
-    (:func:`_pq_train_codebook` is the real trainer); broadcast by
-    every consumer."""
-    pieces = _pq_subvector_pieces(n_sub, sub)
-    return (
-        base.filter(F.col(id_col) < n_codes)
-        .select(F.col(id_col).alias("cent_id"), F.explode(pieces).alias("p"))
-        .groupBy(F.col("p.m").alias("m"))
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("cent_id"), F.col("p.sub").alias("csub")))
-            ).alias("cents")
-        )
-        .groupBy()
-        .agg(F.sort_array(F.collect_list(F.struct("m", "cents"))).alias("cb"))
-    )
-
-
-def _pq_codes_expr(sub: int) -> Column:
-    """codes[m+1] = argmin code of subspace m for the row's qv against
-    the broadcast ``cb`` column — map-side, whole-stage codegen."""
-    return F.expr(
-        "transform(cb, mc -> array_min(transform(mc.cents, c -> named_struct("
-        f"'d', {_pq_subdist(sub)}, 'cid', CAST(c.cent_id AS BIGINT)))).cid)"
-    )
-
-
-def _pq_lut_expr(sub: int) -> Column:
-    """Flat query LUT: lut[m * n_codes + code + 1] = exact subspace
-    distance of the row's qv to that centroid."""
-    return F.expr(
-        f"flatten(transform(cb, mc -> transform(mc.cents, c -> {_pq_subdist(sub)})))"
-    )
-
-
-def _pq_subvector_pieces(n_sub: int, sub: int) -> Column:
-    """The qv→subvector splitter shared by the codebook builder and
-    the trainer: array of (m, sub) structs."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(mi).cast("bigint").alias("m"),
-                F.slice("qv", mi * sub + 1, sub).alias("sub"),
-            )
-            for mi in range(n_sub)
-        ]
-    )
-
-
 def _pq_train_codebook(
     base: DataFrame,
     id_col: str,
     n_sub: int,
     sub: int,
     n_codes: int,
-    rounds: int,
 ) -> DataFrame:
     """PQ codebook TRAINING: per-subspace Lloyd refinement of the
-    first-``n_codes``-vectors init, ``rounds`` iterations — the q79
-    k-means recipe applied to each of the ``n_sub`` subvector spaces
-    at once (cluster key = (m, code)). Engine-exact like q79: integer
-    distances, centroids = floor(int_sum / n) via one IEEE division,
-    argmin ties to the lowest code, an emptied code keeps its previous
-    centroid. Returns the trained codebook as ONE one-row broadcastable
-    frame (the `cb` contract of :func:`_pq_codebook`).
+    first-``n_codes``-vectors init, ``_PQ_TRAIN_ROUNDS`` iterations —
+    the q79 k-means recipe applied to each of the ``n_sub`` subvector
+    spaces at once (cluster key = (m, code)). Engine-exact like q79:
+    integer distances, centroids = floor(int_sum / n) via one IEEE
+    division, argmin ties to the lowest code, an emptied code keeps its
+    previous centroid. Returns the trained codebook as ONE one-row
+    broadcastable frame (the `cb` contract of :func:`_pq_codebook`).
 
     Round 14 (guide §1.2/§5): the loop runs ON THE DRIVER over the
     collected sample. ``base`` here is always the bounded training
-    sample (train_max_id rows × dim int8 values ≈ 128 KB — a bounded
-    driver sync like q79's k×dim collect, O(1) in the corpus), yet the
-    distributed formulation cost ~10 Spark jobs per query — a 4M-row
-    assign join, two shuffles and a localCheckpoint PER ROUND — and was
-    ~4.5 s of each of q160's/q168's ~8 s at sf0.1
+    sample (_PQ_TRAIN_MAX_ID rows × dim int8 values ≈ 128 KB — a
+    bounded driver sync like q79's k×dim collect, O(1) in the corpus),
+    yet the distributed formulation cost ~10 Spark jobs per query — a
+    4M-row assign join, two shuffles and a localCheckpoint PER ROUND —
+    and was ~4.5 s of each of q160's/q168's ~8 s at sf0.1
     (bench_logs/ivfpq_probe.txt). This is also how PQ training deploys
     (FAISS trains codebooks in-process on a fixed-size sample; only
     encode/search distribute). The arithmetic is replayed exactly:
@@ -1878,9 +1802,9 @@ def _pq_train_codebook(
     checked: q160/q168 green at sf0.01 and sf0.1).
 
     The trained codebook returns as a one-row PURE-JVM literal frame
-    (``range(1).select(expr(...))`` — the q34/best_cells inlining
-    recipe; a createDataFrame would be a Python-RDD relation, guide §4)
-    so every consumer broadcast stays plan-identical.
+    (``range(1).select(expr(...))`` — the :func:`centroids_sql`
+    inlining recipe; a createDataFrame would be a Python-RDD relation,
+    guide §4) so every consumer broadcast stays plan-identical.
     """
     import numpy as np
 
@@ -1898,7 +1822,7 @@ def _pq_train_codebook(
         np.asarray([by_id[c][m * sub : (m + 1) * sub] for c in codes], dtype=np.int64)
         for m in range(n_sub)
     ]
-    for _ in range(rounds):
+    for _ in range(_PQ_TRAIN_ROUNDS):
         for m in range(n_sub):
             xm = x[:, m * sub : (m + 1) * sub]  # (N, sub)
             diff = xm[:, None, :] - cent[m][None, :, :]  # (N, K, sub)
@@ -1916,19 +1840,11 @@ def _pq_train_codebook(
             nxt = cent[m].copy()
             nxt[nonempty] = updated
             cent[m] = nxt
-    cents_sql = ", ".join(
-        "named_struct('m', {m}L, 'cents', array({cs}))".format(
-            m=m,
-            cs=", ".join(
-                "named_struct('cent_id', {c}L, 'csub', array({vals}))".format(
-                    c=c, vals=", ".join(f"{int(v)}L" for v in cent[m][k])
-                )
-                for k, c in enumerate(codes)
-            ),
-        )
+    cb_sql = ", ".join(
+        f"named_struct('m', {m}L, 'cents', {centroids_sql(zip(codes, cent[m]))})"
         for m in range(n_sub)
     )
-    return spark.range(1).select(F.expr(f"array({cents_sql})").alias("cb"))
+    return spark.range(1).select(F.expr(f"array({cb_sql})").alias("cb"))
 
 
 def _pq_adc_expr(n_sub: int, n_codes: int) -> Column:
@@ -1969,7 +1885,7 @@ def pq_adc_topk(
     cb = _pq_codebook(base, id_col, n_sub, sub, n_codes)
     # corpus codes, WIDE (codes[m+1] = argmin code) — map-side only
     coded = base.crossJoin(F.broadcast(cb)).select(
-        F.col(id_col).alias("neighbor_id"), _pq_codes_expr(sub).alias("codes")
+        F.col(id_col).alias("neighbor_id"), _pq_best_expr(sub).getField("c").alias("codes")
     )
     # query LUT, flat: lut[m * n_codes + code + 1] = subspace distance
     _assert_bounded_query_side(emb.filter(query_filter), id_col, max_query_rows)
@@ -1992,30 +1908,7 @@ def pq_adc_topk(
     )
 
 
-_PQ_ADC_ORACLE = f"""
-WITH base AS (
-  SELECT vec_id,
-         list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma,
-         embedding AS e
-  FROM embeddings
-), q AS (
-  SELECT vec_id,
-         CASE WHEN ma = 0 THEN list_transform(e, x -> CAST(0 AS BIGINT))
-              ELSE list_transform(e,
-                   x -> CAST(floor(CAST(x AS DOUBLE) / (ma / 127.0) + 0.5) AS BIGINT))
-         END AS qv
-  FROM base
-), subs AS (
-  SELECT vec_id, m, qv[(16 * m + 1):(16 * m + 16)] AS sub
-  FROM q, (SELECT unnest(generate_series(0, {_PQ_M - 1})) AS m)
-), cents AS (
-  SELECT vec_id AS cent_id, m, sub AS csub FROM subs WHERE vec_id < {_PQ_K}
-), d AS (
-  SELECT s.vec_id, s.m, c.cent_id,
-         CAST(list_sum(list_transform(generate_series(1, 16),
-              i -> (s.sub[i] - c.csub[i]) * (s.sub[i] - c.csub[i]))) AS BIGINT) AS dist
-  FROM subs s JOIN cents c ON s.m = c.m
-), codes AS (
+_PQ_ADC_ORACLE = f"""{_PQ_CTES}, codes AS (
   SELECT vec_id, m, cent_id AS code FROM d
   QUALIFY row_number() OVER (PARTITION BY vec_id, m ORDER BY dist, cent_id) = 1
 ), lut AS (
@@ -2053,58 +1946,9 @@ def q126_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def hard_negative_mining(
-    emb: DataFrame,
-    query_ids: list[int] | None = None,
-    query_filter: Column | None = None,
-    k: int = 5,
-    lo: float = 0.25,
-    hi: float = 0.85,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_query_rows: int = DEFAULT_MAX_QUERY_ROWS,
-) -> DataFrame:
-    """Hard-negative mining for contrastive embedding training: per
-    query, the top-k HARDEST negatives — candidates whose cosine lies
-    in the band [lo, hi). Above ``hi`` a candidate is probably a
-    positive/near-duplicate (using it as a negative poisons the loss
-    with false negatives — the reason the band exists); below ``lo``
-    it is an easy negative the model learns nothing from. This is the
-    curation step that turns an embedding corpus into training pairs
-    (sentence-transformers / DPR-style mining).
-
-    Expressed THROUGH the q24 kernel (:func:`brute_force_topk` with
-    ``band=(lo, hi)``) — one kernel, shared broadcast guard, fold, and
-    (cos DESC, id) tie-break, so a fix there lands in both consumers.
-    Scale path: hard negatives live near the query by construction, so
-    at corpus scale the same band+rank runs over LSH/IVF candidate
-    buckets (q25/q63/q34's candidate generation) instead of a full
-    scan — the bucketed candidates ARE the [lo, hi) band's natural
-    superset.
-    """
-    return brute_force_topk(
-        emb,
-        query_ids=query_ids,
-        query_filter=query_filter,
-        k=k,
-        id_col=id_col,
-        vec_col=vec_col,
-        max_query_rows=max_query_rows,
-        band=(lo, hi),
-    )
-
-
 @register(
     "q121_hard_negative_mining",
-    oracle=f"""
-WITH {_DUCK_COS_BASE},
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         list_sum(list_transform(generate_series(1, len(q.v)),
-              i -> q.v[i] * c.v[i])) / (q.nrm * c.nrm) AS cos_sim
-  FROM base q JOIN base c ON q.vec_id != c.vec_id
-  WHERE q.vec_id < 10
-), banded AS (
+    oracle=f"""{_DUCK_BF_SCORED}, banded AS (
   SELECT * FROM scored WHERE cos_sim >= 0.25 AND cos_sim < 0.85
 ), ranked AS (
   SELECT query_id, neighbor_id,
@@ -2123,15 +1967,8 @@ ORDER BY query_id, rank
 )
 def q121_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    return (
-        hard_negative_mining(emb, query_filter=F.col("vec_id") < 10)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("bigint").alias("rank"),
-            F.floor(F.col("cos_r") * 1000000 + F.lit(0.5)).cast("bigint").alias("cos_micro"),
-        )
-        .orderBy("query_id", "rank")
+    return _micro_ranked(
+        brute_force_topk(emb, F.col("vec_id") < 10, k=5, band=(0.25, 0.85))
     )
 
 
@@ -2147,8 +1984,8 @@ def hard_negative_mining_ivf(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Hard-negative mining over IVF candidate cells — the registered
-    100 TB path that :func:`hard_negative_mining` (q121) documents:
-    hard negatives lie NEAR the query by construction (cosine in
+    100 TB path of q121's banded :func:`brute_force_topk`: hard
+    negatives lie NEAR the query by construction (cosine in
     [lo, hi) is the upper tail of the similarity distribution), so the
     probed-cell candidate set of the IVF index is the band's natural
     superset and the guarded O(corpus × queries) broadcast cross is
@@ -2158,16 +1995,8 @@ def hard_negative_mining_ivf(
     with NO BroadcastNestedLoopJoin anywhere (plan-gated), and the
     recall trade is measured, not guessed, by q124's audit. With
     ``n_probe == n_cells`` the output equals q121 exactly (pinned)."""
-    from pyspark.sql import Window
-
     scored = ivf_scored_candidates(emb, n_cells, n_probe, query_max_id, id_col, vec_col)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.filter((F.col("cos_sim") >= lo) & (F.col("cos_sim") < hi))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_r"))
-    )
+    return _top_k_by_cos(scored, k, band=(lo, hi))
 
 
 @register(
@@ -2184,16 +2013,7 @@ def hard_negative_mining_ivf(
 )
 def q139_hard_negatives_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    return (
-        hard_negative_mining_ivf(emb)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("bigint").alias("rank"),
-            F.floor(F.col("cos_r") * 1000000 + F.lit(0.5)).cast("bigint").alias("cos_micro"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    return _micro_ranked(hard_negative_mining_ivf(emb))
 
 
 def ivf_recall_audit(
@@ -2227,7 +2047,7 @@ def ivf_recall_audit(
     from pyspark.sql import Window
 
     exact = (
-        brute_force_topk(emb, k=k, query_filter=F.col("vec_id") < query_max_id)
+        brute_force_topk(emb, F.col("vec_id") < query_max_id, k=k)
         .select("query_id", "neighbor_id")
         .localCheckpoint()
     )
@@ -2286,28 +2106,7 @@ def _ivf_recall_oracle(
     probe_levels: tuple[int, ...] = (1, 2, 4, 8), query_max_id: int = 50,
 ) -> str:
     levels = ", ".join(str(p) for p in probe_levels)
-    return f"""
-WITH base AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-         sqrt(list_sum(list_transform(embedding,
-              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm,
-         list_transform(embedding,
-              x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS vm
-  FROM embeddings
-), cents AS (
-  SELECT vec_id AS cell, vm AS cm FROM base WHERE vec_id < {n_cells}
-), dists AS (
-  SELECT b.vec_id, c.cell,
-         list_sum(list_transform(generate_series(1, len(b.vm)),
-              kk -> (b.vm[kk] - c.cm[kk]) * (b.vm[kk] - c.cm[kk]))) AS d2
-  FROM base b CROSS JOIN cents c
-), ranked_cells AS (
-  SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rnk
-  FROM dists
-), assigned AS (
-  SELECT vec_id, cell FROM ranked_cells WHERE rnk = 1
-), exact_scored AS (
+    return f"""{_ivf_ctes(n_cells)}, exact_scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          list_sum(list_transform(generate_series(1, len(q.v)),
               i -> q.v[i] * c.v[i])) / (q.nrm * c.nrm) AS cos_sim
@@ -2401,12 +2200,10 @@ def _ivf_pq_scored(
     maxp: int,
     n_sub: int,
     n_codes: int,
-    train_rounds: int,
     query_max_id: int,
     id_col: str,
     vec_col: str,
     max_query_rows: int,
-    train_max_id: int = 2000,
 ) -> tuple[DataFrame, DataFrame]:
     """The probe→ADC candidate construction shared by the serving
     path (q168: this IS the query) and the recall audit (q160: this
@@ -2418,7 +2215,7 @@ def _ivf_pq_scored(
     never shuffle).
 
     The PQ codebook trains on a BOUNDED deterministic sample
-    (``{id} < train_max_id`` — round-13): Lloyd over the full corpus
+    (``{id} < _PQ_TRAIN_MAX_ID`` — round-13): Lloyd over the full corpus
     made the 10× wall 10× (28 s of q168's 26 s sf1.0 wall was
     training), and it is also just not how PQ deploys — FAISS trains
     codebooks on a fixed-size sample (~100k vectors) regardless of
@@ -2451,34 +2248,12 @@ def _ivf_pq_scored(
         if nparts < want:
             base = base.repartition(want)
 
-    # coarse centroids as inlined literals (the q34 recipe: the
-    # Column-object equivalent costs n_cells × dim Py4J round trips;
-    # the SQL string is milliseconds and plans identically). int8
-    # grid: |term| <= 254^2, 64-dim sum < 2^23 — exact in BIGINT.
-    cents = (
-        base.filter(F.col(id_col) < n_cells)
-        .select(F.col(id_col).alias("cell"), "qv")
-        .collect()
-    )
-    cent_lits = [(int(r["cell"]), [int(x) for x in r["qv"]]) for r in cents]
-
-    def best_cells(n: int) -> Column:
-        structs = ", ".join(
-            "struct(aggregate(zip_with(qv, array({lits}), (x, y) -> (x - y) * (x - y)),"
-            " 0L, (a, v) -> a + v) AS d, {cell} AS c)".format(
-                lits=", ".join(f"{int(x)}L" for x in cm), cell=int(cell)
-            )
-            for cell, cm in cent_lits
-        )
-        return F.expr(
-            f"transform(slice(array_sort(array({structs})), 1, {n}), st -> st.c)"
-        )
-
-    train_src = base.filter(F.col(id_col) < train_max_id)
-    cb = (
-        _pq_train_codebook(train_src, id_col, n_sub, sub, n_codes, train_rounds)
-        if train_rounds
-        else _pq_codebook(train_src, id_col, n_sub, sub, n_codes)
+    # coarse centroids: the first n_cells int8 vectors, inlined as
+    # literals (the q34 recipe). int8 grid: |term| <= 254^2, 64-dim
+    # sum < 2^23 — exact in BIGINT.
+    cents = _first_centroids(base, id_col, F.col("qv"), n_cells)
+    cb = _pq_train_codebook(
+        base.filter(F.col(id_col) < _PQ_TRAIN_MAX_ID), id_col, n_sub, sub, n_codes
     )
     # index side: ONE corpus pass — cell + PQ codes, both map-side
     # (coalesce: see ivf_scored_candidates — keeps the join key
@@ -2487,8 +2262,8 @@ def _ivf_pq_scored(
         base.crossJoin(F.broadcast(cb))
         .select(
             F.col(id_col).alias("neighbor_id"),
-            F.coalesce(best_cells(1)[0], F.lit(-1)).alias("cell"),
-            _pq_codes_expr(sub).alias("codes"),
+            F.coalesce(F.expr(f"{nearest_centroids('qv', cents)}[0].c"), F.lit(-1)).alias("cell"),
+            _pq_best_expr(sub).getField("c").alias("codes"),
         )
     )
     # query side: LUT + probe list, bounded + broadcast
@@ -2501,7 +2276,9 @@ def _ivf_pq_scored(
         .select(
             F.col(id_col).alias("query_id"),
             _pq_lut_expr(sub).alias("lut"),
-            F.posexplode(best_cells(maxp)).alias("_pos", "cell"),
+            F.posexplode(F.expr(f"{nearest_centroids('qv', cents, maxp)}.c")).alias(
+                "_pos", "cell"
+            ),
         )
         .select(
             "query_id", "lut", (F.col("_pos") + 1).cast("int").alias("cell_rank"), "cell"
@@ -2528,7 +2305,6 @@ def ivf_pq_topk(
     n_cells: int = 16,
     n_sub: int = 8,
     n_codes: int = 32,
-    train_rounds: int = 2,
     query_max_id: int = 50,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -2553,7 +2329,6 @@ def ivf_pq_topk(
         n_probe,
         n_sub,
         n_codes,
-        train_rounds,
         query_max_id,
         id_col,
         vec_col,
@@ -2575,7 +2350,6 @@ def ivf_pq_recall_audit(
     n_sub: int = 8,
     n_codes: int = 32,
     refine_r: int = 100,
-    train_rounds: int = 2,
     query_max_id: int = 50,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -2602,7 +2376,6 @@ def ivf_pq_recall_audit(
         max(probe_levels),
         n_sub,
         n_codes,
-        train_rounds,
         query_max_id,
         id_col,
         vec_col,
@@ -2616,10 +2389,7 @@ def ivf_pq_recall_audit(
     qside = base.filter(F.col(id_col) < query_max_id).select(
         F.col(id_col).alias("query_id"), F.col("qv").alias("qqv")
     )
-    d2 = F.expr(
-        "aggregate(zip_with(qqv, qv, (a, b) -> (a - b) * (a - b)),"
-        " CAST(0 AS BIGINT), (s, x) -> s + x)"
-    )
+    d2 = F.expr(_sq_l2("qqv", "qv"))
     we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
     exact = (
         F.broadcast(qside)
@@ -2776,15 +2546,13 @@ def _ivf_pq_ctes(
     maxp: int,
     n_sub: int,
     n_codes: int,
-    train_rounds: int,
     query_max_id: int,
     sub: int,
     dim: int,
-    train_max_id: int = 2000,
 ) -> str:
     """The DuckDB CTE chain shared by the q160 and q168 oracles:
     int8 grid → coarse cells → per-query ranked cells → PQ training
-    (on the bounded ``pext`` sample, vec_id < ``train_max_id`` —
+    (on the bounded ``pext`` sample, vec_id < ``_PQ_TRAIN_MAX_ID`` —
     mirroring the Spark side's FAISS-style fixed training sample) →
     codes → per-query LUTs → the ``adc`` candidate frame (query_id,
     neighbor_id, cell_rank ≤ ``maxp``, adc_dist). Callers append
@@ -2794,7 +2562,7 @@ def _ivf_pq_ctes(
     # previous centroid via the LEFT JOIN + COALESCE. Training reads
     # ONLY pext; the final assignment (d/codes) covers all of pex.
     train = ""
-    for i in range(train_rounds):
+    for i in range(_PQ_TRAIN_ROUNDS):
         train += f""", pd{i} AS (
   SELECT s.vec_id, s.m, c.code, SUM((s.e - c.cm) * (s.e - c.cm)) AS d
   FROM pext s JOIN pc{i} c ON s.m = c.m AND s.pos = c.pos
@@ -2813,21 +2581,8 @@ def _ivf_pq_ctes(
     GROUP BY 1, 2, 3
   ) n ON c.m = n.m AND c.code = n.code AND c.pos = n.pos
 )"""
-    pc_final = f"pc{train_rounds}"
-    return f"""
-WITH base AS (
-  SELECT vec_id,
-         list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS ma,
-         embedding AS e
-  FROM embeddings
-), q AS (
-  SELECT vec_id,
-         CASE WHEN ma = 0 THEN list_transform(e, x -> CAST(0 AS BIGINT))
-              ELSE list_transform(e,
-                   x -> CAST(floor(CAST(x AS DOUBLE) / (ma / 127.0) + 0.5) AS BIGINT))
-         END AS qv
-  FROM base
-), cellc AS (
+    pc_final = f"pc{_PQ_TRAIN_ROUNDS}"
+    return f"""{_DUCK_INT8}, cellc AS (
   SELECT vec_id AS cell, qv AS cqv FROM q WHERE vec_id < {n_cells}
 ), celld AS (
   SELECT b.vec_id, c.cell,
@@ -2847,7 +2602,7 @@ WITH base AS (
   SELECT vec_id, m, unnest(generate_series(1, {sub})) AS pos, unnest(sub) AS e
   FROM subs
 ), pext AS (
-  SELECT * FROM pex WHERE vec_id < {train_max_id}
+  SELECT * FROM pex WHERE vec_id < {_PQ_TRAIN_MAX_ID}
 ), pc0 AS (
   SELECT m, vec_id AS code, pos, e AS cm FROM pex WHERE vec_id < {n_codes}
 ){train}, d AS (
@@ -2880,15 +2635,13 @@ def _ivf_pq_recall_oracle(
     n_sub: int = 8,
     n_codes: int = 32,
     refine_r: int = 100,
-    train_rounds: int = 2,
     query_max_id: int = 50,
     sub: int = 8,
     dim: int = 64,
 ) -> str:
     levels = ", ".join(str(p) for p in probe_levels)
     common = _ivf_pq_ctes(
-        n_cells, max(probe_levels), n_sub, n_codes, train_rounds,
-        query_max_id, sub, dim,
+        n_cells, max(probe_levels), n_sub, n_codes, query_max_id, sub, dim
     )
     return f"""{common}, exact_d AS (
   SELECT qq.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -2974,13 +2727,12 @@ def _ivf_pq_serving_oracle(
     n_cells: int = 16,
     n_sub: int = 8,
     n_codes: int = 32,
-    train_rounds: int = 2,
     query_max_id: int = 50,
     sub: int = 8,
     dim: int = 64,
 ) -> str:
     common = _ivf_pq_ctes(
-        n_cells, n_probe, n_sub, n_codes, train_rounds, query_max_id, sub, dim
+        n_cells, n_probe, n_sub, n_codes, query_max_id, sub, dim
     )
     return f"""{common}, ranked AS (
   SELECT query_id, neighbor_id, adc_dist,

@@ -1280,11 +1280,13 @@ _BPE_MERGE_DUCK = (
 )
 
 
-def _bpe_oracle_ctes(n_merges: int, apply_last: bool) -> str:
+def _bpe_oracle_ctes(n_merges: int) -> str:
     """The DuckDB CTE chain mirroring sequential BPE training
     (:func:`_bpe_rounds` at ``batch_m=1``): w0 (vocabulary)
     then p{i}/t{i} (pair counts / learned pair) and w{i} (rewritten
-    vocabulary) per iteration, ``w`` key kept throughout."""
+    vocabulary) per iteration, ``w`` key kept throughout; the last
+    round's rewrite is applied, so w{n_merges} is the encoded
+    vocabulary."""
     pair_cte = """
 p{i} AS (
   SELECT s[i] AS left_sym, s[i+1] AS right_sym,
@@ -1304,17 +1306,14 @@ t{i} AS (SELECT * FROM p{i} ORDER BY pair_count DESC, left_sym, right_sym LIMIT 
     ]
     for i in range(1, n_merges + 1):
         parts.append(pair_cte.format(i=i, prev=i - 1))
-        if i < n_merges or apply_last:
-            merged = _BPE_MERGE_DUCK.format(t=f"t{i}")
-            parts.append(
-                f"\nw{i} AS (SELECT w, {merged} AS r, freq FROM w{i - 1}, t{i})"
-            )
+        merged = _BPE_MERGE_DUCK.format(t=f"t{i}")
+        parts.append(f"\nw{i} AS (SELECT w, {merged} AS r, freq FROM w{i - 1}, t{i})")
     return ",".join(parts)
 
 
 def _bpe_encode_oracle(n_merges: int = 3) -> str:
     return (
-        _bpe_oracle_ctes(n_merges, apply_last=True)
+        _bpe_oracle_ctes(n_merges)
         + f""",
 tok AS (
   SELECT doc_id, w

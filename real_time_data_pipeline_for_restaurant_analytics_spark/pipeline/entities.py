@@ -4,8 +4,10 @@ keys (SURVEY §1.3 + §2.2).
 Each ``EntitySpec`` carries the only entity-specific knowledge in the
 engine: the source column list (positional, like the reference's
 $1..$n COPY binding), the stage→clean typed transform, and the
-SCD1/SCD2 key/attribute sets. The generic three-layer machinery lives
-in runner.py; the merge semantics in operators/merge.py.
+business key. The tracked SCD attributes are the clean output's
+columns minus the key and the audit columns (runner.py derives them
+from the typed batch's schema). The generic three-layer machinery
+lives in runner.py; the merge semantics in operators/merge.py.
 
 Quirk resolutions (SURVEY §7 hard-part c): v3 semantics everywhere —
 customer email/mobile straight ($3=email, $4=mobile,
@@ -29,6 +31,7 @@ from ..functions.casts import (
 )
 from ..functions.enrich import case_map, device_enrichment, flag_in, tier_bucket
 from ..functions.keys import smart_date_key, smart_time_key
+from ..sources.readers import AUDIT_COLS
 from . import geography as geo
 
 # Timestamp formats the reference parses (FIXTURES.md): plain and ISO-T.
@@ -47,11 +50,8 @@ def parse_ts(col: str) -> Column:
     )
 
 
-_AUDIT = ["_stg_file_name", "_stg_file_load_ts", "_stg_file_md5", "_copy_data_ts"]
-
-
 def _keep_audit(df: DataFrame) -> list[Column]:
-    return [F.col(c) for c in _AUDIT if c in df.columns]
+    return [F.col(c) for c in AUDIT_COLS if c in df.columns]
 
 
 @dataclass(frozen=True)
@@ -60,7 +60,6 @@ class EntitySpec:
     source_columns: list[str]  # positional CSV/JSON binding ($1..$n)
     clean: Callable[[DataFrame], DataFrame]
     key: list[str]  # business key (clean-layer names)
-    scd2_attrs: list[str]  # type-2 tracked attributes
     ext: str = "csv"
     dedup_source: bool = False  # C6: DISTINCT before merge
     created_col: str | None = "created_ts"
@@ -288,61 +287,6 @@ def _clean_login_audit(df: DataFrame) -> DataFrame:
     )
 
 
-_COMMON_EXCLUDE = set(_AUDIT)
-
-
-def _attrs(cols: list[str], key: list[str]) -> list[str]:
-    return [c for c in cols if c not in key and c not in _COMMON_EXCLUDE]
-
-
-_LOCATION_COLS = [
-    "location_id", "city", "state", "state_code", "is_union_territory",
-    "capital_city_flag", "city_tier", "zip_code", "active_flag",
-    "created_ts", "modified_ts",
-]
-_RESTAURANT_COLS = [
-    "restaurant_id", "name", "cuisine_type", "pricing_for_two", "restaurant_phone",
-    "operating_hours", "location_id_fk", "active_flag", "open_status", "locality",
-    "restaurant_address", "ratings", "latitude", "longitude", "created_ts", "modified_ts",
-]
-_CUSTOMER_COLS = [
-    "customer_id", "name", "email", "mobile", "login_by_using", "gender", "dob",
-    "anniversary", "rating", "preferences", "created_ts", "modified_ts",
-]
-_CUSTOMER_ADDRESS_COLS = [
-    "address_id", "customer_id_fk", "flat_no", "floor", "building", "landmark",
-    "locality", "city", "state", "pincode", "coordinates", "primary_flag",
-    "address_type", "created_ts", "modified_ts",
-]
-_MENU_COLS = [
-    "menu_id", "restaurant_id_fk", "item_name", "description", "price", "category",
-    "availability", "item_type", "rating", "created_ts", "modified_ts",
-]
-_DELIVERY_AGENT_COLS = [
-    "delivery_agent_id", "full_name", "email", "mobile_no", "vehicle_type",
-    "location_id_fk", "status", "gender", "rating", "created_ts", "modified_ts",
-]
-_DELIVERY_COLS = [
-    "delivery_id", "order_id_fk", "delivery_agent_id_fk", "delivery_status",
-    "estimated_time", "delivered_time", "address_id_fk", "delivery_date",
-    "created_ts", "modified_ts",
-]
-_ORDERS_COLS = [
-    "order_id", "customer_id_fk", "restaurant_id_fk", "order_date", "total_amount",
-    "discount_amount", "delivery_charges", "final_amount", "status", "payment_method",
-    "is_first_order", "coupon_code", "created_ts", "modified_ts",
-]
-_ORDER_ITEM_COLS = [
-    "order_item_id", "order_id_fk", "menuitem_id_fk", "quantity", "price", "subtotal",
-    "ratings", "created_ts", "modified_ts",
-]
-_LOGIN_AUDIT_COLS = [
-    "login_id", "customer_id", "login_type", "device_interface", "mobile_device_name",
-    "web_interface", "last_login", "device_category", "is_mobile", "device_os",
-    "login_hour", "login_day", "login_month", "login_year", "login_date_key",
-    "login_time_key",
-]
-
 ENTITIES: dict[str, EntitySpec] = {
     "location": EntitySpec(
         name="location",
@@ -350,7 +294,6 @@ ENTITIES: dict[str, EntitySpec] = {
                         "createddate", "modifieddate"],
         clean=_clean_location,
         key=["location_id"],
-        scd2_attrs=_attrs(_LOCATION_COLS, ["location_id"]),
     ),
     "restaurant": EntitySpec(
         name="restaurant",
@@ -360,7 +303,6 @@ ENTITIES: dict[str, EntitySpec] = {
                         "coupons", "latitude", "longitude", "createddate", "modifieddate"],
         clean=_clean_restaurant,
         key=["restaurant_id"],
-        scd2_attrs=_attrs(_RESTAURANT_COLS, ["restaurant_id"]),
     ),
     "customer": EntitySpec(
         name="customer",
@@ -369,7 +311,6 @@ ENTITIES: dict[str, EntitySpec] = {
                         "createddate", "modifieddate"],
         clean=_clean_customer,
         key=["customer_id"],
-        scd2_attrs=_attrs(_CUSTOMER_COLS, ["customer_id"]),
     ),
     "customer_address": EntitySpec(
         name="customer_address",
@@ -379,7 +320,6 @@ ENTITIES: dict[str, EntitySpec] = {
                         "modifieddate"],
         clean=_clean_customer_address,
         key=["address_id"],
-        scd2_attrs=_attrs(_CUSTOMER_ADDRESS_COLS, ["address_id"]),
     ),
     "menu": EntitySpec(
         name="menu",
@@ -389,7 +329,6 @@ ENTITIES: dict[str, EntitySpec] = {
                         "createddate", "modifieddate"],
         clean=_clean_menu,
         key=["menu_id"],
-        scd2_attrs=_attrs(_MENU_COLS, ["menu_id"]),
     ),
     "delivery_agent": EntitySpec(
         name="delivery_agent",
@@ -398,7 +337,6 @@ ENTITIES: dict[str, EntitySpec] = {
                         "createddate", "modifieddate"],
         clean=_clean_delivery_agent,
         key=["delivery_agent_id"],
-        scd2_attrs=_attrs(_DELIVERY_AGENT_COLS, ["delivery_agent_id"]),
         ext="json",
         dedup_source=True,  # C6: JSON source repeats rows
     ),
@@ -409,7 +347,6 @@ ENTITIES: dict[str, EntitySpec] = {
                         "createddate", "modifieddate"],
         clean=_clean_delivery,
         key=["delivery_id", "order_id_fk", "delivery_agent_id_fk"],  # J3 composite
-        scd2_attrs=_attrs(_DELIVERY_COLS, ["delivery_id", "order_id_fk", "delivery_agent_id_fk"]),
     ),
     "orders": EntitySpec(
         name="orders",
@@ -419,7 +356,6 @@ ENTITIES: dict[str, EntitySpec] = {
                         "couponcode", "createddate", "modifieddate"],
         clean=_clean_orders,
         key=["order_id"],
-        scd2_attrs=_attrs(_ORDERS_COLS, ["order_id"]),
     ),
     "order_item": EntitySpec(
         name="order_item",
@@ -428,7 +364,6 @@ ENTITIES: dict[str, EntitySpec] = {
                         "subtotal", "ratings", "createddate", "modifieddate"],
         clean=_clean_order_item,
         key=["order_item_id", "order_id_fk", "menuitem_id_fk"],  # J3 composite
-        scd2_attrs=_attrs(_ORDER_ITEM_COLS, ["order_item_id", "order_id_fk", "menuitem_id_fk"]),
     ),
     "login_audit": EntitySpec(
         name="login_audit",
@@ -436,7 +371,6 @@ ENTITIES: dict[str, EntitySpec] = {
                         "mobiledevicename", "webinterface", "lastlogin"],
         clean=_clean_login_audit,
         key=["login_id"],
-        scd2_attrs=_attrs(_LOGIN_AUDIT_COLS, ["login_id"]),
         created_col=None,
         modified_col=None,
         scd1_only=True,  # C5: SCD1-style fact merge on login_id

@@ -44,7 +44,7 @@ from ..functions.keys import hash_key
 from ..operators.merge import Scd2Config, apply_scd2, latest_per_key, merge_upsert
 from ..sources.ledger import FileLedger
 from ..sources.paths import entity_file
-from ..sources.readers import read_stage_csv, read_stage_json
+from ..sources.readers import AUDIT_COLS, read_stage_csv, read_stage_json
 from .entities import ENTITIES, RUN_ORDER, EntitySpec
 
 
@@ -127,14 +127,17 @@ def merge_entity_batch(
         # --- consumption: SCD2 dim (C4) or SCD1 fact (C5)
         dim_tbl = wh.dim(spec.name)
         hk_name = f"{spec.name}_hk"
-        with_hk = typed.withColumn(hk_name, hash_key(*spec.key, *spec.scd2_attrs))
+        # type-2 tracked attributes: the clean columns in clean order,
+        # minus the key and the stage audit columns (a schema read)
+        tracked = [c for c in typed.columns if c not in spec.key and c not in AUDIT_COLS]
+        with_hk = typed.withColumn(hk_name, hash_key(*spec.key, *tracked))
         if spec.scd1_only:
             prev_fact = dim_tbl.read(spark)
-            dim_tbl.write(merge_upsert(prev_fact, with_hk, spec.key, spec.scd2_attrs))
+            dim_tbl.write(merge_upsert(prev_fact, with_hk, spec.key, tracked))
         else:
             prev_dim = dim_tbl.read(spark)
             cfg = Scd2Config(
-                key=spec.key, attrs=spec.scd2_attrs, created_col=spec.created_col
+                key=spec.key, attrs=tracked, created_col=spec.created_col
             )
             dim_tbl.write(apply_scd2(prev_dim, with_hk, cfg, batch_ts))
 

@@ -627,10 +627,10 @@ def test_q159_restaurant_pair_composite_and_drop(spark):
     ks = {k for (k, _m) in dlv_dim}
     assert all((k, 1) in dlv_dim and (k, 2) in dlv_dim for k in ks)
     # the coupons column exists in the FILE binding but not downstream
-    assert "coupons" in ENTITIES["restaurant"].source_columns
-    assert all("coupon" not in c for c in
-               __import__("real_time_data_pipeline_for_restaurant_analytics_spark.pipeline.entities",
-                          fromlist=["_RESTAURANT_COLS"])._RESTAURANT_COLS)
+    spec = ENTITIES["restaurant"]
+    assert "coupons" in spec.source_columns
+    raw = spark.createDataFrame([], ", ".join(f"{c} string" for c in spec.source_columns))
+    assert all("coupon" not in c for c in spec.clean(raw).columns)
 
 
 def _jobs_launched(spark, fn) -> int:

@@ -108,10 +108,11 @@ _SCALAR_CROSS_OK = (
     # checkpointed vocabulary-sized).
     "q132_bpe_encode_stats",
     "q138_bpe_train_batched",
-    # q168: the trained PQ codebook rides into the corpus coding pass
-    # and the query LUT pass as a 1-row broadcast cross (k×dim scalar
-    # state — q160's audited pattern); candidate generation itself is
-    # the probed-cell equi-join.
+    # q92/q168: the (trained) PQ codebook rides into the corpus coding
+    # pass (and q168's query LUT pass) as a 1-row broadcast cross
+    # (k×dim scalar state — q160's audited pattern); q168's candidate
+    # generation itself is the probed-cell equi-join.
+    "q92_pq_codes",
     "q168_ivfpq_serving_topk",
     # q171: the two corpus token totals (tt, tr) ride into the per-doc
     # scoring as a 1-row broadcast cross (the q48/q96 scalar-combine
@@ -144,9 +145,6 @@ def test_no_accidental_quadratic_or_rowwise_plans(spark, name):
         ("q47_weighted_mixture", "split(", 14),
         ("q95_source_minhash_similarity", "split(", 4),
         ("q100_passage_dedup", "split(", 2),
-        # 0: the kernel's value-frame checkpoint cuts the fingerprint
-        # fold out of the optimized plan
-        ("q115_simhash64_pairs", "md5(", 0),
         # round-13: q162 is map-only — the per-order run fold must
         # evaluate ONCE each (2 sorts, 2 folds), not once per
         # downstream reference.
@@ -163,6 +161,21 @@ def test_expression_duplication_budget(spark, name, expr, budget):
         f"(budget {budget}) — an aliased expensive expression is being "
         f"re-evaluated; let-bind it (see dedup.let_array)"
     )
+
+
+def test_simhash64_md5_budget(spark):
+    """q115's fingerprint fold, pinned on ``simhash64``'s own optimized
+    plan: q115's pair kernel checkpoints its value frame, which hides
+    the fold from the query plan. Two md5 calls per token (the lo and
+    hi halves) — not one per fingerprint bit."""
+    from real_time_data_pipeline_for_restaurant_analytics_spark.catalog import load
+    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.dedup import (
+        simhash64,
+    )
+
+    docs = load(spark, SF_SMOKE, "documents")
+    plan = simhash64(docs, "doc_id", "text")._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("md5(") <= 2, plan.count("md5(")
 
 
 def test_scrub_family_exchange_budget(spark):

@@ -1,5 +1,5 @@
-"""Round-6: production-width (64-bit) SimHash, corpus-sized
-semantic-dedup k, and the NULL-band-bucket guard.
+"""Round-6: production-width (64-bit) SimHash and the NULL-band-bucket
+guard.
 
 q115 registers the 64-bit/4x16-band SimHash shape — these tests pin
 (a) the banding algebra's perfect recall against a pure-Python
@@ -17,10 +17,6 @@ from real_time_data_pipeline_for_restaurant_analytics_spark.operators.dedup impo
     lsh_candidates,
     simhash64,
     simhash_hamming_pairs,
-)
-from real_time_data_pipeline_for_restaurant_analytics_spark.operators.similarity import (
-    semdedup_auto_k,
-    semantic_dedup,
 )
 
 
@@ -119,74 +115,6 @@ def test_lsh_candidates_drops_null_band_hashes(spark):
     bands = spark.createDataFrame(rows, "doc_id long, band_idx int, band_hash string")
     got = [(r.id1, r.id2) for r in lsh_candidates(bands, "doc_id").collect()]
     assert got == [(10, 11)]
-
-
-def test_semdedup_auto_k_tracks_corpus_size():
-    """Fixed k makes the pair stage O(n^2/k); corpus-sized k holds the
-    expected CLUSTER SIZE constant, so the quadratic term stays
-    O(n * target). The derived k must grow linearly and stay in
-    [2, n]."""
-    assert semdedup_auto_k(0) == 2
-    assert semdedup_auto_k(100) == 2          # floor
-    assert semdedup_auto_k(3_000) == 10
-    assert semdedup_auto_k(30_000) == 100
-    assert semdedup_auto_k(3_000_000) == 10_000
-    # 10x data -> 10x clusters (constant expected cluster size)
-    assert semdedup_auto_k(600_000) == 10 * semdedup_auto_k(60_000)
-
-
-def test_semantic_dedup_defaults_to_auto_k(spark):
-    """k=None derives the cluster count from the corpus; with 900
-    vectors the expected k is 3, and the output must actually use that
-    many clusters (fixed k=8 would)."""
-    import random
-
-    rng = random.Random(7)
-    rows = [
-        (i, [float(rng.randint(-5, 5)) for _ in range(8)]) for i in range(900)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = semantic_dedup(emb)
-    clusters = {r.cluster for r in out.select("cluster").distinct().collect()}
-    assert clusters <= set(range(semdedup_auto_k(900)))
-    assert len(clusters) <= 3
-    assert out.count() == 900
-
-
-def test_semdedup_autok_probe_adds_exactly_one_job(spark):
-    """The r6-verdict eagerness item, pinned as a measured contract:
-    plan-build of this operator is inherently eager (Lloyd init read +
-    per-iteration centroid syncs + the assignment checkpoint run jobs
-    with or without auto-k), and the auto-k size probe adds EXACTLY
-    one job on top of the explicit-k path — the documented boundary
-    in semantic_dedup's docstring. If a refactor ever makes the probe
-    trigger extra work (e.g. counting a derived frame instead of the
-    pruned source), this fails."""
-    import random
-
-    rng = random.Random(11)
-    rows = [(i, [float(rng.randint(-5, 5)) for _ in range(8)]) for i in range(700)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    sc = spark.sparkContext
-
-    def jobs_during(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setJobGroup(None, None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    fixed = jobs_during("semdedup-fixed-k", lambda: semantic_dedup(emb, k=3))
-    # what one bare count() costs on this frame (2 under AQE: stage
-    # materialization + result job) — the probe's entire budget
-    probe = jobs_during("semdedup-probe-baseline", emb.count)
-    auto = jobs_during("semdedup-auto-k", lambda: semantic_dedup(emb))
-    assert fixed > 0, "Lloyd loop is eager by design — zero jobs means the probe moved"
-    assert auto == fixed + probe, (
-        f"auto-k must cost exactly one count() of plan-build jobs "
-        f"(fixed={fixed}, probe={probe}, auto={auto})"
-    )
 
 
 def test_banding_recall_property_random_fingerprints(spark):

@@ -12,10 +12,11 @@ algorithm — these pin the contracts an identical-replay can't:
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from real_time_data_pipeline_for_restaurant_analytics_spark.catalog import load
 from real_time_data_pipeline_for_restaurant_analytics_spark.operators.similarity import (
     brute_force_topk,
-    hard_negative_mining,
     hard_negative_mining_ivf,
     ivf_topk,
     lsh_bucket_ann,
@@ -33,7 +34,7 @@ def test_ivf_full_probe_equals_brute_force(spark):
     n_cells = 8
     ivf = ivf_topk(emb, k=5, n_cells=n_cells, n_probe=n_cells, query_max_id=10)
     qids = [r[0] for r in emb.select("vec_id").filter("vec_id < 10").collect()]
-    bf = brute_force_topk(emb, qids, k=5)
+    bf = brute_force_topk(emb, query_filter=F.col("vec_id").isin(qids), k=5)
     assert _rows(ivf) == _rows(bf)
 
 
@@ -42,11 +43,11 @@ def test_ivf_hard_negatives_full_probe_equals_banded_brute_force(spark):
     is exhaustive, so the banded rank must reproduce q121's guarded
     broadcast-cross miner exactly — proving the bucketed path changes
     only the candidate GENERATION, never the mining semantics."""
-    from pyspark.sql import functions as F
-
     emb = load(spark, SF_SMOKE, "embeddings")
     ivf = hard_negative_mining_ivf(emb, n_cells=8, n_probe=8, query_max_id=10)
-    brute = hard_negative_mining(emb, query_filter=F.col("vec_id") < 10)
+    brute = brute_force_topk(
+        emb, query_filter=F.col("vec_id") < 10, k=5, band=(0.25, 0.85)
+    )
     assert _rows(ivf) == _rows(brute)
 
 
@@ -57,7 +58,9 @@ def test_lsh_scores_match_exact_kernel(spark):
     assert qids, "LSH produced no candidates at smoke scale"
     exact = {
         (r["query_id"], r["neighbor_id"]): r["cos_r"]
-        for r in brute_force_topk(emb, qids, k=len(qids) + 10_000).collect()
+        for r in brute_force_topk(
+            emb, query_filter=F.col("vec_id").isin(qids), k=len(qids) + 10_000
+        ).collect()
     }
     for r in lsh.collect():
         assert abs(exact[(r["query_id"], r["neighbor_id"])] - r["cos_r"]) < 1e-9
@@ -84,7 +87,6 @@ def test_knn_label_vote_majority_and_tiebreak(spark):
     from real_time_data_pipeline_for_restaurant_analytics_spark.operators.similarity import (
         knn_label_vote,
     )
-    from pyspark.sql import functions as F
 
     # query 0 at origin-ish; neighbors: two of label 1 close, one of
     # label 2 close, rest far — k=3 majority must be label 1
@@ -151,11 +153,6 @@ def test_broadcast_query_side_guard_fails_loudly(spark):
     unbounded query_filter must raise before the cross join launches
     instead of broadcasting the corpus."""
     import pytest
-    from pyspark.sql import functions as F
-
-    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.similarity import (
-        brute_force_topk,
-    )
 
     emb = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(50)], "vec_id long, embedding array<float>"
@@ -172,10 +169,6 @@ def test_hard_negative_band_excludes_duplicates_and_easy(spark):
     negative if mined) and an orthogonal vector (cos=0, no training
     signal) must both fall outside the [lo, hi) band; the mid-band
     vector is the hard negative that survives."""
-    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.similarity import (
-        hard_negative_mining,
-    )
-
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),   # query
         (1, [1.0, 0.0, 0.0, 0.0]),   # exact dup -> cos 1.0, excluded (>= hi)
@@ -183,7 +176,9 @@ def test_hard_negative_band_excludes_duplicates_and_easy(spark):
         (3, [0.0, 0.0, 1.0, 0.0]),   # orthogonal -> cos 0, excluded (< lo)
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = hard_negative_mining(emb, query_ids=[0], k=5).collect()
+    out = brute_force_topk(
+        emb, query_filter=F.col("vec_id").isin([0]), k=5, band=(0.25, 0.85)
+    ).collect()
     assert [(r.query_id, r.neighbor_id) for r in out] == [(0, 2)]
     assert 0.25 <= out[0].cos_r < 0.85
 
@@ -213,8 +208,6 @@ def test_pq_adc_exact_when_every_vector_is_a_centroid(spark):
     the EXACT int8-grid squared L2 between query and neighbor — the
     ADC lookup algebra is pinned against a direct computation, not a
     replay of itself."""
-    from pyspark.sql import functions as F
-
     from real_time_data_pipeline_for_restaurant_analytics_spark.operators.similarity import (
         pq_adc_topk,
     )
@@ -271,3 +264,35 @@ def test_ivfpq_composed_audit_shape_and_bounds(spark):
     assert (
         rows[0].hits_refined <= rows[1].hits_refined <= rows[2].hits_refined
     )
+
+
+def test_equidistant_centroids_tie_to_the_lowest_id(spark):
+    """Vector 2 sits at equal integer distance from centroids 0 and 1.
+    The one argmin (nearest_centroids) must pick the lower id whatever
+    the literal order, and so must the two kernels built on it: the
+    IVF probe order (q34's cell_rank) and the k-means assignment."""
+    from real_time_data_pipeline_for_restaurant_analytics_spark.operators.similarity import (
+        centroids_sql,
+        ivf_scored_candidates,
+        kmeans_assignments,
+        nearest_centroids,
+    )
+
+    rows = [(0, [1.0, 0.0]), (1, [-1.0, 0.0]), (2, [0.0, 1.0])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    cents = centroids_sql([(1, [-1, 0]), (0, [1, 0])])  # higher id first
+    tie = spark.range(1).select(
+        F.expr(f"{nearest_centroids('array(0L, 1L)', cents, 2)}").alias("o")
+    ).first()["o"]
+    assert [(r["d"], r["c"]) for r in tie] == [(2, 0), (2, 1)]
+
+    scored = ivf_scored_candidates(emb, n_cells=2, n_probe=2, query_max_id=3)
+    rank = {(r.query_id, r.neighbor_id): r.cell_rank for r in scored.collect()}
+    # query 2 probes cell 0 first; vector 2 itself lives in cell 0, so
+    # query 0 (whose nearest cell is 0) meets it at cell_rank 1
+    assert rank[(2, 0)] == 1 and rank[(2, 1)] == 2
+    assert rank[(0, 2)] == 1 and rank[(1, 2)] == 2
+
+    assigned = kmeans_assignments(emb, k=2, n_iter=1)
+    assert {r.vec_id: r.cluster for r in assigned.collect()} == {0: 0, 1: 1, 2: 0}
