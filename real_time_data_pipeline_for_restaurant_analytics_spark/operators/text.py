@@ -1140,33 +1140,34 @@ def _bpe_rounds(
     round_k = cand_k if cand_k is not None else 3 * batch_m
     for rnd in range(1, n_rounds + 1):
         while True:
-            cand = (
-                _state_pair_counts(state)
-                .orderBy(*order)
-                .limit(round_k)
-                .withColumn("rnk", F.row_number().over(Window.orderBy(*order)))
-            )
-            a, b = cand.alias("a"), cand.alias("b")
-            hi = [
-                F.col("b.left_sym"),
-                F.col("b.right_sym"),
-                F.concat(F.col("b.left_sym"), F.col("b.right_sym")),
-            ]
-            conflict = F.lit(False)
-            for side in ("left_sym", "right_sym"):
-                for h in hi:
-                    conflict = conflict | (F.col(f"a.{side}") == h)
-            blocked = (
-                a.join(b, (F.col("b.rnk") < F.col("a.rnk")) & conflict)
-                .select(F.col("a.rnk").alias("rnk"))
-                .distinct()
-            )
-            accepted = (
-                cand.join(blocked, "rnk", "left_anti")
-                .withColumn(
+            top = _state_pair_counts(state).orderBy(*order).limit(round_k)
+            if round_k == 1:
+                # one candidate: no higher-ranked pair can block it
+                pool = top.withColumn("sel", F.lit(1))
+            else:
+                cand = top.withColumn(
+                    "rnk", F.row_number().over(Window.orderBy(*order))
+                )
+                a, b = cand.alias("a"), cand.alias("b")
+                hi = [
+                    F.col("b.left_sym"),
+                    F.col("b.right_sym"),
+                    F.concat(F.col("b.left_sym"), F.col("b.right_sym")),
+                ]
+                conflict = F.lit(False)
+                for side in ("left_sym", "right_sym"):
+                    for h in hi:
+                        conflict = conflict | (F.col(f"a.{side}") == h)
+                blocked = (
+                    a.join(b, (F.col("b.rnk") < F.col("a.rnk")) & conflict)
+                    .select(F.col("a.rnk").alias("rnk"))
+                    .distinct()
+                )
+                pool = cand.join(blocked, "rnk", "left_anti").withColumn(
                     "sel", F.row_number().over(Window.orderBy("rnk")).cast("int")
                 )
-                .filter(F.col("sel") <= batch_m)
+            accepted = (
+                pool.filter(F.col("sel") <= batch_m)
                 .select(
                     F.lit(rnd).cast("int").alias("round"),
                     "sel",
@@ -1183,7 +1184,7 @@ def _bpe_rounds(
             realized = accepted.count()
             if realized >= realized_floor or round_k >= 64 * batch_m:
                 break
-            if cand.count() < round_k:
+            if top.count() < round_k:
                 break  # pair vocabulary exhausted — growth can't help
             # clamp to the documented 64*M bound: plain doubling from
             # 3*M lands on 96*M, 1.5x the advertised O(cand_k^2)
@@ -1237,7 +1238,8 @@ def bpe_encode_stats(
 
     Scale shape: training is vocabulary-bounded (q138's round loop at
     one rule per round; ``cand_k=1`` is fixed, so no adaptive
-    pool-size jobs run); the encode is ONE corpus-sized explode joined
+    pool-size jobs run and the one-row pool skips the blocking join);
+    the encode is ONE corpus-sized explode joined
     to the final vocabulary frame on the word key (vocabulary side is
     the small one — broadcastable at real vocab sizes) and one per-doc
     reduce. No per-row Python: the merged symbol count is

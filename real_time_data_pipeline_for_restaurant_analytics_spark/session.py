@@ -15,15 +15,65 @@ knob is the one you would also tune on a 1000-executor cluster:
 - session timezone pinned to UTC so timestamp semantics are stable
   across drivers/executors (the reference uses TIMESTAMP_NTZ /
   explicit TZ columns; pinning UTC gives the same determinism).
+- the driver JVM (in ``local[n]`` also the only executor) runs the
+  Parallel collector, ``-XX:+UseParallelGC``, instead of JDK 17's
+  default G1. See below.
+
+Collector. With little live data and short pauses, G1 grows its young
+generation toward 60% of the heap, and large arrays take whole regions
+of their own, so over a run it allocates into, and makes resident,
+nearly every region of the committed heap (a 2 GB ``product_day`` run
+allocated 1,779 of its 2,048 1 MB regions; eden reached 1,228 of them).
+Parallel keeps a fixed young generation, a third of the heap, and
+fills the old generation from its low end (9% used at the end of the
+same run), so the resident set follows the heap in use. This matters
+only when the heap is committed up front (``-Xms`` equal to the driver
+memory, as ``perfbench/run.py`` and any pinned-heap deployment set
+it). With a 2 GB ``-Xms`` heap on 4 cores, peak RSS fell from a median
+of 2,474 to 1,425 MB on ``product_day`` (10/10 interleaved pairs) and
+from 2,428 to 1,449 MB on ``stream_drain`` (5/5), with set-up, load and
+KPI times level. Without ``-Xms`` the two collectors came out level
+(1,379/1,458 MB under G1, 1,407/1,433 MB under Parallel, two seeds).
+The Serial collector is not used: it collects on one thread, which an
+8 GB session with many cores should not.
+
+The flag goes into ``spark.driver.defaultJavaOptions``, which Spark
+places before ``spark.driver.extraJavaOptions``, so a caller's own
+options still apply. Two collector flags stop the JVM from starting
+("Multiple garbage collectors selected"), so none is added when the
+caller already names one (``-XX:+Use…GC``) in ``extra_conf``'s
+``spark.driver.extraJavaOptions`` or ``spark.driver.defaultJavaOptions``
+or in ``$JAVA_TOOL_OPTIONS``, ``$_JAVA_OPTIONS`` or
+``$SPARK_SUBMIT_OPTS``. A caller's ``spark.driver.defaultJavaOptions``
+is kept, after the flag.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+COLLECTOR_FLAG = "-XX:+UseParallelGC"
+_COLLECTOR_CHOICE = re.compile(r"-XX:\+Use\w+GC\b")
+_DEFAULT_OPTS = "spark.driver.defaultJavaOptions"
+_EXTRA_OPTS = "spark.driver.extraJavaOptions"
+_JVM_OPTION_ENVS = ("JAVA_TOOL_OPTIONS", "_JAVA_OPTIONS", "SPARK_SUBMIT_OPTS")
+
+
+def driver_java_options(extra_conf: dict[str, str]) -> str:
+    """The ``spark.driver.defaultJavaOptions`` value for a session: the
+    caller's own value, preceded by :data:`COLLECTOR_FLAG` unless the
+    caller already chose a collector (see the module docstring)."""
+    caller = extra_conf.get(_DEFAULT_OPTS, "")
+    sources = [extra_conf.get(_EXTRA_OPTS, ""), caller]
+    sources += [os.environ.get(e, "") for e in _JVM_OPTION_ENVS]
+    if any(_COLLECTOR_CHOICE.search(s) for s in sources):
+        return caller
+    return f"{COLLECTOR_FLAG} {caller}".strip()
 
 
 def _local_dir() -> str:
@@ -55,6 +105,10 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate defaults."""
+    extra_conf = dict(extra_conf or {})
+    java_opts = driver_java_options(extra_conf)
+    if java_opts:
+        extra_conf[_DEFAULT_OPTS] = java_opts
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -77,6 +131,6 @@ def get_spark(
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.local.dir", _local_dir())
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

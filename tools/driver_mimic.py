@@ -21,7 +21,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from real_time_data_pipeline_for_restaurant_analytics_spark.registry import all_queries
 from real_time_data_pipeline_for_restaurant_analytics_spark.session import get_spark
@@ -30,6 +31,11 @@ from tests.oracle_check import compare_pandas_path
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    # Python workers are started by the JVM, not this process, so they
+    # find the package only through the environment they inherit
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO_ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     spark = get_spark(app_name="driver_mimic")
     spark.sparkContext.setLogLevel("ERROR")
     qs = all_queries()

@@ -6,7 +6,10 @@ only being asserted piecewise in tests/test_plans.py.
 The set covers one plan per operator family whose 100 TB story hinges
 on a specific physical shape:
 
-Usage: python tools/explain_audit.py          # writes /root/repo/EXPLAINS.md
+Usage:
+    python tools/explain_audit.py               # rewrites all of EXPLAINS.md
+    python tools/explain_audit.py q136_containment_verified ...
+        # rewrites only the named sections; every other byte is kept
 """
 
 from __future__ import annotations
@@ -124,38 +127,59 @@ AUDIT = [
 ]
 
 
+HEADER = [
+    "# EXPLAINS — formatted physical plans for the flagship operator shapes",
+    "",
+    "Generated by `tools/explain_audit.py` at sf0.01 (plan shapes are",
+    "scale-invariant; AQE may re-plan exchanges at runtime). Each entry",
+    "states the property the plan must exhibit — the same properties",
+    "tests/test_plans.py pins — so a reader can see the broadcast /",
+    "pushdown / codegen structure directly.",
+    "",
+]
+PATH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "EXPLAINS.md")
+
+
+def section(spark, qs, name: str, why: str) -> str:
+    """One EXPLAINS.md section, from its heading to its closing fence."""
+    df = qs[name].build(spark, SF)
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    print("explained", name, flush=True)
+    return "\n".join(
+        [f"## {name}", "", f"**Why this shape matters:** {why}", "", "```", plan.rstrip(), "```"]
+    )
+
+
+def splice(text: str, name: str, sec: str) -> str:
+    """Replace ``name``'s section of ``text`` (heading through closing
+    fence) with ``sec``."""
+    start = text.index(f"## {name}\n")
+    fence = text.index("\n```\n", start)
+    end = text.index("\n```", fence + 4) + 4
+    return text[:start] + sec + text[end:]
+
+
 def main() -> None:
+    why = dict(AUDIT)
+    names = sys.argv[1:]
+    unknown = sorted(set(names) - set(why))
+    if unknown:
+        sys.exit(f"not in the audit set: {unknown}")
     spark = get_spark(app_name="explain_audit")
     spark.sparkContext.setLogLevel("ERROR")
     qs = all_queries()
-    out = [
-        "# EXPLAINS — formatted physical plans for the flagship operator shapes",
-        "",
-        "Generated by `tools/explain_audit.py` at sf0.01 (plan shapes are",
-        "scale-invariant; AQE may re-plan exchanges at runtime). Each entry",
-        "states the property the plan must exhibit — the same properties",
-        "tests/test_plans.py pins — so a reviewer can see the broadcast /",
-        "pushdown / codegen structure directly.",
-        "",
-    ]
-    for name, why in AUDIT:
-        df = qs[name].build(spark, SF)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        out.append(f"## {name}")
-        out.append("")
-        out.append(f"**Why this shape matters:** {why}")
-        out.append("")
-        out.append("```")
-        out.append(plan.rstrip())
-        out.append("```")
-        out.append("")
-        print("explained", name, flush=True)
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "EXPLAINS.md")
-    with open(path, "w") as f:
-        f.write("\n".join(out))
-    print("wrote", path)
+    if names:
+        with open(PATH) as f:
+            text = f.read()
+        for name in names:
+            text = splice(text, name, section(spark, qs, name, why[name]))
+    else:
+        text = "\n".join(HEADER + [section(spark, qs, n, w) + "\n" for n, w in AUDIT])
+    with open(PATH, "w") as f:
+        f.write(text)
+    print("wrote", PATH)
 
 
 if __name__ == "__main__":
