@@ -18,6 +18,8 @@ knob is the one you would also tune on a 1000-executor cluster:
 - the driver JVM (in ``local[n]`` also the only executor) runs the
   Parallel collector, ``-XX:+UseParallelGC``, instead of JDK 17's
   default G1. See below.
+- the generated-code cache holds 1,000 classes instead of 100. See
+  below.
 
 Collector. With little live data and short pauses, G1 grows its young
 generation toward 60% of the heap, and large arrays take whole regions
@@ -46,6 +48,46 @@ caller already names one (``-XX:+Use…GC``) in ``extra_conf``'s
 or in ``$JAVA_TOOL_OPTIONS``, ``$_JAVA_OPTIONS`` or
 ``$SPARK_SUBMIT_OPTS``. A caller's ``spark.driver.defaultJavaOptions``
 is kept, after the flag.
+
+Generated-code cache. Spark compiles each generated class (a
+whole-stage pipeline, a projection, an ordering) with Janino, 21 ms
+each on average in a perfbench run (median 13 ms), and keeps the
+result in an LRU cache keyed by the Java source.
+``spark.sql.codegen.cache.maxEntries`` bounds it, 100 classes by
+default. The warehouse's working set is larger. A warm perfbench
+cycle (4 cores, seed 101) touches ~155 classes on ``product_day`` and
+on ``stream_drain``; one pass over the 15 ``ALL_KPIS`` builders on the
+ten-entity test warehouse compiles 124. LRU over a cyclic sequence
+longer than the cache hits almost nothing, so at 100 each warm cycle
+compiled 155 classes again, and a second back-to-back KPI pass 87. At
+1,000, a warm cycle compiles 22 (``product_day``) and 16
+(``stream_drain``), and the second KPI pass 0. A ten-entity two-day
+load plus two KPI passes compiles 599 classes in all, so the bound
+leaves headroom. LRU has the inclusion property: on the same sequence
+of lookups a larger cache never misses more, so no caller compiles
+more than at 100. The cold cycle compiles every class once either way
+(158 / 162), and driver Metaspace after it and two warm cycles was
+level (166–170 MB at either bound). The bound is a static conf: Spark
+sizes the cache once per JVM, from the session that compiles the first
+class, so it is set when the session is built, and a session rebuilt
+in the same JVM keeps the first size. ``extra_conf`` still overrides
+it.
+
+Two costs are left, and neither is sized for:
+
+- the classes a warm cycle still compiles are those of plans that
+  carry the load's wall clock. Catalyst folds ``current_timestamp()``
+  (``_copy_data_ts``, ``batch_ts``) into a timestamp literal, and
+  codegen inlines the literal into the Java source, so each batch's
+  source is new. With the clock pinned the residue is 0. Any constant
+  expression folds back into an inlined literal, so there is no clean
+  fix.
+- the query registry is a harness, not a product path, and its
+  working set is thousands of classes: one pass over all registered
+  queries at sf0.001, in ``bench.py``'s order, compiled 4,363 classes
+  at 100 and 3,098 at 1,000, and a second pass at 1,000 still compiled
+  2,898 (4,334 at 100). ``bench.py``'s second pass therefore
+  recompiles most of its code at either bound.
 """
 
 from __future__ import annotations
@@ -54,8 +96,6 @@ import os
 import re
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 COLLECTOR_FLAG = "-XX:+UseParallelGC"
 _COLLECTOR_CHOICE = re.compile(r"-XX:\+Use\w+GC\b")
@@ -115,13 +155,15 @@ def get_spark(
         .master(master or f"local[{cpus}]")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # static: Spark sizes the cache once per JVM (see the module docstring)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # Broadcast threshold: dims in this model (region/nation/part/
         # supplier, menu/location/restaurant) are small — let them fly.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -10,6 +10,13 @@ from __future__ import annotations
 import json
 import os
 
+from pyspark.sql import functions as F
+
+from real_time_data_pipeline_for_restaurant_analytics_spark.pipeline.runner import (
+    Warehouse,
+    run_all,
+)
+
 TS1 = "2024-05-01 10:00:00"
 TS2 = "2024-05-02 11:30:00"
 
@@ -203,3 +210,12 @@ def write_day(root: str, day: int) -> str:
         login_rows,
     )
     return prefix
+
+
+def load_two_days(spark, days: list[str], root: str) -> Warehouse:
+    """A warehouse under ``root`` after ``run_all`` of the two staged
+    days in turn, each batch stamped 21:30 on its own day."""
+    wh = Warehouse(str(root))
+    for day, ts in zip(days, ("2024-05-01 21:30:00", "2024-05-02 21:30:00")):
+        run_all(spark, wh, day, batch_ts=F.lit(ts).cast("timestamp"))
+    return wh

@@ -3,29 +3,16 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from real_time_data_pipeline_for_restaurant_analytics_spark.pipeline.runner import (
-    Warehouse,
-    run_all,
-)
 from real_time_data_pipeline_for_restaurant_analytics_spark.plans.kpis import (
     ALL_KPIS,
     ConsumptionViews,
 )
 
-from .fixtures import write_day
-
 
 @pytest.fixture(scope="module")
-def cv(spark, tmp_path_factory):
-    stage_root = str(tmp_path_factory.mktemp("stage"))
-    wh = Warehouse(str(tmp_path_factory.mktemp("warehouse")))
-    run_all(spark, wh, write_day(stage_root, 1),
-            batch_ts=F.lit("2024-05-01 21:30:00").cast("timestamp"))
-    run_all(spark, wh, write_day(stage_root, 2),
-            batch_ts=F.lit("2024-05-02 21:30:00").cast("timestamp"))
-    views = ConsumptionViews(spark, wh)
+def cv(spark, two_day_wh):
+    views = ConsumptionViews(spark, two_day_wh)
     views.register_all()
     return views
 

@@ -15,21 +15,15 @@ from __future__ import annotations
 import contextlib
 import re
 
-import pytest
-from pyspark.sql import functions as F
-
 from real_time_data_pipeline_for_restaurant_analytics_spark.operators.merge import merge_upsert
 from real_time_data_pipeline_for_restaurant_analytics_spark.pipeline.entities import ENTITIES
-from real_time_data_pipeline_for_restaurant_analytics_spark.pipeline.runner import (
-    Warehouse,
-    run_all,
-)
+from real_time_data_pipeline_for_restaurant_analytics_spark.pipeline.runner import Warehouse
 from real_time_data_pipeline_for_restaurant_analytics_spark.plans.kpis import (
     ALL_KPIS,
     ConsumptionViews,
 )
 
-from .fixtures import write_day
+from .fixtures import load_two_days
 
 MIN_PARTITION = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 SHUFFLE = re.compile(r"Exchange (hashpartitioning|rangepartitioning|SinglePartition)")
@@ -52,59 +46,42 @@ def _shuffles(df) -> list[str]:
     return SHUFFLE.findall(df._jdf.queryExecution().executedPlan().toString())
 
 
-@pytest.fixture(scope="module")
-def stage(tmp_path_factory) -> list[str]:
-    root = str(tmp_path_factory.mktemp("stage"))
-    return [write_day(root, 1), write_day(root, 2)]
-
-
-def _load(spark, stage: list[str], root) -> Warehouse:
-    wh = Warehouse(str(root))
-    for day, ts in zip(stage, ("2024-05-01 21:30:00", "2024-05-02 21:30:00")):
-        run_all(spark, wh, day, batch_ts=F.lit(ts).cast("timestamp"))
-    return wh
-
-
-@pytest.fixture(scope="module")
-def wh(spark, stage, tmp_path_factory) -> Warehouse:
-    return _load(spark, stage, tmp_path_factory.mktemp("wh"))
-
-
 def _orders_upsert(spark, wh: Warehouse):
     tbl = wh.clean("orders")
     new, old = tbl.read(spark), tbl.read_previous(spark)
     return merge_upsert(old, new, ["order_id"], [c for c in new.columns if c != "order_id"])
 
 
-def test_small_inputs_plan_no_shuffle(spark, wh):
-    cv = ConsumptionViews(spark, wh)
+def test_small_inputs_plan_no_shuffle(spark, two_day_wh):
+    cv = ConsumptionViews(spark, two_day_wh)
     for name, build in ALL_KPIS.items():
         assert _shuffles(build(cv)) == [], name
-    assert _shuffles(_orders_upsert(spark, wh)) == []
+    assert _shuffles(_orders_upsert(spark, two_day_wh)) == []
 
 
-def test_shuffles_return_above_the_min_partition_size(spark, wh):
-    cv = ConsumptionViews(spark, wh)
+def test_shuffles_return_above_the_min_partition_size(spark, two_day_wh):
+    cv = ConsumptionViews(spark, two_day_wh)
     with multi_partition(spark):
         for name, build in ALL_KPIS.items():
             assert _shuffles(build(cv)), name
-        assert "hashpartitioning" in _shuffles(_orders_upsert(spark, wh))
+        assert "hashpartitioning" in _shuffles(_orders_upsert(spark, two_day_wh))
     assert spark.conf.get(MIN_PARTITION) != "1"
-    assert _shuffles(_orders_upsert(spark, wh)) == []
+    assert _shuffles(_orders_upsert(spark, two_day_wh)) == []
 
 
 def _equal(a, b) -> bool:
     return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-def test_results_do_not_depend_on_the_plan(spark, stage, wh, tmp_path):
+def test_results_do_not_depend_on_the_plan(spark, two_days, two_day_wh, tmp_path):
     """The two-day load and every KPI, once on the one-partition plan
     and once with every input forced to the multi-partition plan."""
     with multi_partition(spark):
-        forced = _load(spark, stage, tmp_path / "wh")
+        forced = load_two_days(spark, two_days, tmp_path / "wh")
         # checkpointed here: a lazy frame would plan after the conf is restored
         forced_kpis = {n: b(ConsumptionViews(spark, forced)).localCheckpoint()
                        for n, b in ALL_KPIS.items()}
+    wh = two_day_wh
     for name in ENTITIES:
         for got, want in ((forced.clean(name), wh.clean(name)), (forced.dim(name), wh.dim(name))):
             # the stamp of the load's wall clock is the one column that differs

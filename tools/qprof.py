@@ -5,10 +5,11 @@ Usage:
         [--sf-dir /root/testdata/sf0.1] [--explain plans/r14/suffix]
 
 For each named query: warm once at sf0.001 (JIT/codegen), then time
-``reps`` noop-sink runs at the target scale, reporting each rep, the
-Spark job count and total task count per rep (status-tracker deltas),
-and optionally dumping ``.explain("formatted")`` to
-``plans/<dir>/<query>_<suffix>.txt``.
+``reps`` noop-sink runs at the target scale. The warm run and each rep
+report their wall, Spark jobs (``jobs=``, status-tracker deltas) and
+generated classes Janino compiled (``compiles=``, codegen-metric
+deltas; 0 means the run found all its code cached). Optionally dump
+``.explain("formatted")`` to ``plans/<dir>/<query>_<suffix>.txt``.
 
 This is measurement tooling only — never on any query path.
 """
@@ -42,13 +43,27 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = all_queries()
     tracker = spark.sparkContext.statusTracker()
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def counts() -> tuple[int, int]:
+        """(Spark jobs run, generated classes compiled) so far."""
+        return (len(tracker.getJobIdsForGroup(None) or []),
+                codegen.METRIC_COMPILATION_TIME().getCount())
+
+    def timed(q, sf_dir: str) -> str:
+        """Build ``q`` over ``sf_dir`` and noop-write it; the wall, jobs
+        and compiles of both."""
+        jobs, compiles = counts()
+        t0 = time.perf_counter()
+        q.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        wall = time.perf_counter() - t0
+        jobs_after, compiles_after = counts()
+        return f"{wall:.3f}s  jobs={jobs_after - jobs}  compiles={compiles_after - compiles}"
 
     for name in args.queries:
         q = qs[name]
         if not args.no_warm:
-            t0 = time.perf_counter()
-            q.build(spark, args.warm_dir).write.format("noop").mode("overwrite").save()
-            print(f"{name} warm: {time.perf_counter() - t0:.3f}s", flush=True)
+            print(f"{name} warm: {timed(q, args.warm_dir)}", flush=True)
         if args.explain:
             d, _, suffix = args.explain.rpartition("/")
             os.makedirs(d or "plans", exist_ok=True)
@@ -62,16 +77,7 @@ def main() -> None:
             print(f"{name} plan -> {path}", flush=True)
         for rep in range(args.reps):
             spark.sparkContext._jvm.System.gc()
-            jobs_before = len(tracker.getJobIdsForGroup(None) or [])
-            t0 = time.perf_counter()
-            df = q.build(spark, args.sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            wall = time.perf_counter() - t0
-            jobs_after = len(tracker.getJobIdsForGroup(None) or [])
-            print(
-                f"{name} rep{rep + 1}: {wall:.3f}s  jobs={jobs_after - jobs_before}",
-                flush=True,
-            )
+            print(f"{name} rep{rep + 1}: {timed(q, args.sf_dir)}", flush=True)
 
 
 if __name__ == "__main__":
