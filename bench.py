@@ -72,11 +72,10 @@ def summary_line(
             payload["policy"] = "min2"
             payload["n1"] = n_single_rep
         if fixture_cache is not None:
-            # codec fixture warmth (round-11, verdict item 4): [cache
-            # hits, misses] across the run. With min-of-2, every codec
-            # number reflects a WARM fixture read (rep 2 hits even when
-            # rep 1 built the cache) — the decoder, not the fixture
-            # factory, is what the wall time measures.
+            # [hits, misses] of multimodal.PAYLOAD_CACHE_STATS. No
+            # fixture cache is left to count into them (every payload
+            # fixture is synthesized inside its query), so this is
+            # always [0, 0]; it stays so the line keeps its shape.
             payload["fx"] = list(fixture_cache)
         dropped = len(timings) - len(short)
         if dropped:
@@ -181,9 +180,13 @@ def main() -> None:
     # back-to-back full-suite runs measured 30% apart (127 s vs 97 s),
     # with the inflation landing as a uniform +0.3-0.5 s per query.
     # min-of-2 reports the quiet-period number, which is the comparable
-    # one. The budget guard keeps total bench wall bounded: once the
-    # clock passes it, remaining queries fall back to single-run rather
-    # than risk the driver's timeout (a missing BENCH beats a late one).
+    # one. It is not a warm rep: the registry's generated code is far
+    # larger than Spark's code cache (session.py), so pass 2 still
+    # compiles 2,898 of pass 1's 3,098 classes at sf0.001, and most
+    # recorded minimums still include Janino compile time. The budget
+    # guard keeps total bench wall bounded: once the clock passes it,
+    # remaining queries fall back to single-run rather than risk the
+    # run's timeout (a missing BENCH beats a late one).
     # Two PASSES over the suite (round-6 change), not two back-to-back
     # reps per query: with per-query reps, budget exhaustion left every
     # query after the cutoff single-run — a uniform +35-45% inflation on

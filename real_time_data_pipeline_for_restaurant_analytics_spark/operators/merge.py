@@ -5,12 +5,26 @@ transforms.
 
 The reference drives these with Snowflake MERGE + streams
 (`order_proc.sql:96-309`, `02 Location Entity.sql:84-345`). OSS Spark
-without Delta has no MERGE INTO, so each merge is a join+union
-snapshot rewrite: pure, testable, and at scale each is one shuffle on
-the business key (exactly what a Delta MERGE costs on the matched
-partition set — here the table is rewritten, which is the right
-trade below ~TB dims; above that you'd swap the storage layer for
-Delta/Iceberg and keep these same semantics).
+without Delta has no MERGE INTO, so each merge is a snapshot rewrite
+over ONE full outer join on the business key: pure, testable, and at
+scale one shuffle on that key (exactly what a Delta MERGE costs on the
+matched partition set — here the table is rewritten, which is the
+right trade below ~TB dims; above that you'd swap the storage layer
+for Delta/Iceberg and keep these same semantics).
+
+Each merge evaluates its join once, as the reference's single
+three-branch MERGE does (`order_proc.sql:195-303`). The per-row flags
+(presence on each side, the change guard) are columns computed once
+per joined row. A merge with one output row per joined row
+(:func:`merge_upsert`) selects from them. A merge with up to two
+(:func:`apply_scd2`: the kept-or-closed current row and the new
+version; :func:`change_feed`: the DELETE pre-image and the INSERT
+post-image) builds both as nullable structs and emits the non-null
+ones through one ``inline(filter(array(a, b), x -> x IS NOT NULL))``.
+Filtering the join once per branch instead makes the optimizer plan
+one outer join per branch, each with its own scans, exchanges and
+jobs. Over one-partition inputs (see ``sources/snapshot.py``) each
+merge write is then one Spark job.
 
 Semantics carried over from the reference:
 - change-guarded updates: a matched row is touched ONLY if some
@@ -41,6 +55,13 @@ def _null_safe_any_diff(left: str, right: str, attrs: list[str]) -> Column:
     for a in attrs:
         cond = cond | ~F.col(f"{left}.{a}").eqNullSafe(F.col(f"{right}.{a}"))
     return cond
+
+
+def _non_null_rows(joined: DataFrame, *rows: Column) -> DataFrame:
+    """The non-null ones of each joined row's nullable ``rows`` structs
+    (same fields), as rows: one generator, so the join is evaluated
+    once however many output rows a joined row yields."""
+    return joined.select(F.inline(F.filter(F.array(*rows), lambda r: r.isNotNull())))
 
 
 def latest_per_key(df: DataFrame, key: list[str], order_by: list[Column]) -> DataFrame:
@@ -88,7 +109,9 @@ def merge_upsert(
     - not matched                             → insert source row
 
     Returns the new snapshot with target's column order. One shuffle
-    (full outer join on the key); map-side change guard.
+    (full outer join on the key); map-side change guard, computed once
+    per joined row as the ``__take`` column (inlined, it would be
+    planned and code-generated once per output column).
     """
     if target is None:
         return source
@@ -107,23 +130,24 @@ def merge_upsert(
     cond = key_match[0]
     for c in key_match[1:]:
         cond = cond & c
-    joined = t.join(s, cond, "full_outer")
-
     in_target = F.col("t.__t_mark").isNotNull()
     in_source = F.col("s.__s_mark").isNotNull()
     changed = _null_safe_any_diff("t", "s", attrs)
+    joined = t.join(s, cond, "full_outer").withColumn(
+        "__take", (~in_target) | (in_source & changed)
+    )
+    take = F.col("__take")
 
     out_cols = []
     for c in cols:
-        take_source = (~in_target) | (in_source & changed)
         if modified_col is not None and c == modified_col and batch_ts is not None:
             expr = (
                 F.when(~in_target, F.col(f"s.{c}"))
-                .when(in_source & changed, batch_ts)
+                .when(take, batch_ts)
                 .otherwise(F.col(f"t.{c}"))
             )
         elif c in src_cols:
-            expr = F.when(take_source, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}"))
+            expr = F.when(take, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}"))
         else:
             expr = F.col(f"t.{c}")
         out_cols.append(expr.alias(c))
@@ -169,6 +193,13 @@ def apply_scd2(
     only — same reason the reference puts IS_CURRENT=TRUE in its
     MERGE condition (SURVEY §4).
 
+    Like the reference's single MERGE, the join runs once: each joined
+    row computes ``__in_dim``, ``__in_batch`` and ``__chg`` once, then
+    emits its current row (kept, or closed by branch a) and its new
+    version (branch b or c) through one ``inline`` over the non-null
+    pair. The result is the historical rows plus that one generator,
+    so over small versions the plan is one join and no Exchange.
+
     ``batch`` must be unique on ``key`` (C6): the merge does not
     dedup it, as Snowflake's MERGE errors on a duplicated source key.
     Callers with duplicate keys run :func:`latest_per_key` first, as
@@ -188,58 +219,69 @@ def apply_scd2(
     dim_cols = dim.columns
     historical = dim.filter(~F.col("is_current"))
     # lit(True) markers for presence, not key nullability (review r8):
-    # a NULL-key current row otherwise fell out of BOTH kept_current
-    # (filter(in_dim)) and inserts — silently and permanently dropped
-    # from the rewritten snapshot, despite the eqNullSafe join existing
-    # to support exactly that key.
+    # read from the key, a NULL-key current row counts as absent from
+    # the join, so it is emitted neither as kept nor as a version —
+    # silently and permanently dropped from the rewritten snapshot,
+    # despite the eqNullSafe join existing to support exactly that key.
     current = dim.filter(F.col("is_current")).withColumn("__t_mark", F.lit(True)).alias("t")
     s = batch.withColumn("__s_mark", F.lit(True)).alias("s")
     cond = F.col(f"t.{key[0]}").eqNullSafe(F.col(f"s.{key[0]}"))
     for k in key[1:]:
         cond = cond & F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-    joined = current.join(s, cond, "full_outer")
-
-    in_dim = F.col("t.__t_mark").isNotNull()
-    in_batch = F.col("s.__s_mark").isNotNull()
-    changed = _null_safe_any_diff("t", "s", attrs)
+    # flags once per joined row, rows out through one generator (see
+    # the docstring): a filtered select per branch would plan one outer
+    # join per branch
+    joined = current.join(s, cond, "full_outer").withColumns(
+        {
+            "__in_dim": F.col("t.__t_mark").isNotNull(),
+            "__in_batch": F.col("s.__s_mark").isNotNull(),
+            "__chg": _null_safe_any_diff("t", "s", attrs),
+        }
+    )
+    in_dim, in_batch, changed = F.col("__in_dim"), F.col("__in_batch"), F.col("__chg")
+    close = in_batch & changed
 
     # Surviving current rows: unmatched, or matched-with-identical-attrs
     # keep as-is; matched-and-changed get closed out (branch a).
-    kept_current = joined.filter(in_dim).select(
-        *[
-            (
-                # cast like the inserts branch: a non-timestamp
-                # batch_ts literal must not type-skew the unionByName
-                F.when(in_batch & changed, batch_ts.cast("timestamp")).otherwise(
-                    F.col("t.eff_end_date")
-                )
-                if c == "eff_end_date"
-                else F.when(in_batch & changed, F.lit(False)).otherwise(F.col("t.is_current"))
-                if c == "is_current"
-                else F.col(f"t.{c}")
-            ).alias(c)
-            for c in dim_cols
-        ]
+    kept = F.when(
+        in_dim,
+        F.struct(
+            *[
+                (
+                    # cast like the new version: a non-timestamp batch_ts
+                    # literal must not type-skew the two structs or the union
+                    F.when(close, batch_ts.cast("timestamp")).otherwise(F.col("t.eff_end_date"))
+                    if c == "eff_end_date"
+                    else F.when(close, F.lit(False)).otherwise(F.col("t.is_current"))
+                    if c == "is_current"
+                    else F.col(f"t.{c}")
+                ).alias(c)
+                for c in dim_cols
+            ]
+        ),
     )
 
     # New versions (branch b) + first inserts (branch c).
     first_start = F.col(f"s.{cfg.created_col}") if cfg.created_col else batch_ts
-    inserts = joined.filter((in_batch & ~in_dim) | (in_batch & in_dim & changed)).select(
-        *[
-            (
-                F.when(~in_dim, first_start).otherwise(batch_ts).cast("timestamp")
-                if c == "eff_start_date"
-                else F.lit(None).cast("timestamp")
-                if c == "eff_end_date"
-                else F.lit(True)
-                if c == "is_current"
-                else F.col(f"s.{c}")
-            ).alias(c)
-            for c in dim_cols
-        ]
+    version = F.when(
+        in_batch & (~in_dim | changed),
+        F.struct(
+            *[
+                (
+                    F.when(~in_dim, first_start).otherwise(batch_ts).cast("timestamp")
+                    if c == "eff_start_date"
+                    else F.lit(None).cast("timestamp")
+                    if c == "eff_end_date"
+                    else F.lit(True)
+                    if c == "is_current"
+                    else F.col(f"s.{c}")
+                ).alias(c)
+                for c in dim_cols
+            ]
+        ),
     )
 
-    return historical.unionByName(kept_current).unionByName(inserts)
+    return historical.unionByName(_non_null_rows(joined, kept, version))
 
 
 def change_feed(prev: DataFrame | None, curr: DataFrame, key: list[str]) -> DataFrame:
@@ -268,33 +310,28 @@ def change_feed(prev: DataFrame | None, curr: DataFrame, key: list[str]) -> Data
     for k in key[1:]:
         cond = cond & F.col(f"p.{k}").eqNullSafe(F.col(f"c.{k}"))
     attrs = [a for a in cols if a not in key]
-    joined = p.join(c, cond, "full_outer")
-    in_prev = F.col("p.__p_mark").isNotNull()
-    in_curr = F.col("c.__c_mark").isNotNull()
-    changed = _null_safe_any_diff("p", "c", attrs) if attrs else F.lit(False)
+    joined = p.join(c, cond, "full_outer").withColumns(
+        {
+            "__in_prev": F.col("p.__p_mark").isNotNull(),
+            "__in_curr": F.col("c.__c_mark").isNotNull(),
+            "__chg": _null_safe_any_diff("p", "c", attrs) if attrs else F.lit(False),
+        }
+    )
+    in_prev, in_curr, changed = F.col("__in_prev"), F.col("__in_curr"), F.col("__chg")
 
-    inserts = joined.filter(in_curr & ~in_prev).select(
-        *[F.col(f"c.{x}").alias(x) for x in cols],
-        F.lit("INSERT").alias("action"),
-        F.lit(False).alias("metadata_isupdate"),
-    )
-    deletes = joined.filter(in_prev & ~in_curr).select(
-        *[F.col(f"p.{x}").alias(x) for x in cols],
-        F.lit("DELETE").alias("action"),
-        F.lit(False).alias("metadata_isupdate"),
-    )
-    upd = joined.filter(in_prev & in_curr & changed)
-    upd_del = upd.select(
-        *[F.col(f"p.{x}").alias(x) for x in cols],
-        F.lit("DELETE").alias("action"),
-        F.lit(True).alias("metadata_isupdate"),
-    )
-    upd_ins = upd.select(
-        *[F.col(f"c.{x}").alias(x) for x in cols],
-        F.lit("INSERT").alias("action"),
-        F.lit(True).alias("metadata_isupdate"),
-    )
-    return inserts.unionByName(deletes).unionByName(upd_del).unionByName(upd_ins)
+    def image(side: str, action: str, isupdate: Column) -> Column:
+        return F.struct(
+            *[F.col(f"{side}.{x}").alias(x) for x in cols],
+            F.lit(action).alias("action"),
+            isupdate.alias("metadata_isupdate"),
+        )
+
+    # one generator over the one join: a removed or changed key emits
+    # its previous image as a DELETE, a new or changed key its current
+    # image as an INSERT; isupdate marks the changed keys' pair
+    pre = F.when(in_prev & (~in_curr | changed), image("p", "DELETE", in_curr))
+    post = F.when(in_curr & (~in_prev | changed), image("c", "INSERT", in_prev))
+    return _non_null_rows(joined, pre, post)
 
 
 def apply_deletes(

@@ -16,8 +16,11 @@ per-job and per-plan scheduling cost, not data:
 - the ten entity loads run concurrently, one pool slot each;
 - within a load, the stage append overlaps the merges and is joined
   before ``ledger.mark``;
-- the typed batch is ``localCheckpoint``ed once, then the clean
-  (SCD1) and consumption (SCD2 / SCD1-fact) merges run concurrently;
+- the typed batch is ``localCheckpoint``ed once, its row count
+  observed on the way; an empty batch ends there, and a small one is
+  declared one partition; then the clean (SCD1) and consumption
+  (SCD2 / SCD1-fact) merges run concurrently, each one Spark job
+  when the batch and the table are small;
 - the post-load row counts come from the snapshot sidecars
   (``SnapshotTable.rows``), so no table is re-scanned to count it.
 
@@ -36,7 +39,7 @@ import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
@@ -45,6 +48,7 @@ from ..operators.merge import Scd2Config, apply_scd2, latest_per_key, merge_upse
 from ..sources.ledger import FileLedger
 from ..sources.paths import entity_file
 from ..sources.readers import AUDIT_COLS, read_stage_csv, read_stage_json
+from ..sources.snapshot import SnapshotTable, fits_one_shuffle_partition
 from .entities import ENTITIES, RUN_ORDER, EntitySpec
 
 
@@ -60,14 +64,10 @@ class Warehouse:
     def ledger(self, entity: str) -> FileLedger:
         return FileLedger(os.path.join(self.root, "stage", entity, "_ledger.jsonl"))
 
-    def clean(self, entity: str):
-        from ..sources.snapshot import SnapshotTable
-
+    def clean(self, entity: str) -> SnapshotTable:
         return SnapshotTable(os.path.join(self.root, "clean"), entity)
 
-    def dim(self, entity: str):
-        from ..sources.snapshot import SnapshotTable
-
+    def dim(self, entity: str) -> SnapshotTable:
         suffix = "_fact" if ENTITIES[entity].scd1_only else "_dim"
         return SnapshotTable(os.path.join(self.root, "consumption"), entity + suffix)
 
@@ -91,17 +91,38 @@ def merge_entity_batch(
     in exactly one place (the "one library, two drivers" invariant
     SURVEY §7/M5 calls for).
 
-    The typed batch is ``localCheckpoint``ed once (one eager job), then
-    the clean and dim merges run CONCURRENTLY. The checkpoint is a
-    lineage break: a foreachBatch micro-batch cannot be re-read by the
-    merges' scans, and ``latest_per_key``'s row_number could otherwise
-    be computed twice, once per merge, from the source. The two merges
-    share no state (different snapshot tables, different writer locks)
-    and both consume only the checkpointed rows, so they commute; at
-    product scale their cost is job latency, not data, and overlapping
-    them cuts the per-entity critical path from stage→clean→dim to
-    stage→max(clean, dim). If either merge raises, the other still
-    runs to completion (and may commit) before the error propagates;
+    The typed batch is ``localCheckpoint``ed once (eagerly: the
+    dedup's shuffle map job and the checkpoint job), then the clean
+    and dim merges run CONCURRENTLY. The checkpoint is a lineage
+    break: a foreachBatch micro-batch cannot be re-read by the merges'
+    scans, and ``latest_per_key``'s row_number could otherwise be
+    computed twice, once per merge, from the source.
+
+    The checkpoint also counts its rows (``DataFrame.observe``, no
+    extra job), and the count decides two things before any merge:
+
+    - an empty batch returns here, so no table gets a new version.
+      This is the only emptiness check of both drivers: a header-only
+      file or an empty micro-batch moves no table, and the caller
+      still records the input as done (ledger mark, stream offset).
+    - a batch whose rows, at Spark's per-row size estimate, fit
+      ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` is
+      declared one partition (``coalesce(1)``). Without it the
+      checkpoint reports ``UnknownPartitioning`` even when its input
+      was one partition, and each merge's join plans an Exchange on
+      each side, against a snapshot read that is one partition
+      already. This is the rule ``SnapshotTable.read`` applies to
+      small versions: both sites call
+      :func:`~..sources.snapshot.fits_one_shuffle_partition`. With both
+      sides one partition, each merge write is one Spark job.
+
+    The two merges share no state (different snapshot tables,
+    different writer locks) and both consume only the checkpointed
+    rows, so they commute; at product scale their cost is job latency,
+    not data, and overlapping them cuts the per-entity critical path
+    from stage→clean→dim to stage→max(clean, dim). If either merge
+    raises, the other still runs to completion (and may commit) before
+    the error propagates;
     the caller then records nothing as done (no ledger mark, no stream
     offset commit), so a retry reprocesses the input and the
     change-guarded merges absorb the half already applied.
@@ -115,7 +136,17 @@ def merge_entity_batch(
         if spec.modified_col and spec.created_col
         else [F.lit(1)]
     )
-    typed = latest_per_key(typed, spec.key, order_cols).localCheckpoint()  # C7 guard
+    obs = Observation()
+    typed = (
+        latest_per_key(typed, spec.key, order_cols)  # C7 guard
+        .observe(obs, F.count(F.lit(1)).alias("rows"))
+        .localCheckpoint()
+    )
+    rows = obs.get["rows"]
+    if rows == 0:
+        return
+    if fits_one_shuffle_partition(spark, typed.schema, rows):
+        typed = typed.coalesce(1)
 
     def _merge_clean() -> None:
         clean_tbl = wh.clean(spec.name)
@@ -163,7 +194,8 @@ def run_entity(
     the mark still lands strictly after every write of the load. The
     post-load COUNT(*) sanity figures (A1, `02 Location Entity.sql:50,83`)
     come from the snapshot sidecars: ``clean_rows``/``dim_rows`` cost
-    no job."""
+    no job. A file with no rows (header only) is staged and marked,
+    but, as for a missing file, no table gets a new version."""
     batch_ts = batch_ts if batch_ts is not None else F.current_timestamp()
     ledger = wh.ledger(spec.name)
     todo = ledger.unprocessed([file_path]) if os.path.exists(file_path) else []

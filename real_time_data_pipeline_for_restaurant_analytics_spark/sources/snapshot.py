@@ -57,12 +57,16 @@ task before too; the declaration only drops their Exchanges (without
 it a file scan reports ``UnknownPartitioning``, and each of those
 operators plans an Exchange, one AQE job each). The rule reads only
 the sidecar and the session conf, so the read still launches no job.
-Larger versions read exactly as before. The rule is an estimate per
-version: a string counts as 20 bytes whatever its length, and a join
-of two small versions, or a join that widens rows before a shuffle,
-can shuffle more than either version. Only versions of 0.03-0.07 MB
-of parquet (0.35-0.53 MB by the estimate) have been measured
-(perfbench); none near the bound.
+Larger versions read exactly as before. The rule,
+:func:`fits_one_shuffle_partition`, has one other site: the
+checkpointed batch of ``pipeline.runner.merge_entity_batch``, judged
+by the row count its checkpoint observes. A small delta's merge thus
+joins two one-partition sides and plans no Exchange. The rule is an
+estimate per version: a string counts as 20 bytes whatever its
+length, and a join of two small versions, or a join that widens rows
+before a shuffle, can shuffle more than either version. Only versions
+of 0.03-0.07 MB of parquet (0.35-0.53 MB by the estimate) have been
+measured (perfbench); none near the bound.
 
 At 100 TB you would swap this class for Delta/Iceberg and keep every
 caller unchanged — the API (read/write/read_previous/rows) is the
@@ -85,17 +89,17 @@ META = "_meta.json"
 _ROW_BYTES: dict[str, int] = {}
 
 
-def _fits_one_shuffle_partition(spark: SparkSession, meta: dict) -> bool:
-    """Whether ``meta``'s rows at Spark's per-row size estimate total at
-    most the size below which AQE coalesces a shuffle to one partition
-    (see the module docstring)."""
-    schema = json.dumps(meta["schema"])
-    if schema not in _ROW_BYTES:
-        _ROW_BYTES[schema] = 8 + spark._jsparkSession.parseDataType(schema).defaultSize()
+def fits_one_shuffle_partition(spark: SparkSession, schema: StructType, rows: int) -> bool:
+    """Whether ``rows`` rows of ``schema`` at Spark's per-row size
+    estimate total at most the size below which AQE coalesces a
+    shuffle to one partition (see the module docstring). The one rule
+    behind both one-partition sites: :meth:`SnapshotTable.read` and
+    the checkpointed batch of ``pipeline.runner.merge_entity_batch``."""
+    key = schema.json()
+    if key not in _ROW_BYTES:
+        _ROW_BYTES[key] = 8 + spark._jsparkSession.parseDataType(key).defaultSize()
     conf = spark._jsparkSession.sessionState().conf()
-    return meta["rows"] * _ROW_BYTES[schema] <= conf.getConf(
-        conf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE()
-    )
+    return rows * _ROW_BYTES[key] <= conf.getConf(conf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE())
 
 
 class SnapshotTable:
@@ -141,8 +145,9 @@ class SnapshotTable:
 
     def _read(self, spark: SparkSession, version: int) -> DataFrame:
         meta = self._meta(version)
-        df = spark.read.schema(StructType.fromJson(meta["schema"])).parquet(self._path(version))
-        return df.coalesce(1) if _fits_one_shuffle_partition(spark, meta) else df
+        schema = StructType.fromJson(meta["schema"])
+        df = spark.read.schema(schema).parquet(self._path(version))
+        return df.coalesce(1) if fits_one_shuffle_partition(spark, schema, meta["rows"]) else df
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame | None:
         v = self.latest_version() if version is None else version

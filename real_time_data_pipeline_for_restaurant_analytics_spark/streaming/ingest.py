@@ -164,9 +164,9 @@ def merge_microbatch(spark: SparkSession, wh: Warehouse, spec: EntitySpec, batch
     """The foreachBatch body: delegates to the batch runner's
     :func:`~..pipeline.runner.merge_entity_batch` — literally one merge
     library behind both load paths (its ``localCheckpoint`` is what lets
-    the merges scan a micro-batch source that cannot be re-read)."""
-    if not batch.head(1):
-        return
+    the merges scan a micro-batch source that cannot be re-read, and
+    the row count it observes there ends an empty micro-batch before
+    any merge, with no probe job of its own)."""
     merge_entity_batch(spark, wh, spec, batch, F.current_timestamp())
 
 

@@ -755,3 +755,125 @@ def test_load_jobs_carry_the_callers_job_group(spark, tmp_path):
     day1 = write_day(str(tmp_path / "stage"), 1)
     assert _jobs_launched(spark, lambda: run_all(spark, wh, day1)) > 0
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
+def _copy_of(wh: Warehouse, root) -> Warehouse:
+    import shutil
+
+    shutil.copytree(wh.root, str(root))
+    return Warehouse(str(root))
+
+
+def _source_file(prefix: str, name: str) -> str:
+    from real_time_data_pipeline_for_restaurant_analytics_spark.sources.paths import entity_file
+
+    spec = ENTITIES[name]
+    return entity_file(prefix, spec.source_file_stem, spec.ext)
+
+
+def _versions(wh: Warehouse) -> dict[str, int]:
+    return {
+        t.name: t.latest_version() for n in ENTITIES for t in (wh.clean(n), wh.dim(n))
+    }
+
+
+def test_delta_merge_is_one_job_per_merge(spark, loaded, tmp_path):
+    """An orders delta through ``merge_entity_batch`` launches the
+    batch checkpoint's jobs plus ONE job per merge write: the small
+    checkpointed batch is one partition, so neither merge join plans
+    an Exchange, and ``apply_scd2`` evaluates its join once."""
+    from real_time_data_pipeline_for_restaurant_analytics_spark.pipeline.runner import (
+        _read_source,
+        merge_entity_batch,
+    )
+
+    wh = _copy_of(loaded[0], tmp_path / "wh")
+    spec = ENTITIES["orders"]
+    before = _versions(wh)
+    raw = _read_source(spark, spec, _source_file(write_day(str(tmp_path / "stage"), 2), "orders"))
+    jobs = _jobs_launched(
+        spark, lambda: merge_entity_batch(spark, wh, spec, raw, F.current_timestamp())
+    )
+    assert 2 <= jobs <= 4, jobs
+    after = _versions(wh)
+    for tbl in (wh.clean("orders"), wh.dim("orders")):
+        assert after.pop(tbl.name) == before.pop(tbl.name) + 1
+    assert after == before
+
+
+def test_stream_data_microbatch_is_one_job_per_merge(spark, loaded, tmp_path):
+    """One orders delta file drained by ``ingest_stream``: its one data
+    micro-batch launches what the batch driver's merge does (the
+    checkpoint's jobs plus one per merge write) and no emptiness probe.
+    The stream engine runs every job of a micro-batch, the merges' pool
+    thread included, under the query's run id as job group."""
+    import shutil
+
+    from real_time_data_pipeline_for_restaurant_analytics_spark.streaming.ingest import (
+        ingest_stream,
+    )
+
+    wh = _copy_of(loaded[0], tmp_path / "wh")
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    shutil.copy(_source_file(write_day(str(tmp_path / "stage"), 2), "orders"), landing)
+    q = ingest_stream(spark, wh, ENTITIES["orders"], str(landing), str(tmp_path / "ck"))
+    q.awaitTermination(180)
+    assert q.exception() is None and not q.isActive
+    assert [p["numInputRows"] > 0 for p in q.recentProgress] == [True]
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert 2 <= jobs <= 4, jobs
+
+
+def _header_only(src: str, dst) -> str:
+    """A copy of csv ``src`` with its header line and no rows."""
+    with open(src) as f:
+        header = f.readline()
+    os.makedirs(os.path.dirname(str(dst)), exist_ok=True)
+    with open(dst, "w") as f:
+        f.write(header)
+    return str(dst)
+
+
+def test_header_only_batch_file_moves_no_table(spark, loaded, tmp_path):
+    """Batch driver: a header-only day-2 file is staged and marked in
+    the ledger like any file, but its empty batch ends before any
+    merge, so every table stays at its version (as for a missing
+    file, and as the stream driver does)."""
+    from real_time_data_pipeline_for_restaurant_analytics_spark.pipeline.runner import (
+        run_entity,
+    )
+
+    wh = _copy_of(loaded[0], tmp_path / "wh")
+    day2 = write_day(str(tmp_path / "full"), 2)
+    path = _header_only(_source_file(day2, "location"), tmp_path / "empty" / "location.csv")
+    before = _versions(wh)
+    out = run_entity(spark, wh, ENTITIES["location"], path)
+    assert out["staged_files"] == 1 and not out["skipped"], out
+    assert _versions(wh) == before
+    assert wh.ledger("location").unprocessed([path]) == []
+    assert out["clean_rows"] == wh.clean("location").rows()
+
+
+def test_header_only_stream_file_moves_no_table(spark, loaded, tmp_path):
+    """Stream driver: a header-only file is consumed as a micro-batch
+    of no rows, which ends before any merge: every table stays at its
+    version, and the batch still commits its offsets."""
+    from real_time_data_pipeline_for_restaurant_analytics_spark.streaming.ingest import (
+        ingest_stream,
+    )
+
+    wh = _copy_of(loaded[0], tmp_path / "wh")
+    day2 = write_day(str(tmp_path / "full"), 2)
+    landing = tmp_path / "landing"
+    _header_only(_source_file(day2, "location"), landing / "location.csv")
+    before = _versions(wh)
+    spec = ENTITIES["location"]
+    q = ingest_stream(spark, wh, spec, str(landing), str(tmp_path / "ck"))
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert [p["numInputRows"] for p in q.recentProgress] == [0]
+    assert _versions(wh) == before
+    assert os.path.exists(tmp_path / "ck" / "commits" / "0")

@@ -15,18 +15,27 @@ from __future__ import annotations
 import contextlib
 import re
 
-from real_time_data_pipeline_for_restaurant_analytics_spark.operators.merge import merge_upsert
+from pyspark.sql import functions as F
+
+from real_time_data_pipeline_for_restaurant_analytics_spark.functions.keys import hash_key
+from real_time_data_pipeline_for_restaurant_analytics_spark.operators.merge import (
+    Scd2Config,
+    apply_scd2,
+    merge_upsert,
+)
 from real_time_data_pipeline_for_restaurant_analytics_spark.pipeline.entities import ENTITIES
 from real_time_data_pipeline_for_restaurant_analytics_spark.pipeline.runner import Warehouse
 from real_time_data_pipeline_for_restaurant_analytics_spark.plans.kpis import (
     ALL_KPIS,
     ConsumptionViews,
 )
+from real_time_data_pipeline_for_restaurant_analytics_spark.sources.readers import AUDIT_COLS
 
 from .fixtures import load_two_days
 
 MIN_PARTITION = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 SHUFFLE = re.compile(r"Exchange (hashpartitioning|rangepartitioning|SinglePartition)")
+JOIN = re.compile(r"\b(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin|BroadcastNestedLoopJoin)\b")
 
 
 @contextlib.contextmanager
@@ -52,11 +61,39 @@ def _orders_upsert(spark, wh: Warehouse):
     return merge_upsert(old, new, ["order_id"], [c for c in new.columns if c != "order_id"])
 
 
+def _orders_scd2(spark, wh: Warehouse):
+    """The runner's orders dim merge, with the latest clean version as
+    the batch."""
+    spec = ENTITIES["orders"]
+    typed = wh.clean("orders").read(spark)
+    tracked = [c for c in typed.columns if c not in spec.key and c not in AUDIT_COLS]
+    batch = typed.withColumn("orders_hk", hash_key(*spec.key, *tracked))
+    cfg = Scd2Config(key=spec.key, attrs=tracked, created_col=spec.created_col)
+    return apply_scd2(wh.dim("orders").read(spark), batch, cfg, F.current_timestamp())
+
+
+def _joins(df) -> list[str]:
+    return JOIN.findall(df._jdf.queryExecution().executedPlan().toString())
+
+
 def test_small_inputs_plan_no_shuffle(spark, two_day_wh):
     cv = ConsumptionViews(spark, two_day_wh)
     for name, build in ALL_KPIS.items():
         assert _shuffles(build(cv)) == [], name
     assert _shuffles(_orders_upsert(spark, two_day_wh)) == []
+
+
+def test_scd2_merge_plans_one_join(spark, two_day_wh):
+    """``apply_scd2`` evaluates its full outer join once: one join in
+    the plan, and over small versions no Exchange under it; forced to
+    the multi-partition plan, the join's Exchanges come back."""
+    scd2 = _orders_scd2(spark, two_day_wh)
+    assert len(_joins(scd2)) == 1
+    assert _shuffles(scd2) == []
+    with multi_partition(spark):
+        forced = _orders_scd2(spark, two_day_wh)
+        assert len(_joins(forced)) == 1
+        assert _shuffles(forced).count("hashpartitioning") == 2
 
 
 def test_shuffles_return_above_the_min_partition_size(spark, two_day_wh):
